@@ -217,8 +217,9 @@ object GraftStore {
     * LIVE count (physical rows minus deleted positions), which keeps the
     * metadata-only COUNT answer exact; per-column min/max stay valid
     * BOUNDS over the live rows (deletion only shrinks the true range, so
-    * skip decisions remain sound) but null counts become unknowable
-    * without a rescan and are recorded as -1 — every consumer that needs
+    * skip decisions remain sound). An exact zero null count stays exact
+    * (deletion cannot add nulls); a non-zero one becomes unknowable
+    * without a rescan and is recorded as -1 — every consumer that needs
     * an exact null count (AllRows pruning, metadata COUNT(col)/MIN/MAX,
     * cluster-like detection) degrades conservatively on -1.
     *
@@ -1789,8 +1790,8 @@ object GraftStore {
     *      (DVs are cumulative: one sidecar per file, ever) and emits one
     *      summary row per file;
     *   3. the driver commits metadata only: affected entries get the new
-    *      `dv`, live `rows`, and null counts degraded to -1 (unknowable
-    *      without a rescan); a fully-deleted file's entry is dropped.
+    *      `dv`, live `rows`, and stats through [[statsAfterDelete]]; a
+    *      fully-deleted file's entry is dropped.
     * Readers apply DVs as a frame-skip (no join, no shuffle); the change
     * feed emits exactly the newly-deleted positions ([[CdfUnit]]);
     * [[purgeDeletes]] is the compaction path that folds DVs back into
@@ -1847,13 +1848,26 @@ object GraftStore {
           val live = e.rows - newly
           if (live <= 0) None // every row deleted: drop the entry
           else Some(e.copy(rows = live, dv = rel,
-            stats = e.stats.map { case (c, st) => c -> st.copy(nulls = -1L) }))
+            stats = statsAfterDelete(e.stats)))
         case None => Some(e)
       }
     }
     writeManifestAtomic(path, base, schema, newEntries, readEpoch(path),
       op = "delete")
   }
+
+  /** A file's column stats once a deletion vector hides more of its
+    * rows. Deleting rows cannot add nulls, so an exact zero null count
+    * stays exact — which keeps a partitioned file's cell provable
+    * (SPJ key grouping, `$partitions`, per-cell manifest children) across
+    * merge-on-read DML. A non-zero count shrank by an unknown amount
+    * and drops to -1; every consumer degrades conservatively on that.
+    * Min/max stay as bounds (they may no longer be attained). */
+  private[sources] def statsAfterDelete(stats: Map[String, ColStats])
+      : Map[String, ColStats] =
+    stats.map { case (c, st) =>
+      c -> (if (st.nulls == 0L) st else st.copy(nulls = -1L))
+    }
 
   /** EQUALITY DELETE (the Iceberg-v2 equality-delete file design): mark
     * every row whose key tuple appears in `keys` as deleted — WITHOUT
@@ -3763,7 +3777,8 @@ object GraftStore {
   }
 
   /** Table-level OPTIMIZE: bin-pack the current snapshot's small data
-    * files into ~`targetBytes` files and commit the rewritten manifest
+    * files, one partition key at a time, into ~`targetBytes` files and
+    * commit the rewritten manifest
     * in one atomic pointer swap. Because rows are length-framed
     * UnsafeRow bytes, a bin is compacted by CONCATENATING its files'
     * bytes — zero decode, zero re-encode (on an object store this is a
@@ -3808,22 +3823,43 @@ object GraftStore {
       case Some(f) => packable0.partition(e =>
         StatsPruning.evalAll(Seq(f), e, schema) == StatsPruning.AllRows)
     }
-    // first-fit in manifest order: deterministic, preserves write locality
-    val bins = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[FileEntry]]
-    var binBytes = 0L
-    packable.foreach { e =>
-      val sz = new File(path, e.file).length()
-      // mixed-arity files (pre/post ADD COLUMN) never share a bin: the
-      // byte concat would splice frames of different field counts.
-      // Mixed NARROW signatures (pre/post int->long widening) split the
-      // same way: one packed entry cannot describe two physical lanes
-      if (bins.isEmpty || binBytes + sz > targetBytes ||
-          bins.last.head.cols != e.cols ||
-          bins.last.head.narrow != e.narrow ||
-          bins.last.head.nested != e.nested) {
-        bins += scala.collection.mutable.ArrayBuffer(e); binBytes = sz
-      } else { bins.last += e; binBytes += sz }
+    // bins never cross a partition key (Iceberg's rewrite_data_files and
+    // Delta's OPTIMIZE bin per partition): a packed file stays
+    // single-valued on the identity and bucket terms, so SPJ key
+    // grouping and keyed scans survive compaction. Files whose stats pin
+    // no single key (pre-spec history) bin only with each other.
+    // Temporal and trunc cells may still merge: no key grouping keys on
+    // them, and a merged file keeps pruning exactly from its min/max
+    // bounds. Within a key, next-fit in manifest order: deterministic,
+    // preserves write locality; bins keep the manifest order of their
+    // first file
+    val keyTerms = readPartitionTerms(path).filter {
+      case _: PartIdentity | _: PartBucket => true
+      case _ => false
     }
+    def keyOf(e: FileEntry): Option[Seq[String]] = {
+      val cells = keyTerms.map(derivedCellOf(schema, _, e))
+      if (cells.forall(_.isDefined)) Some(cells.flatten) else None
+    }
+    val manifestPos = packable.map(_.file).zipWithIndex.toMap
+    val bins = packable.groupBy(keyOf).values.toSeq.flatMap { cell =>
+      val cellBins = scala.collection.mutable.ArrayBuffer.empty[scala.collection.mutable.ArrayBuffer[FileEntry]]
+      var binBytes = 0L
+      cell.foreach { e =>
+        val sz = new File(path, e.file).length()
+        // mixed-arity files (pre/post ADD COLUMN) never share a bin: the
+        // byte concat would splice frames of different field counts.
+        // Mixed NARROW signatures (pre/post int->long widening) split the
+        // same way: one packed entry cannot describe two physical lanes
+        if (cellBins.isEmpty || binBytes + sz > targetBytes ||
+            cellBins.last.head.cols != e.cols ||
+            cellBins.last.head.narrow != e.narrow ||
+            cellBins.last.head.nested != e.nested) {
+          cellBins += scala.collection.mutable.ArrayBuffer(e); binBytes = sz
+        } else { cellBins.last += e; binBytes += sz }
+      }
+      cellBins
+    }.sortBy(b => manifestPos(b.head.file))
     val toPack = bins.zipWithIndex.filter(_._1.length >= 2)
     if (toPack.isEmpty) return -1L
     val stamp = java.util.UUID.randomUUID().toString.take(8)
@@ -4635,15 +4671,20 @@ class GraftStoreDeltaOperation(path: String,
   * partitioned table rolls per-value files exactly like an append,
   * preserving the single-valued-entry invariant (partition DELETE
   * stays metadata-only after arbitrary MOR history — the same contract
-  * the copy-on-write path keeps). */
+  * the copy-on-write path keeps). A DELETE writes no rows and clusters
+  * and orders on the row id alone. */
 class GraftStoreDeltaWrite(path: String, schema: StructType,
     cmd: org.apache.spark.sql.connector.write.RowLevelOperation.Command,
     rowIdSchema: java.util.Optional[StructType])
   extends org.apache.spark.sql.connector.write.DeltaWrite
   with RequiresDistributionAndOrdering {
 
+  // Spark's delta input for a DELETE carries only the row id: no
+  // partition column to cluster, order or resolve
   private def partitionTerms: Seq[GraftStore.PartTerm] =
-    GraftStore.readPartitionTerms(path)
+    if (cmd == org.apache.spark.sql.connector.write.RowLevelOperation.Command.DELETE)
+      Seq.empty
+    else GraftStore.readPartitionTerms(path)
 
   override def description(): String = s"graft_store merge-on-read $cmd -> $path"
   override def requiredDistribution(): Distribution =
@@ -4765,9 +4806,9 @@ class GraftStoreDeltaBatchWrite(path: String, schema: StructType,
             val live = e.rows - d.newlyDeleted
             if (live <= 0) None // every live row deleted: drop the entry
             else Some(e.copy(rows = live, dv = d.dvRel,
-              // null counts unknowable without a rescan; every consumer
-              // degrades conservatively on -1 (same contract as deleteWhereDV)
-              stats = e.stats.map { case (c, st) => c -> st.copy(nulls = -1L) }))
+              // zero null counts stay exact, non-zero ones drop to -1
+              // (same contract as deleteWhereDV)
+              stats = GraftStore.statsAfterDelete(e.stats)))
           case None => Some(e)
         }
       } ++ inserts
@@ -5748,7 +5789,7 @@ class GraftStoreScanBuilder(path: String, versionAsOf: Option[Long] = None,
       versionAsOf.orElse(pinnedVersion), fromVersion)
       catch { case _: Exception => return None }
     // a delete-vectored file's min/max may no longer be attained (the
-    // extreme row may be deleted) and its null counts are unknown (-1):
+    // extreme row may be deleted) and its null counts may be unknown (-1):
     // COUNT(*) from live `rows` would still be exact, but refusing the
     // whole pushdown keeps the invariant simple — purgeDeletes restores
     // metadata-only answers. Equality deletes are stricter still: they
@@ -6152,6 +6193,10 @@ class GraftStoreScan(path: String,
       case _ => es
     }
 
+  /** Estimated bytes per row: the schema's default sizes plus the
+    * UnsafeRow null bitset word. */
+  private def rowWidth: Long = schema.fields.map(_.dataType.defaultSize).sum + 8L
+
   /** MANIFEST-DERIVED PLANNING STATISTICS — the ANALYZE-free CBO feed.
     * Called by Spark after pushdown, so row counts and column stats
     * reflect the files that survived manifest skipping. Everything here
@@ -6175,7 +6220,6 @@ class GraftStoreScan(path: String,
     val files = selected
     val haveRows = files.nonEmpty && files.forall(_.rows >= 0)
     val rowCount = if (haveRows) files.map(_.rows).sum else -1L
-    val rowWidth = schema.fields.map(_.dataType.defaultSize).sum + 8L
     val colMap = new java.util.HashMap[
       org.apache.spark.sql.connector.expressions.NamedReference, ColumnStatistics]()
     if (haveRows) schema.fields.foreach { f =>
@@ -6271,7 +6315,9 @@ class GraftStoreScan(path: String,
   override def description(): String = metaAgg match {
     case Some((s, _)) =>
       s"graft_store($path, metadata-only aggregate [${s.fieldNames.mkString(", ")}], files=0/${entries.size})"
-    case None => s"graft_store($path, files=${selected.size}/${entries.size})"
+    case None =>
+      val sel = selected
+      s"graft_store($path, files=${sel.size}/${entries.size}) splits=${splitsOf(sel).size}"
   }
 
   /** The table is also a STREAM: snapshot versions are the offsets, so
@@ -6306,12 +6352,12 @@ class GraftStoreScan(path: String,
     * subset, as policy: any single-valued subset would make a VALID
     * grouping claim, but Spark matches the two sides' partitionings by
     * their expression lists, so reporting a spec-order prefix keeps the
-    * advertisement deterministic under partial degradation (a
-    * compaction that breaks one column degrades every table of the
-    * layout the same way). A join keyed on fewer columns than the reported
+    * advertisement deterministic under partial degradation (pre-spec
+    * history that breaks one column degrades every table of the layout
+    * the same way). A join keyed on fewer columns than the reported
     * grouping falls back to a shuffled plan (Spark's subset-key SPJ is
     * opt-in), which is a performance degradation, never a wrong one. */
-  private def spjKeys: Seq[(String, org.apache.spark.sql.types.DataType)] = {
+  private lazy val spjKeys: Seq[(String, org.apache.spark.sql.types.DataType)] = {
     import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
     if (metaAgg.isDefined || entries.isEmpty) Seq.empty
     else GraftStore.readPartitionCols(path).iterator
@@ -6351,7 +6397,7 @@ class GraftStoreScan(path: String,
     * same way then join with NO exchange on either side: the co-located
     * join on a synthetic key, which is what bucketing 100 TB fact
     * tables is FOR. */
-  private def spjBucket: Option[GraftStore.PartBucket] =
+  private lazy val spjBucket: Option[GraftStore.PartBucket] =
     if (metaAgg.isDefined) None
     else GraftStore.partitionTermsOf(GraftStore.readPartitionBy(path))
       .headOption.collect {
@@ -6437,10 +6483,64 @@ class GraftStoreScan(path: String,
     }
   }
 
-  // one input partition per surviving data file — the write-side
-  // clustering IS the read-side parallelism; a pushed metadata
-  // aggregate plans ONE synthetic partition carrying the answer row
-  // (zero data files opened)
+  /** The selected files grouped into input splits, in plan order, each
+    * with its key tuple when the scan is key-grouped. A key-grouped scan
+    * (identity SPJ keys or a single-bucket spec) bin-packs the files
+    * that share a key tuple into one split — next-fit in manifest order
+    * under Spark's own file-split size
+    * (`FilePartition.maxSplitBytes`: `spark.sql.files.maxPartitionBytes`,
+    * `openCostInBytes`, `minPartitionNum` or the default parallelism) —
+    * so a table that accumulated many small files per partition value
+    * launches one task per value, not one per file. Weights come from
+    * the manifest (live rows × [[rowWidth]]): planning makes no
+    * filesystem call. Files of different keys never share a
+    * split, so the grouping report and the ordering claims hold as for
+    * one file per split. An unkeyed scan keeps one split per file: the
+    * write-side clustering IS the read-side parallelism, and its
+    * per-file ordering claim needs it. */
+  private def splitsOf(sel: Seq[GraftStore.FileEntry])
+      : Seq[(Option[Seq[Any]], Seq[GraftStore.FileEntry])] = {
+    val keyOf: Option[GraftStore.FileEntry => Seq[Any]] = spjKeys match {
+      case keys if keys.nonEmpty => Some(keyTupleOf(_, keys))
+      case _ => spjBucket.map(b => e => Seq(e.stats(b.statName).min.toInt))
+    }
+    keyOf match {
+      case None => sel.map(e => (None, Seq(e)))
+      case Some(key) =>
+        val spark = org.apache.spark.sql.SparkSession.active
+        val openCost = spark.sessionState.conf.filesOpenCostInBytes
+        val width = rowWidth
+        def bytesOf(e: GraftStore.FileEntry): Long = math.max(e.rows, 0L) * width
+        val maxSplit = org.apache.spark.sql.execution.datasources.FilePartition
+          .maxSplitBytes(spark, sel.map(bytesOf(_) + openCost).sum)
+        val byKey = scala.collection.mutable.LinkedHashMap
+          .empty[Seq[Any], scala.collection.mutable.ArrayBuffer[GraftStore.FileEntry]]
+        sel.foreach(e => byKey.getOrElseUpdate(key(e),
+          scala.collection.mutable.ArrayBuffer.empty) += e)
+        byKey.toSeq.flatMap { case (k, files) =>
+          val splits = scala.collection.mutable.ArrayBuffer(
+            scala.collection.mutable.ArrayBuffer.empty[GraftStore.FileEntry])
+          var splitBytes = 0L
+          files.foreach { e =>
+            // packed by data bytes alone: charging each file the open
+            // cost, as getFilePartitions does, would close a split after
+            // every small file once maxSplit falls to the open cost —
+            // exactly the many-small-files case this packing is for
+            if (splits.last.nonEmpty && splitBytes + bytesOf(e) > maxSplit) {
+              splits += scala.collection.mutable.ArrayBuffer.empty
+              splitBytes = 0L
+            }
+            splits.last += e
+            splitBytes += bytesOf(e)
+          }
+          splits.map(s => (Some(k), s.toSeq))
+        }
+    }
+  }
+
+  // a pushed metadata aggregate plans ONE synthetic partition carrying
+  // the answer row (zero data files opened); otherwise one input
+  // partition per split of [[splitsOf]]
   override def planInputPartitions(): Array[InputPartition] =
     metaAgg match {
       case Some((_, rows)) =>
@@ -6448,27 +6548,16 @@ class GraftStoreScan(path: String,
       case None =>
         val sel = selected
         plannedFiles = sel.map(_.file)
-        def dvAbs(e: GraftStore.FileEntry): String =
-          if (e.dv.isEmpty) "" else new File(path, e.dv).getAbsolutePath
-        spjKeys match {
-          case keys if keys.nonEmpty =>
-            sel.map(e => GraftStoreKeyedFilePartition(
-              new File(path, e.file).getAbsolutePath,
-              e.cols, e.file, keyTupleOf(e, keys), dvAbs(e),
-              eqRefsFor(e), e.narrow, e.nested): InputPartition).toArray
-          case _ => spjBucket match {
-            case Some(b) =>
-              sel.map(e => GraftStoreKeyedFilePartition(
-                new File(path, e.file).getAbsolutePath,
-                e.cols, e.file, Seq(e.stats(b.statName).min.toInt),
-                dvAbs(e), eqRefsFor(e), e.narrow, e.nested): InputPartition).toArray
-            case None =>
-              sel.map(e =>
-                GraftStoreFilePartition(new File(path, e.file).getAbsolutePath,
-                  e.cols, e.file, dvAbs(e), eqRefsFor(e),
-                  e.narrow, e.nested): InputPartition).toArray
-          }
-        }
+        def filePartition(e: GraftStore.FileEntry) =
+          GraftStoreFilePartition(new File(path, e.file).getAbsolutePath,
+            e.cols, e.file,
+            if (e.dv.isEmpty) "" else new File(path, e.dv).getAbsolutePath,
+            eqRefsFor(e), e.narrow, e.nested)
+        splitsOf(sel).map {
+          case (Some(k), files) =>
+            GraftStoreKeyedSplit(k, files.map(filePartition)): InputPartition
+          case (None, files) => filePartition(files.head): InputPartition
+        }.toArray
     }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -6487,15 +6576,12 @@ case class GraftStoreFilePartition(absolutePath: String, cols: Int = -1,
 case class GraftStoreEqDelRef(abs: String, ords: Array[Int],
     tags: Array[Byte])
 
-/** File partition that also carries its partition-key tuple (one value
-  * per reported grouping expression), so Spark's key-grouped machinery
-  * can line files up across the two sides of a storage-partitioned join
-  * (multiple files may share a tuple — Spark groups them). */
-case class GraftStoreKeyedFilePartition(absolutePath: String, cols: Int,
-    relPath: String, keys: Seq[Any], dvAbs: String = "",
-    eq: Seq[GraftStoreEqDelRef] = Seq.empty,
-    narrow: Seq[Int] = Seq.empty,
-    nested: Seq[Int] = Seq.empty)
+/** A key-grouped split: files that share one partition-key tuple (one
+  * value per reported grouping expression), read one after another, so
+  * Spark's key-grouped machinery can line splits up across the two sides
+  * of a storage-partitioned join (several splits may share a tuple when
+  * one value outgrows the split size — Spark groups them). */
+case class GraftStoreKeyedSplit(keys: Seq[Any], files: Seq[GraftStoreFilePartition])
   extends InputPartition
   with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
@@ -6764,13 +6850,23 @@ class GraftStoreReaderFactory(scanFields: Int, withFileCol: Boolean = false,
         skipDv = skip, onlyDv = only,
         eqProbes = probesOf(maskEq), onlyEqProbes = probesOf(onlyEq),
         narrowOrds = narrowOf(cdfNarrow), nestedPads = narrowOf(cdfNested))
-    case kp: GraftStoreKeyedFilePartition =>
-      val fileFields = if (kp.cols > 0) kp.cols else scanFields
-      val tail = consts(kp.relPath)
-      new GraftStoreFileReader(kp.absolutePath, fileFields, scanFields,
-        tail, skipDv = skipOf(kp.dvAbs), posSlot = posSlot(tail),
-        eqProbes = probesOf(kp.eq), narrowOrds = narrowOf(kp.narrow),
-        nestedPads = narrowOf(kp.nested))
+    case GraftStoreKeyedSplit(_, files) =>
+      // one file after another, each opened only when the previous one
+      // is exhausted and closed before the next opens
+      new PartitionReader[InternalRow] {
+        private val rest = files.iterator
+        private var cur: PartitionReader[InternalRow] = null
+        override def next(): Boolean = {
+          while (cur == null || !cur.next()) {
+            if (cur != null) { cur.close(); cur = null }
+            if (!rest.hasNext) return false
+            cur = createReader(rest.next())
+          }
+          true
+        }
+        override def get(): InternalRow = cur.get()
+        override def close(): Unit = if (cur != null) { cur.close(); cur = null }
+      }
     case fp: GraftStoreFilePartition =>
       // a file written before an ADD COLUMN carries fewer fields than the
       // scan schema: parse at its own arity (UnsafeRow layout bakes the

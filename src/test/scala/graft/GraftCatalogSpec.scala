@@ -183,10 +183,14 @@ class GraftCatalogSpec extends SparkSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(rows == Seq(("g=0", 1L, 100L), ("g=1", 1L, 100L), ("g=2", 1L, 100L)),
       rows.mkString(","))
-    // compaction merges cells: the merged file pins no single g value —
-    // it must land in the NULL catch-all row, never a guessed cell
+    // a multi-cell file pins no single g value — it must land in the
+    // NULL catch-all row, never a guessed cell. Compaction bins within
+    // one partition value, so merge the cells while the table has no
+    // spec; the restored spec leaves the old file's layout as it is
     val path = session.conf.get("spark.sql.catalog.g.root") + "/pmeta"
+    graft.sources.GraftStore.evolvePartitionBy(path, None)
     graft.sources.GraftStore.compact(session, path, Long.MaxValue)
+    graft.sources.GraftStore.evolvePartitionBy(path, Some("g"))
     val after = session.sql(
       "SELECT `partition`, n_files, n_rows FROM g.`pmeta$partitions`")
       .collect().map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2))).toSeq

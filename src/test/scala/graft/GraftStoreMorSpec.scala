@@ -385,4 +385,154 @@ class GraftStoreMorSpec extends SparkSuite {
       s"incremental refresh diverged from recompute across the restore: " +
         s"refreshed=$refreshed recomputed=$recomputed")
   }
+
+  /** The store scan under `df`'s plan, before adaptive execution. */
+  private def storeScan(df: org.apache.spark.sql.DataFrame): graft.sources.GraftStoreScan = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val pre = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    val scans = pre.collect { case b: BatchScanExec => b.scan }
+      .collect { case g: graft.sources.GraftStoreScan => g }
+    assert(scans.size == 1, s"expected one store scan:\n$pre")
+    scans.head
+  }
+
+  private def assertSingleValued(path: String, col: String): Unit =
+    GraftStore.readManifest(path).get._2.foreach { e =>
+      val st = e.stats(col)
+      assert(st.nulls == 0 && st.min.nonEmpty && st.min == st.max,
+        s"${e.file} is not provably single-valued on $col: $st")
+    }
+
+  test("MOR DELETE on a PARTITIONED BY table: exact rows, files stay single-valued on the partition column") {
+    val root = graft.ops.Util.managedTempDir("graft_mor_pdel_")
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.catalog.gpd", "graft.sources.GraftCatalog")
+    s2.conf.set("spark.sql.catalog.gpd.root", root)
+    s2.sql(
+      """CREATE TABLE gpd.t (k BIGINT, g BIGINT, v BIGINT)
+        |PARTITIONED BY (g)
+        |TBLPROPERTIES('write.mode'='merge-on-read')""".stripMargin)
+    s2.sql("INSERT INTO gpd.t SELECT id, id % 3, id * 10 FROM range(0, 300)")
+    val path = s"$root/t"
+    // a row-level DELETE by a non-partition predicate: the delta input
+    // carries only row ids, never the partition column
+    s2.sql("DELETE FROM gpd.t WHERE k % 7 = 3")
+    val rows = s2.sql("SELECT k, g, v FROM gpd.t ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(rows == (0L until 300L).filter(_ % 7 != 3).map(k => (k, k % 3, k * 10)))
+    val entries = GraftStore.readManifest(path).get._2
+    assert(entries.size == 3 && entries.forall(_.dv.nonEmpty),
+      entries.map(e => (e.file, e.dv)).mkString(", "))
+    assertSingleValued(path, "g")
+    assert(storeScan(s2.table("gpd.t")).outputPartitioning().isInstanceOf[
+      org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning])
+  }
+
+  test("a deletion-vector commit keeps an exact zero null count and demotes a non-zero one") {
+    val (s2, _, path) = freshMor("dvnulls")
+    s2.sql("INSERT INTO gmor.t SELECT id, IF(id % 5 = 0, NULL, id) FROM range(300, 400)")
+    val vNulls = GraftStore.readManifest(path).get._2.map(e => e.file -> e.stats("v").nulls).toMap
+    assert(vNulls.values.exists(_ == 0L) && vNulls.values.exists(_ > 0L), vNulls.toString)
+    // SQL DELETE (the delta write) and the deleteWhereDV API share the rule
+    s2.sql("DELETE FROM gmor.t WHERE k % 7 = 3")
+    GraftStore.deleteWhereDV(s2, path, col("k") % 11 === 1)
+    val entries = GraftStore.readManifest(path).get._2
+    assert(entries.map(_.file).toSet == vNulls.keySet && entries.forall(_.dv.nonEmpty))
+    entries.foreach { e =>
+      assert(e.stats("k").nulls == 0L, s"${e.file}: ${e.stats("k")}")
+      assert(e.stats("v").nulls == (if (vNulls(e.file) == 0L) 0L else -1L),
+        s"${e.file}: ${e.stats("v")}")
+    }
+    val keep = (0L until 400L).filter(k => k % 7 != 3 && k % 11 != 1)
+    assert(s2.sql("SELECT count(*), count(v) FROM gmor.t").collect()(0).toSeq ==
+      Seq(keep.size.toLong, keep.count(k => k < 300 || k % 5 != 0).toLong))
+  }
+
+  test("partitioned MOR through INSERT, MERGE, UPDATE, compact, purge_deletes: keyed scans pack one split per value and equal a CoW twin") {
+    import org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning
+    val root = graft.ops.Util.managedTempDir("graft_mor_keyed_")
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.catalog.gk", "graft.sources.GraftCatalog")
+    s2.conf.set("spark.sql.catalog.gk.root", root)
+    Seq("mor" -> "TBLPROPERTIES('write.mode'='merge-on-read')", "cow" -> "").foreach {
+      case (t, props) =>
+        s2.sql(s"CREATE TABLE gk.$t (k BIGINT, g BIGINT, v BIGINT) PARTITIONED BY (g) $props")
+        s2.sql(s"INSERT INTO gk.$t SELECT id, id % 3, id * 10 FROM range(0, 300)")
+        s2.sql(s"INSERT INTO gk.$t SELECT id, id % 3, id * 10 FROM range(300, 450)")
+        s2.sql(
+          s"""MERGE INTO gk.$t t
+             |USING (SELECT id AS k, id % 3 AS g, id * 100 AS v FROM range(250, 500)) s
+             |ON t.k = s.k
+             |WHEN MATCHED AND s.k % 2 = 0 THEN DELETE
+             |WHEN MATCHED THEN UPDATE SET v = s.v
+             |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+        s2.sql(s"UPDATE gk.$t SET v = v + 1 WHERE k % 13 = 5")
+        s2.sql(s"DELETE FROM gk.$t WHERE k % 17 = 4")
+    }
+    val path = s"$root/mor"
+    def contents(t: String) = s2.sql(s"SELECT k, g, v FROM gk.$t ORDER BY k").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    def checkKeyedScan(): Unit = {
+      assertSingleValued(path, "g")
+      val byValue = GraftStore.readManifest(path).get._2.groupBy(_.stats("g").min.toLong)
+      Seq(s2.table("gk.mor"), s2.sql("SELECT * FROM gk.mor WHERE k = 310")).foreach { df =>
+        val scan = storeScan(df)
+        assert(scan.outputPartitioning().isInstanceOf[KeyGroupedPartitioning],
+          scan.outputPartitioning().toString)
+        val splits = scan.planInputPartitions().toSeq.map {
+          case s: graft.sources.GraftStoreKeyedSplit => s
+          case p => fail(s"unkeyed input partition $p")
+        }
+        // one split per partition value, holding only that value's files
+        assert(splits.map(_.keys).distinct.size == splits.size, splits.map(_.keys).toString)
+        splits.foreach { s =>
+          val g = s.keys.head.asInstanceOf[Long]
+          assert(s.files.map(_.relPath).toSet.subsetOf(byValue(g).map(_.file).toSet),
+            s"g=$g: ${s.files}")
+        }
+        assert(scan.description().contains(s"splits=${splits.size}"), scan.description())
+      }
+      // the full scan plans every file: each value's split holds all of them
+      val full = storeScan(s2.table("gk.mor")).planInputPartitions().toSeq
+        .map(_.asInstanceOf[graft.sources.GraftStoreKeyedSplit])
+      assert(full.map(s => s.keys.head -> s.files.map(_.relPath).toSet).toMap ==
+        byValue.map { case (g, es) => (g: Any) -> es.map(_.file).toSet })
+      assert(contents("mor") == contents("cow"))
+    }
+    checkKeyedScan()
+    val packed = storeScan(s2.table("gk.mor")).planInputPartitions()
+      .map(_.asInstanceOf[graft.sources.GraftStoreKeyedSplit])
+    assert(packed.length == 3 && packed.map(_.files.size).sum > 3,
+      s"expected several files packed into 3 splits: ${packed.toSeq}")
+    val filesBefore = GraftStore.readManifest(path).get._2.size
+    s2.sql("CALL gk.system.compact('mor', 1073741824)").collect()
+    s2.sql("CALL gk.system.purge_deletes('mor')").collect()
+    s2.sql("CALL gk.system.compact('cow', 1073741824)").collect()
+    checkKeyedScan()
+    assert(GraftStore.readManifest(path).get._2.size < filesBefore)
+  }
+
+  test("compact on a partitioned table packs within one partition value: every packed file single-valued, content unchanged") {
+    val root = graft.ops.Util.managedTempDir("graft_mor_pcompact_")
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.catalog.gpc", "graft.sources.GraftCatalog")
+    s2.conf.set("spark.sql.catalog.gpc.root", root)
+    s2.sql("CREATE TABLE gpc.t (k BIGINT, g BIGINT, v BIGINT) PARTITIONED BY (g)")
+    (0 until 3).foreach(i => s2.sql(
+      s"INSERT INTO gpc.t SELECT id, id % 4, id * 10 FROM range(${i * 100}, ${i * 100 + 100})"))
+    val path = s"$root/t"
+    assert(GraftStore.readManifest(path).get._2.size == 12)
+    val before = s2.sql("SELECT * FROM gpc.t ORDER BY k").collect().toSeq
+    assert(GraftStore.compact(s2, path, Long.MaxValue) > 0)
+    val entries = GraftStore.readManifest(path).get._2
+    assert(entries.size == 4, entries.map(_.file).mkString(", "))
+    assertSingleValued(path, "g")
+    assert(entries.map(_.stats("g").min.toLong).sorted == Seq(0L, 1L, 2L, 3L))
+    assert(entries.map(_.rows).sum == 300L)
+    assert(s2.sql("SELECT * FROM gpc.t ORDER BY k").collect().toSeq == before)
+  }
 }
