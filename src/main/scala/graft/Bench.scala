@@ -32,30 +32,7 @@ object Bench {
     // lands in the artifact as a fake regression (BENCH_r15's q_udtf
     // read 11s from exactly that — same HEAD re-measured 1.4s)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Kryo for RDD shuffles (round 19): DataFrame exchanges use
-      // UnsafeRow and are unaffected, but the graph/CC fixpoint family
-      // shuffles Scala tuples through spark.serializer every superstep —
-      // Java serialization there measured ~8% of pagerank's superstep
-      // time and ~0.3 s on q_dedup_connected's delta iteration. Scale-
-      // independent (standard production setting), value-neutral.
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.ui.enabled", "false")
-      // the status stores retain per-job/stage/execution state (incl.
-      // full plan graphs) even with the UI off — across a 290-query run
-      // that is hundreds of MB of old-gen churn that shows up as 2-3x
-      // slowdowns on late queries vs the same query isolated. Keep just
-      // enough for post-mortem of the last few queries.
-      .config("spark.sql.ui.retainedExecutions", "8")
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "2000")
-      .config("spark.ui.retainedDeadExecutors", "0")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warmup absorbs one-time session costs (parquet footer reads, codegen
     // paths, shuffle service init) so per-query times are comparable across

@@ -18,11 +18,9 @@ object ControlAB {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ControlAB <query-name> [query-name...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(s"local[$cpus]", cpus)
       .appName("control-ab")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     def time(fn: (SparkSession, String) => DataFrame): Double = {
       fn(spark, sfDir).collect()

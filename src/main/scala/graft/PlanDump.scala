@@ -2,8 +2,6 @@ package graft
 
 import java.io.PrintWriter
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for a headline subset of queries to
   * PLANS.md — the human-readable companion to PlanShapeSpec's
   * machine-checked assertions. Usage:
@@ -95,13 +93,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("PLANS.md")
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val w = new PrintWriter(out)
     try {

@@ -102,6 +102,10 @@ object LlmOpsExt {
     // pair-keyed count; the gram sets now ride the two candidate joins and
     // never hit an exchange (stage audit: 3 gram-table shuffles → 0).
     // |A∩B|, |A|, |B| over the same distinct sets ⇒ identical jaccard.
+    // DistinctCharGramsArray maps NULL text to the EMPTY set, not NULL.
+    // Safe here: a NULL text has a NULL blocking key, which joins nothing,
+    // and the 0/0 of two empty sets is guarded below. A call site where
+    // NULL must propagate needs a null-preserving form.
     val docg = cached(d.join(candDocs, Seq("doc_id"), "left_semi")
       .select($"doc_id",
         org.apache.spark.sql.graft.GraftSql.column(

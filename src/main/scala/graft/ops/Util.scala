@@ -401,38 +401,19 @@ object Util {
     b.iterator
   }
 
-  /** events.parquet's `ts` physical type has differed across fixture
-    * generations — TIMESTAMP(NANOS) (Spark 4 refuses to read it as a
-    * timestamp, PARQUET_TYPE_ILLEGAL, so it arrives as a nanos LONG under
-    * legacy.parquet.nanosAsLong) vs TIMESTAMP(MICROS) tz-naive (arrives as
-    * TIMESTAMP_NTZ). Branch on the type actually read instead of
-    * hard-coding either era, normalizing to a session-TZ TIMESTAMP either
-    * way (callers run with session.timeZone=UTC, so the NTZ wall clock is
-    * preserved as the same instant):
-    *   - LongType: nanos → µs by integer division (`div` — a double
-    *     division would lose precision above 2^53 ns). DuckDB oracles that
-    *     `ts::TIMESTAMP`-cast for ns truncation stay valid (a no-op on µs).
-    *   - TIMESTAMP_NTZ: cast to TIMESTAMP (identity on the stored µs under
-    *     a UTC session).
-    *   - TIMESTAMP: passthrough.
-    *
-    * The nanosAsLong conf is set at session build time by the Verify/Bench
-    * mains and the test SparkSuite, so the hot path never mutates session
-    * config. For a caller-owned session (queries are a registry usable
-    * from any session) the conf is runtime-settable; setting the constant
-    * "true" is idempotent, so the fallback below cannot race to different
-    * values under concurrent sessions. */
+  /** events.parquet with `ts` as a session-TZ TIMESTAMP. The fixture
+    * stores `ts` as TIMESTAMP(MICROS) tz-naive, which arrives as
+    * TIMESTAMP_NTZ; cast it to TIMESTAMP (identity on the stored µs under
+    * the UTC session every caller runs with). A tz-aware file passes
+    * through. Reads with the caller's session conf as it is. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    if (spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table(spark, dir, "events")
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     raw.schema("ts").dataType match {
-      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
       case TimestampType    => raw
       case other => throw new IllegalStateException(
-        s"events.ts read as unsupported type $other (expected LONG nanos, TIMESTAMP_NTZ, or TIMESTAMP)")
+        s"events.ts read as unsupported type $other (expected TIMESTAMP_NTZ or TIMESTAMP)")
     }
   }
 }

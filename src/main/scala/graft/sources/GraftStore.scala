@@ -1154,6 +1154,27 @@ object GraftStore {
     * retry against the fresh base, content-dependent commits surface it. */
   class ConflictException(msg: String) extends RuntimeException(msg)
 
+  /** Optimistic commit loop: `prepare` re-reads the latest snapshot and
+    * works the commit out against it, `claim` makes the CAS claim. A
+    * ConflictException from the claim (a competitor took the version)
+    * re-runs both, up to 10 attempts with a 5·n ms backoff; one that
+    * `prepare` throws (the commit's content went stale under it) fails
+    * at once. */
+  private[graft] def retryOnConflict[P, T](prepare: => P)(claim: P => T): T = {
+    var attempt = 0
+    while (true) {
+      val p = prepare
+      try return claim(p)
+      catch {
+        case c: ConflictException =>
+          attempt += 1
+          if (attempt >= 10) throw c
+          Thread.sleep(5L * attempt)
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
   /** Next version = one past the highest COMMITTED snapshot (the pointer
     * can lag for an instant between a competitor's claim and its pointer
     * refresh — versioning must never reuse a claimed id). */
@@ -1705,26 +1726,18 @@ object GraftStore {
     // not die on the CAS. Recomputing from the new base is always sound
     // here — the regroup is metadata-only and derives entirely from
     // whatever file list the re-read observes.
-    var attempt = 0
-    while (true) {
+    def childCount(v: Long): Long = readManifestStructured(
+      new File(path, s"$ManifestName.v$v")).map(_._4.size.toLong).getOrElse(0L)
+    retryOnConflict {
       val (baseV, latest) = readLatestVersioned(path)
       val (schema, entries) = latest.getOrElse(throw new IllegalArgumentException(
         s"no graft-store table at $path"))
-      def childCount(v: Long): Long = readManifestStructured(
-        new File(path, s"$ManifestName.v$v")).map(_._4.size.toLong).getOrElse(0L)
-      val before = childCount(baseV)
-      try {
-        val v = writeManifestAtomic(path, baseV, schema, entries,
-          epoch = readEpoch(path), op = "rewrite_manifests", regroup = true)
-        return (v, before, childCount(v))
-      } catch {
-        case c: ConflictException =>
-          attempt += 1
-          if (attempt >= 10) throw c
-          Thread.sleep(5L * attempt)
-      }
+      (baseV, schema, entries, childCount(baseV))
+    } { case (baseV, schema, entries, before) =>
+      val v = writeManifestAtomic(path, baseV, schema, entries,
+        epoch = readEpoch(path), op = "rewrite_manifests", regroup = true)
+      (v, before, childCount(v))
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Zero-copy SHALLOW CLONE: a new table at `dst` whose v1 manifest
@@ -1982,8 +1995,9 @@ object GraftStore {
     // disjoint files), so run them CONCURRENTLY (guide §2.6 — overlap
     // independent jobs): FIFO scheduling back-fills the second job's
     // tasks into the first's tail instead of paying two sequential
-    // job-launch+shuffle rounds per commit. Commit content, file names
-    // and the manifest are byte-identical to the sequential order.
+    // job-launch+shuffle rounds per commit. Commit content and the
+    // manifest (up to the per-run stamp in file names) are identical to
+    // the sequential order.
     val sidecarsF: java.util.concurrent.Future[Seq[String]] = appendRows match {
       case Some(_) => commitPool.submit(
         new java.util.concurrent.Callable[Seq[String]] {
@@ -1999,12 +2013,7 @@ object GraftStore {
           Files.copy(part.toPath, Paths.get(scratch.getAbsolutePath, PartitionFileName))
         rows.write.format("graft.sources.GraftStore")
           .option("path", scratch.getAbsolutePath).mode("append").save()
-        val es = readManifest(scratch.getAbsolutePath).map(_._2).getOrElse(Seq.empty)
-        es.foreach { e =>
-          val to = Paths.get(path, e.file)
-          if (to.getParent != null) Files.createDirectories(to.getParent)
-          Files.createLink(to, Paths.get(scratch.getAbsolutePath, e.file))
-        }
+        val es = linkStamped(path, scratch, "upsert")
         deleteRecursively(scratch)
         es
       case _ => Seq.empty
@@ -2018,8 +2027,7 @@ object GraftStore {
     // concurrent commit (they address KEYS, not positions), so a lost
     // CAS just re-reads the base — the delete's seq becomes the new
     // commit's version, which still post-dates every pre-existing file
-    var attempt = 0
-    while (true) {
+    retryOnConflict {
       val (base, latest) = readLatestVersioned(path)
       val (sch, entries) = latest.getOrElse((tblSchema, Seq.empty[FileEntry]))
       val carried =
@@ -2037,19 +2045,39 @@ object GraftStore {
           "(a restarted-lineage clone of a longer history) — an equality " +
           "delete committed now would not apply to those files; " +
           "purgeDeletes on the source then re-clone, or OPTIMIZE first")
-      val added = sidecars.map(f => EqDelete(f, seq, keyCols))
-      try {
-        val v = writeManifestAtomic(path, base, sch, entries ++ fresh,
-          readEpoch(path), op = op, eqDels = Some(carried ++ added))
-        return v
-      } catch {
-        case c: ConflictException =>
-          attempt += 1
-          if (attempt >= 10) throw c
-          Thread.sleep(5L * attempt)
-      }
+      (base, sch, entries, carried ++ sidecars.map(f => EqDelete(f, seq, keyCols)))
+    } { case (base, sch, entries, eqDels) =>
+      writeManifestAtomic(path, base, sch, entries ++ fresh,
+        readEpoch(path), op = op, eqDels = Some(eqDels))
     }
-    base0 // unreachable
+  }
+
+  /** Hard-links the files of the scratch table at `scratch` into the
+    * table at `path` under per-run STAMPED names `data/<tag>-<stamp>-<i>.bin`
+    * and returns the scratch entries renamed to them. Never the scratch
+    * write's task-derived part-<pid>-<tid> names: task ids restart per
+    * JVM, so a later session's rewrite against a table written by an
+    * earlier one could collide with a live or orphaned file
+    * (FileAlreadyExistsException mid-loop); the stamp makes every run's
+    * names fresh. Created links are removed (and the scratch table
+    * deleted) if a later link fails, so an aborted rewrite leaves no
+    * orphans waiting for GC. */
+  private def linkStamped(path: String, scratch: File, tag: String): Seq[FileEntry] = {
+    val fresh = readManifest(scratch.getAbsolutePath).map(_._2).getOrElse(Seq.empty)
+    val stamp = java.lang.Long.toHexString(System.nanoTime())
+    val linked = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    try fresh.zipWithIndex.map { case (e, i) =>
+      val name = s"data/$tag-$stamp-$i.bin"
+      val to = Paths.get(path, name)
+      if (to.getParent != null) Files.createDirectories(to.getParent)
+      Files.createLink(to, Paths.get(scratch.getAbsolutePath, e.file))
+      linked += to
+      e.copy(file = name)
+    } catch { case t: Throwable =>
+      linked.foreach(p => try Files.deleteIfExists(p) catch { case _: Exception => () })
+      deleteRecursively(scratch)
+      throw t
+    }
   }
 
   /** REWRITE DATA FILES (Iceberg's `rewrite_data_files` / Delta's `PURGE`
@@ -2086,12 +2114,7 @@ object GraftStore {
         .load()
         .write.format("graft.sources.GraftStore")
         .option("path", scratch.getAbsolutePath).mode("append").save()
-    val fresh = readManifest(scratch.getAbsolutePath).map(_._2).getOrElse(Seq.empty)
-    fresh.foreach { e =>
-      val to = Paths.get(path, e.file)
-      if (to.getParent != null) Files.createDirectories(to.getParent)
-      Files.createLink(to, Paths.get(scratch.getAbsolutePath, e.file))
-    }
+    val fresh = linkStamped(path, scratch, "purge")
     val dvdSet = dvd.map(_.file).toSet
     val v = writeManifestAtomic(path, base, schema,
       entries.filterNot(e => dvdSet.contains(e.file)) ++ fresh,
@@ -2145,29 +2168,7 @@ object GraftStore {
       .sortWithinPartitions(sortBy.map(col): _*)
       .write.format("graft.sources.GraftStore")
       .option("path", scratch.getAbsolutePath).mode("append").save()
-    val fresh = readManifest(scratch.getAbsolutePath).map(_._2).getOrElse(Seq.empty)
-    // link under per-run STAMPED names, never the scratch write's
-    // task-derived part-<pid>-<tid> names: task ids restart per JVM, so
-    // a later session's rewrite against a table written by an earlier
-    // one could collide with a live file (FileAlreadyExistsException
-    // mid-loop); the stamp makes every run's names fresh — the same
-    // discipline as the compact/eqdel rewrite paths. Created links are
-    // removed if a later link fails, so an aborted OPTIMIZE leaves no
-    // orphans waiting for GC.
-    val stamp = java.lang.Long.toHexString(System.nanoTime())
-    val linked = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    val renamed = try fresh.zipWithIndex.map { case (e, i) =>
-      val name = s"data/sortopt-$stamp-$i.bin"
-      val to = Paths.get(path, name)
-      if (to.getParent != null) Files.createDirectories(to.getParent)
-      Files.createLink(to, Paths.get(scratch.getAbsolutePath, e.file))
-      linked += to
-      e.copy(file = name)
-    } catch { case t: Throwable =>
-      linked.foreach(p => try Files.deleteIfExists(p) catch { case _: Exception => () })
-      deleteRecursively(scratch)
-      throw t
-    }
+    val renamed = linkStamped(path, scratch, "sortopt")
     val packedSet = packable.map(_.file).toSet
     val v = writeManifestAtomic(path, base, schema,
       entries.filterNot(e => packedSet.contains(e.file)) ++ renamed,
@@ -4772,10 +4773,7 @@ class GraftStoreDeltaBatchWrite(path: String, schema: StructType,
     // loudly. Same single-logical-writer-per-ROW discipline Delta has,
     // with append-concurrency for free.
     import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-    var attempt = 0
-    var done = false
-    var committed = Seq.empty[GraftStore.FileEntry]
-    while (!done) {
+    val committed = GraftStore.retryOnConflict {
       val (base, latest) = GraftStore.readLatestVersioned(path)
       val (tblSchema, entries) = latest.getOrElse(
         (schema, Seq.empty[GraftStore.FileEntry]))
@@ -4812,18 +4810,12 @@ class GraftStoreDeltaBatchWrite(path: String, schema: StructType,
           case None => Some(e)
         }
       } ++ inserts
-      try {
-        GraftStore.writeManifestAtomic(path, base, tblSchema, newEntries,
-          GraftStore.readEpoch(path),
-          op = if (cmd == Command.DELETE) "delete" else "replace")
-        committed = newEntries
-        done = true
-      } catch {
-        case c: GraftStore.ConflictException =>
-          attempt += 1
-          if (attempt >= 10) throw c
-          Thread.sleep(5L * attempt)
-      }
+      (base, tblSchema, newEntries)
+    } { case (base, tblSchema, newEntries) =>
+      GraftStore.writeManifestAtomic(path, base, tblSchema, newEntries,
+        GraftStore.readEpoch(path),
+        op = if (cmd == Command.DELETE) "delete" else "replace")
+      newEntries
     }
     GraftStore.gcUnreferenced(path,
       committed.flatMap(e =>
@@ -5344,10 +5336,7 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
     // the LATEST snapshot (never a lagging pointer) and retries — the
     // Delta concurrent-append semantics. Truncate replaces wholesale,
     // so its retry is equally safe (last truncate wins, a real order).
-    var attempt = 0
-    var files = Seq.empty[GraftStore.FileEntry]
-    var done = false
-    while (!done) {
+    val files = GraftStore.retryOnConflict {
       val (base, existing) = GraftStore.readLatestVersioned(path)
       // IDEMPOTENT WRITE: a (txnAppId, txnVersion) the table has already
       // recorded is a replay — drop this attempt's files and do nothing
@@ -5359,12 +5348,8 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
           new File(path, s"${GraftStore.ManifestName}.v$base"))
           .get(app).exists(_ >= ver)
       }
-      if (replayed) {
-        committed.foreach(e => new File(path, e.file).delete())
-        files = existing.map(_._2).getOrElse(Seq.empty)
-        done = true
-      } else {
-      val previous =
+      if (replayed) (base, existing, None)
+      else (base, existing, Some(
         if (truncateFirst) Seq.empty
         else if (dynamicOverwrite) {
           // DYNAMIC PARTITION OVERWRITE: drop exactly the existing files
@@ -5419,15 +5404,19 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
             }
           }
         }
-        else existing.map(_._2).getOrElse(Seq.empty)
-      files = previous ++ committed
-      // an append keeps the TABLE's schema: the query's output schema may
-      // carry tighter nullability (literal columns), and writing it back
-      // would let readers elide null checks on evolved columns whose old
-      // files null-pad. Truncate replaces the table wholesale — the write
-      // schema IS the new contract. The epoch marker follows the same
-      // logic (append must not clobber a streaming table's marker).
-      try {
+        else existing.map(_._2).getOrElse(Seq.empty)))
+    } {
+      case (_, existing, None) =>
+        committed.foreach(e => new File(path, e.file).delete())
+        existing.map(_._2).getOrElse(Seq.empty)
+      case (base, existing, Some(previous)) =>
+        val files = previous ++ committed
+        // an append keeps the TABLE's schema: the query's output schema may
+        // carry tighter nullability (literal columns), and writing it back
+        // would let readers elide null checks on evolved columns whose old
+        // files null-pad. Truncate replaces the table wholesale — the write
+        // schema IS the new contract. The epoch marker follows the same
+        // logic (append must not clobber a streaming table's marker).
         GraftStore.writeManifestAtomic(path, base,
           if (truncateFirst) schema else existing.map(_._1).getOrElse(schema),
           files,
@@ -5440,14 +5429,7 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
           // truncate replaces the content wholesale: any equality
           // delete's work is done (nothing it applied to survives)
           eqDels = if (truncateFirst) Some(Seq.empty) else None)
-        done = true
-      } catch {
-        case c: GraftStore.ConflictException =>
-          attempt += 1
-          if (attempt >= 10) throw c
-          Thread.sleep(5L * attempt)
-      }
-      }
+        files
     }
     GraftStore.gcUnreferenced(path, files.map(_.file).toSet)
   }

@@ -22,23 +22,20 @@ object StreamingOps {
     StructField("value", DoubleType), StructField("props", StringType)))
 
   /** Events as an unbounded stream from a parquet directory. readStream
-    * requires a user schema, and the fixture's `ts` physical type has
-    * differed across generations (TIMESTAMP(NANOS) → nanos LONG under
-    * legacy.parquet.nanosAsLong vs TIMESTAMP(MICROS) tz-naive → NTZ), so
-    * probe the footer with a one-off batch read and declare the stream
-    * schema to match, normalizing to TIMESTAMP exactly as
-    * graft.ops.Util.events does for batch. The probe reads footers only
-    * (no row groups) — cheap even on a large directory. */
+    * requires a user schema, and `ts` reads as TIMESTAMP_NTZ (tz-naive µs)
+    * or TIMESTAMP depending on the file's UTC-adjusted flag, so probe the
+    * footer with a one-off batch read and declare the stream schema to
+    * match, normalizing to TIMESTAMP exactly as graft.ops.Util.events does
+    * for batch. The probe reads footers only (no row groups) — cheap even
+    * on a large directory. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = spark.read.parquet(dir).schema("ts").dataType
     val raw = spark.readStream.schema(eventsSchema(tsType)).parquet(dir)
     tsType match {
-      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
       case TimestampType    => raw
       case other => throw new IllegalStateException(
-        s"events.ts read as unsupported type $other (expected LONG nanos, TIMESTAMP_NTZ, or TIMESTAMP)")
+        s"events.ts read as unsupported type $other (expected TIMESTAMP_NTZ or TIMESTAMP)")
     }
   }
 

@@ -4,17 +4,16 @@ import org.apache.spark.sql.types._
 
 /** Regression guard for the driver-generated fixtures (SURVEY §1.2).
   *
-  * The sandbox has been rebuilt between rounds and regenerated the parquet
-  * fixtures with DIFFERENT physical types (round 7: events.ts flipped from
-  * timestamp[ns] — read as a nanos LONG under legacy.parquet.nanosAsLong —
-  * to timestamp[us] tz-naive, read as TIMESTAMP_NTZ), which surfaced as
-  * dozens of cryptic analysis errors deep inside queries. This spec pins
-  * what the queries actually assume, so the next environment shift fails
-  * HERE with a pointed message instead.
+  * Regenerated parquet fixtures with DIFFERENT physical types surface as
+  * dozens of cryptic analysis errors deep inside queries (round 7:
+  * events.ts once flipped from timestamp[ns] to timestamp[us]). This spec
+  * pins what the queries actually assume, so the next environment shift
+  * fails HERE with a pointed message instead.
   *
-  * events.ts is deliberately a set-membership check: graft.ops.Util.events
-  * and graft.streaming.StreamingOps.readEvents adapt to any of the three
-  * types at read time, so all three are valid — anything else is not.
+  * events.ts is a set-membership check: graft.ops.Util.events and
+  * graft.streaming.StreamingOps.readEvents accept a tz-naive (NTZ) or a
+  * tz-aware µs timestamp and normalize both to TIMESTAMP. A nanosecond
+  * file does not read as a timestamp in Spark 4 and is refused.
   */
 class FixtureSchemaSpec extends SparkSuite {
 
@@ -36,12 +35,12 @@ class FixtureSchemaSpec extends SparkSuite {
     }
   }
 
-  test("events.ts reads as one of the three types Util.events adapts to") {
+  test("events.ts reads as one of the two types Util.events adapts to") {
     val tsType = schemaOf("events")("ts")
-    assert(Set[DataType](LongType, TimestampNTZType, TimestampType)(tsType),
+    assert(Set[DataType](TimestampNTZType, TimestampType)(tsType),
       s"FIXTURE DRIFT: events.ts reads as $tsType — Util.events/" +
-        s"StreamingOps.readEvents only adapt to nanos LONG, TIMESTAMP_NTZ, " +
-        s"or TIMESTAMP; extend both helpers before anything else this round")
+        s"StreamingOps.readEvents only adapt to TIMESTAMP_NTZ or TIMESTAMP; " +
+        s"extend both helpers before anything else this round")
     assertCols("events",
       "event_id" -> LongType, "user_id" -> LongType,
       "event_type" -> StringType, "value" -> DoubleType,

@@ -92,6 +92,26 @@ class GraftStoreEqDeleteSpec extends SparkSuite {
     assert(readT(t).filter($"k" === 20L).collect().map(_.getLong(1)).toSeq == Seq(-9L))
   }
 
+  test("upsertByKey links its appended rows under fresh names: files at the scratch job's part-<p>-<t> names stay untouched") {
+    import spark.implicits._
+    val t = fresh("plant")
+    // task ids restart at 0 in every JVM, so a table written in an earlier
+    // session can hold files at exactly the part-<p>-<t> names the
+    // upsert's scratch write takes next: plant them
+    val lastTask = spark.sparkContext.parallelize(0 until 4, 4)
+      .map(_ => org.apache.spark.TaskContext.get().taskAttemptId()).collect().max
+    val planted = for (p <- 0 until 8; t0 <- lastTask + 1 to lastTask + 64)
+      yield new File(t, s"data/part-$p-$t0.bin")
+    planted.foreach(f => java.nio.file.Files.write(f.toPath, f.getName.getBytes("UTF-8")))
+    GraftStore.upsertByKey(spark, t, Seq("k"),
+      Seq((20L, -1L), (1000L, -3L)).toDF("k", "v"))
+    planted.foreach(f => assert(
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8") == f.getName,
+      s"upsertByKey overwrote ${f.getName}"))
+    val got = readT(t).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(got.size == 301 && got(20L) == -1L && got(1000L) == -3L && got(40L) == 400L)
+  }
+
   test("multi-column string+long keys: tuple encoding, no cross-type or cross-column aliasing") {
     import spark.implicits._
     val root = graft.ops.Util.managedTempDir("graft_eqd_tuple_")

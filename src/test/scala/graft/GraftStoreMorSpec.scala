@@ -535,4 +535,27 @@ class GraftStoreMorSpec extends SparkSuite {
     assert(entries.map(_.rows).sum == 300L)
     assert(s2.sql("SELECT * FROM gpc.t ORDER BY k").collect().toSeq == before)
   }
+
+  test("purge_deletes links its rewrite under fresh names: files at the scratch job's part-<p>-<t> names stay untouched") {
+    val (s2, _, path) = freshMor("plant")
+    s2.sql("DELETE FROM gmor.t WHERE k % 7 = 3")
+    // task ids restart at 0 in every JVM, so a table written in an earlier
+    // session can hold live or orphaned files at exactly the
+    // part-<p>-<t> names the purge's scratch write takes next: plant them
+    val lastTask = s2.sparkContext.parallelize(0 until 4, 4)
+      .map(_ => org.apache.spark.TaskContext.get().taskAttemptId()).collect().max
+    val planted = for (p <- 0 until 8; t <- lastTask + 1 to lastTask + 32)
+      yield new File(path, s"data/part-$p-$t.bin")
+    planted.foreach(f => java.nio.file.Files.write(f.toPath, f.getName.getBytes("UTF-8")))
+    GraftStore.purgeDeletes(s2, path)
+    val entries = GraftStore.readManifest(path).get._2
+    assert(entries.forall(_.dv.isEmpty))
+    assert(entries.map(_.file).intersect(planted.map(f => s"data/${f.getName}")).isEmpty)
+    planted.foreach(f => assert(
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8") == f.getName,
+      s"purge_deletes overwrote ${f.getName}"))
+    val keep = (0L until 300L).filter(_ % 7 != 3)
+    val got = s2.sql("SELECT count(*), sum(v) FROM gmor.t").collect()(0)
+    assert(got.getLong(0) == keep.size && got.getLong(1) == keep.map(_ * 10).sum)
+  }
 }

@@ -396,11 +396,11 @@ class PropertySpec extends SparkSuite {
         .collect().head.getSeq[String](0)
       assert(native == expect, s"distinct chargram mismatch on '$w': " +
         s"$native vs $expect")
-      // and NULL text yields the empty array (generator emits no row)
-      val nul = df.selectExpr("distinct_chargrams5(CAST(NULL AS STRING)) AS gs")
-        .collect().head.getSeq[String](0)
-      assert(nul.isEmpty, "NULL text must yield an empty gram set")
     }
+    // and NULL text yields the empty array (generator emits no row)
+    val nul = spark.sql("SELECT distinct_chargrams5(CAST(NULL AS STRING)) AS gs")
+      .collect().head.getSeq[String](0)
+    assert(nul.isEmpty, "NULL text must yield an empty gram set")
   }
 
   test("DistinctShinglesArray equals array_distinct(shingles(toks(text)))") {

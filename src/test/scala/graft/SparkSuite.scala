@@ -14,15 +14,7 @@ trait SparkSuite extends AnyFunSuite {
   // GraftStoreSpec kill-one-task exactly-once proof can run a REAL
   // failed-then-retried attempt (plain local[N] hardcodes maxFailures=1
   // and any injected task failure would fail the whole job)
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4, 2]")
+  lazy val spark: SparkSession = GraftSession.builder("local[4, 2]", 4)
     .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // same serializer as Bench/Verify (round 19) so every spec exercises
-    // the configuration the harness mains actually run
-    .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
