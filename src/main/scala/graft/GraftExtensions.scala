@@ -24,6 +24,14 @@ import graft.plans.{AsOfJoinStrategy, RewritePowAsMultiply, RewriteWindowTopK, T
   *  - the as-of join planner strategy (AsOfJoinPlan → AsOfJoinExec)
   *  - the pow(x,2) → x*x optimizer rewrite
   *
+  * It also sizes the JVM's generated-class cache
+  * (`spark.sql.codegen.cache.maxEntries`) to
+  * [[GraftSession.CodegenCacheEntries]] unless the context's conf sets
+  * the key; the user's value wins. Spark builds that cache once per JVM,
+  * at the first codegen, so this takes effect only if this session is
+  * the first to reach codegen: if an earlier session already
+  * initialized `CodeGenerator`, it is a no-op and the earlier size stays.
+  *
   * The per-query registrations inside graft.ops queries exist so each
   * query stays self-contained for the Verify/Bench driver harness; a user
   * installing this class needs none of them.
@@ -49,6 +57,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           s"shingles(text, n): n must be an integer literal, got $other")
       })
     })
+    // the parser is built with the session's state, before any query of
+    // the session is parsed or run, so before its first codegen
+    ext.injectParser { (session, parser) =>
+      GraftSession.sizeCodegenCache(session.sparkContext.getConf)
+      parser
+    }
     ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
     ext.injectPlannerStrategy(_ => TopKPerGroupStrategy)
     // V2 views over GraftCatalog: must run in the HINTS batch — the only

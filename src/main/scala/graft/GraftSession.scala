@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicBoolean
+
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import org.apache.spark.sql.internal.SQLConf
 
 /** The session configuration every harness main (Bench, Verify, PlanDump,
   * ControlAB) and the test `SparkSuite` run under, so a spec exercises
@@ -8,6 +13,39 @@ import org.apache.spark.sql.SparkSession
   * add what only they need (Verify's parquet timestamp type, the suite's
   * task-retry master) on the returned builder. */
 object GraftSession {
+  /** Spark's static conf sizing the JVM-wide generated-class cache. */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Entries of that cache under graft. Spark's default of 100 (a Guava
+    * cache in 4 segments of 25) is smaller than the five `llm_curate`
+    * queries alone (78 distinct classes), so every repetition of a query
+    * recompiled its stages. One pass over the whole registry at sf0.01
+    * compiles 4,141 distinct classes; 8192 holds that with slack for the
+    * uneven segment split while staying bounded: about 680 classes per
+    * registry pass come from literal-bearing source that changes on
+    * every call and would grow an unbounded cache for ever. */
+  val CodegenCacheEntries = 8192
+
+  /** The cache size a context with `conf` gets: an explicit setting of
+    * the key wins over [[CodegenCacheEntries]]. */
+  def codegenCacheEntries(conf: SparkConf): Int =
+    conf.getInt(CodegenCacheKey, CodegenCacheEntries)
+
+  private val codegenCacheSized = new AtomicBoolean(false)
+
+  /** Builds Spark's generated-class cache at [[codegenCacheEntries]] of
+    * `conf`. Spark reads the size once per JVM, from `SQLConf.get` in
+    * `CodeGenerator`'s static initializer, so this initializes
+    * `CodeGenerator` under a conf that holds the size. Runs once per
+    * JVM, and is a no-op if an earlier session already initialized
+    * `CodeGenerator` (its first codegen fixed the size). */
+  def sizeCodegenCache(conf: SparkConf): Unit =
+    if (codegenCacheSized.compareAndSet(false, true)) {
+      val sized = new SQLConf
+      sized.setConfString(CodegenCacheKey, codegenCacheEntries(conf).toString)
+      SQLConf.withExistingConf(sized)(CodeGenerator.compileTime)
+    }
+
   def builder(master: String, partitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -31,4 +69,6 @@ object GraftSession {
       .config("spark.ui.retainedStages", "200")
       .config("spark.ui.retainedTasks", "2000")
       .config("spark.ui.retainedDeadExecutors", "0")
+      // a static conf: the first session's context fixes it for the JVM
+      .config(CodegenCacheKey, CodegenCacheEntries.toLong)
 }

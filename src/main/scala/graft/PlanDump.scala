@@ -7,6 +7,11 @@ import java.io.PrintWriter
   * machine-checked assertions. Usage:
   *
   * {{{ sbt "runMain graft.PlanDump [outFile] [sfDir]" }}}
+  *
+  * The dump is reproducible: the ids Spark numbers per JVM (expression
+  * ids, exchange `plan_id`s) and the random suffixes of temporary table
+  * directories are masked, so two runs of one commit are byte-identical
+  * and a diff of PLANS.md shows only plan changes.
   */
 object PlanDump {
   /** One query per plan family: scan+pushdown, broadcast star join, SMJ,
@@ -90,6 +95,17 @@ object PlanDump {
     // read-back through the regrouped layout
     "q_sim_sparse_incr", "q_store_rewrite_manifests")
 
+  private val tmpDir = java.util.regex.Pattern.quote(
+    new java.io.File(System.getProperty("java.io.tmpdir")).getPath)
+
+  /** `plan` with its run-specific parts replaced by fixed tokens:
+    * `name#123L` → `name#N`, `plan_id=7` → `plan_id=N`, and
+    * `<java.io.tmpdir>/graft_x_8243…/t` → `<tmp>/graft_x_N/t`. */
+  private def mask(plan: String): String = plan
+    .replaceAll("#\\d+L?", "#N")
+    .replaceAll("plan_id=\\d+", "plan_id=N")
+    .replaceAll(tmpDir + "/([A-Za-z0-9_.-]*?)\\d+(?=[/\\],\\s)]|$)", "<tmp>/$1N")
+
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("PLANS.md")
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.01")
@@ -110,7 +126,7 @@ object PlanDump {
         w.println(s"## $name")
         w.println()
         w.println("```")
-        w.println(plan.trim)
+        w.println(mask(plan.trim))
         w.println("```")
       }
     } finally {

@@ -23,9 +23,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Commit protocol (the part that matters at 100 TB, where the "file
   * system" is an object store with no atomic rename-into-directory):
   *   - every task ATTEMPT writes an attempt-unique data file
-  *     `data/part-<partition>-<task>.bin` (the task id is unique per
-  *     attempt) and reports it in its commit MESSAGE; nothing a task
-  *     writes is visible to readers by virtue of existing on disk;
+  *     `data/part-<stamp>-<partition>-<task>.bin` (the task id is unique
+  *     per attempt within a Spark context, the per-write stamp across
+  *     contexts, whose task ids restart at 0) and reports it in its
+  *     commit MESSAGE; nothing a task writes is visible to readers by
+  *     virtue of existing on disk;
   *   - the driver's `commit(messages)` writes a NEW manifest listing
   *     exactly the committed files (append = old list + new, truncate =
   *     new only) to a temp name, then ATOMIC_MOVEs it onto `_manifest`
@@ -5061,9 +5063,14 @@ class GraftStoreStreamingWrite(path: String, schema: StructType,
   extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
+  // per-incarnation file prefix: a query restarted from its checkpoint
+  // in a new Spark context replays an epoch with task ids that restart
+  // at 0, and must not truncate the files that epoch already committed
+  private val stamp = java.util.UUID.randomUUID().toString.take(8)
+
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftStoreStreamingWriterFactory(path, schema, rollOn)
+    new GraftStoreStreamingWriterFactory(path, schema, stamp, rollOn)
 
   override def useCommitCoordinator(): Boolean = true
 
@@ -5120,7 +5127,7 @@ class GraftStoreStreamingWrite(path: String, schema: StructType,
 }
 
 class GraftStoreStreamingWriterFactory(path: String, schema: StructType,
-    rollOn: Seq[(Int, GraftStore.PartTerm)] = Seq.empty)
+    stamp: String, rollOn: Seq[(Int, GraftStore.PartTerm)] = Seq.empty)
   extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
@@ -5128,10 +5135,10 @@ class GraftStoreStreamingWriterFactory(path: String, schema: StructType,
       // per-partition-value rolling, epoch-stamped names: replayed or
       // aborted epochs delete exactly their own files
       new GraftStorePartitionedWriter(path, schema, partitionId, taskId,
-        rollOn, s"data/part-$partitionId-$taskId-e$epochId")
+        rollOn, s"data/part-$stamp-$partitionId-$taskId-e$epochId")
     else
       new GraftStoreDataWriter(path, schema, partitionId, taskId, None, None,
-        s"data/part-$partitionId-$taskId-e$epochId.bin")
+        s"data/part-$stamp-$partitionId-$taskId-e$epochId.bin")
 }
 
 case class GraftStoreCommitMessage(file: String, rows: Long,
@@ -5157,10 +5164,8 @@ case class GraftStoreMultiMessage(parts: Seq[GraftStoreCommitMessage])
   * file's entry, abort deletes them all. */
 class GraftStorePartitionedWriter(path: String, schema: StructType,
     partitionId: Int, taskId: Long, rollOn: Seq[(Int, GraftStore.PartTerm)],
-    namePrefix: String = null)
+    prefix: String)
   extends DataWriter[InternalRow] {
-  private val prefix =
-    if (namePrefix != null) namePrefix else s"data/part-$partitionId-$taskId"
   private val idxArr = rollOn.map(_._1).toArray
   private val terms = rollOn.map(_._2).toArray
   private val dts = idxArr.map(schema.fields(_).dataType)
@@ -5314,8 +5319,13 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
     replaceWhere: Option[Array[org.apache.spark.sql.sources.Filter]] = None)
   extends BatchWrite {
 
+  // write-unique file prefix: task ids restart in every Spark context, so
+  // task-derived names alone would let a later session's append truncate
+  // a live file an earlier session committed
+  private val stamp = java.util.UUID.randomUUID().toString.take(8)
+
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftStoreWriterFactory(path, schema, failFirstAttemptOf,
+    new GraftStoreWriterFactory(path, schema, stamp, failFirstAttemptOf,
       failAllAttemptsOf, rollOn)
 
   // at most one attempt per partition may deliver a commit message —
@@ -5440,28 +5450,29 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
 }
 
 class GraftStoreWriterFactory(path: String, schema: StructType,
-    failFirstAttemptOf: Option[Int], failAllAttemptsOf: Option[Int],
+    stamp: String, failFirstAttemptOf: Option[Int], failAllAttemptsOf: Option[Int],
     rollOn: Seq[(Int, GraftStore.PartTerm)] = Seq.empty)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     if (rollOn.nonEmpty)
-      new GraftStorePartitionedWriter(path, schema, partitionId, taskId, rollOn)
+      new GraftStorePartitionedWriter(path, schema, partitionId, taskId, rollOn,
+        s"data/part-$stamp-$partitionId-$taskId")
     else
       new GraftStoreDataWriter(path, schema, partitionId, taskId,
-        failFirstAttemptOf, failAllAttemptsOf)
+        failFirstAttemptOf, failAllAttemptsOf,
+        s"data/part-$stamp-$partitionId-$taskId.bin")
 }
 
-/** Length-framed UnsafeRow stream; file name is attempt-unique (taskId
-  * increments per attempt), so a retry never collides with its dead
-  * predecessor's bytes. */
+/** Length-framed UnsafeRow stream to `rel` (table-relative). Callers
+  * make the name attempt-unique (the task id increments per attempt,
+  * so a retry never collides with its dead predecessor's bytes) and
+  * write-unique (a per-write stamp, since task ids restart in every
+  * Spark context). */
 class GraftStoreDataWriter(path: String, schema: StructType, partitionId: Int,
     taskId: Long, failFirstAttemptOf: Option[Int],
-    failAllAttemptsOf: Option[Int],
-    relName: String = null)
+    failAllAttemptsOf: Option[Int], rel: String)
   extends DataWriter[InternalRow] {
 
-  private val rel =
-    if (relName != null) relName else s"data/part-$partitionId-$taskId.bin"
   private val file = new File(path, rel)
   file.getParentFile.mkdirs()
   private val out = new DataOutputStream(

@@ -117,6 +117,42 @@ class GraftStoreSpec extends SparkSuite {
     assert(readBack(path).count() == 10, "overwrite did not truncate")
   }
 
+  test("appends name files per write: files at the next append's part-<p>-<t> names stay untouched") {
+    import spark.implicits._
+    val path = tempTable()
+    writeDf(spark.range(0, 100, 1, 4).toDF("id"), path)
+    val root = graft.ops.Util.managedTempDir("graft_store_spec_plant_")
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.catalog.gplant", "graft.sources.GraftCatalog")
+    s2.conf.set("spark.sql.catalog.gplant.root", root)
+    s2.sql("CREATE TABLE gplant.t (id BIGINT, k BIGINT) PARTITIONED BY (k)")
+    s2.sql("INSERT INTO gplant.t SELECT id, id % 3 FROM range(0, 30, 1, 4)")
+    val ppath = s"$root/t"
+    // task ids restart at 0 in every Spark context, so a table written in
+    // an earlier session can hold live files at exactly the part-<p>-<t>
+    // names (plain writer) and part-<p>-<t>-p<i> names (partition-rolling
+    // writer) the next append's tasks take: plant them
+    val lastTask = spark.sparkContext.parallelize(0 until 4, 4)
+      .map(_ => org.apache.spark.TaskContext.get().taskAttemptId()).collect().max
+    val planted = for (p <- 0 until 4; t <- lastTask + 1 to lastTask + 32)
+      yield new File(path, s"data/part-$p-$t.bin")
+    val plantedP = for (p <- 0 until 4; t <- lastTask + 1 to lastTask + 32; i <- 0 until 3)
+      yield new File(ppath, s"data/part-$p-$t-p$i.bin")
+    (planted ++ plantedP).foreach(f =>
+      java.nio.file.Files.write(f.toPath, f.getName.getBytes("UTF-8")))
+    writeDf(spark.range(1000, 1100, 1, 4).toDF("id"), path, mode = "append")
+    s2.sql("INSERT INTO gplant.t SELECT id, id % 3 FROM range(1000, 1030, 1, 4)")
+    (planted ++ plantedP).foreach(f => assert(
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8") == f.getName,
+      s"append overwrote ${f.getName}"))
+    // every row of both writes reads back (a full scan, not the stats)
+    assert(readBack(path).select($"id").as[Long].collect().sorted.toSeq ==
+      (0L until 100L) ++ (1000L until 1100L))
+    assert(s2.sql("SELECT id, k FROM gplant.t").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
+      ((0L until 30L) ++ (1000L until 1030L)).map(i => (i, i % 3)))
+  }
+
   test("manifest stats skip disproved files at planning time") {
     import spark.implicits._
     import org.apache.spark.sql.sources.{LessThan, EqualTo}
