@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.DotProduct
 import graft.ops.{NormDiff, NormDiffCodegen, ShingleGenerator}
-import graft.plans.{AsOfJoinStrategy, RewritePowAsMultiply, RewriteWindowTopK, TopKPerGroupStrategy}
+import graft.plans.{AsOfJoinStrategy, HoistLiterals, RewritePowAsMultiply, RewriteWindowTopK, TopKPerGroupStrategy}
 
 /** The library's one-line installation point (SparkSessionExtensions — the
   * public extension hook):
@@ -23,6 +23,9 @@ import graft.plans.{AsOfJoinStrategy, RewritePowAsMultiply, RewriteWindowTopK, T
   *    word-n-gram Generator, planned through GenerateExec like explode)
   *  - the as-of join planner strategy (AsOfJoinPlan → AsOfJoinExec)
   *  - the pow(x,2) → x*x optimizer rewrite
+  *  - [[graft.plans.HoistLiterals]], which reads the primitive literals of
+  *    filters and projections from the generated class instead of its
+  *    source, so a query shape compiles once for all its parameters
   *
   * It also sizes the JVM's generated-class cache
   * (`spark.sql.codegen.cache.maxEntries`) to
@@ -77,5 +80,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Window is gone, so the pattern can't re-match and the batch stays
     // convergent
     ext.injectOptimizerRule(_ => RewriteWindowTopK)
+    HoistLiterals.install(ext)
   }
 }

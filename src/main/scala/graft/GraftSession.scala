@@ -20,10 +20,13 @@ object GraftSession {
     * cache in 4 segments of 25) is smaller than the five `llm_curate`
     * queries alone (78 distinct classes), so every repetition of a query
     * recompiled its stages. One pass over the whole registry at sf0.01
-    * compiles 4,141 distinct classes; 8192 holds that with slack for the
-    * uneven segment split while staying bounded: about 680 classes per
-    * registry pass come from literal-bearing source that changes on
-    * every call and would grow an unbounded cache for ever. */
+    * compiles about 3,900 distinct classes; 8192 holds that with slack
+    * for the uneven segment split while staying bounded: a second pass
+    * still adds about 690 entries, nearly all (640) for source already in
+    * the cache. The cache key is the class loader and the source, and
+    * every `newSession()` clone gets its own executor class loader, so
+    * the 46 registry queries that clone a session miss on every call and
+    * would grow an unbounded cache for ever. */
   val CodegenCacheEntries = 8192
 
   /** The cache size a context with `conf` gets: an explicit setting of
@@ -71,4 +74,7 @@ object GraftSession {
       .config("spark.ui.retainedDeadExecutors", "0")
       // a static conf: the first session's context fixes it for the JVM
       .config(CodegenCacheKey, CodegenCacheEntries.toLong)
+      // the harness runs under the same literal hoisting GraftExtensions
+      // installs, so specs and the oracle dump check what users run
+      .withExtensions(graft.plans.HoistLiterals.install)
 }

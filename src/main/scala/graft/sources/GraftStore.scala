@@ -3955,37 +3955,48 @@ object GraftStore {
       case _ => false
     }
 
-    /** (min, max, value) as comparable doubles for DoubleType, exact longs
-      * widened to double for int/long — safe because stats compare is only
-      * ever used to BUCKET files, and long→double is exact to 2^53 (the
-      * fixture/table ids); beyond that a collapsed compare degrades to
-      * Unknown-ish conservatism only when min==max tests are involved, so
-      * correctness is kept by the residual evaluation Spark always runs. */
-    private def cmp(dt: DataType, s: String): Double = dt match {
-      case DoubleType => s.toDouble
-      case _ => s.toLong.toDouble
+    /** How a file bound (a manifest min or max) compares with a filter
+      * value. All three are false when the two are unordered, as IEEE
+      * comparisons with NaN are. */
+    private final case class Side(lt: Boolean, eq: Boolean, gt: Boolean)
+    private def side(c: Int): Side = Side(c < 0, c == 0, c > 0)
+
+    /** Compares a bound string of a `dt` column with the filter value `v`,
+      * in the column's own order: doubles for double columns, exact longs
+      * for integral and temporal ones (their stats are longs, epoch micros
+      * or epoch days). None when `v` has no place in that order. Long
+      * values beyond 2^53 collapse when widened to double, so they are
+      * never widened: a decided file drops the residual filter (complete
+      * filter acceptance, DELETE, metadata-only aggregates), so a wrong
+      * AllRows or NoRows is a wrong answer. */
+    private def against(dt: DataType, v: Any): Option[String => Side] = dt match {
+      case DoubleType => v match {
+        case n: java.lang.Number if !n.doubleValue.isNaN =>
+          val x = n.doubleValue
+          Some { b => val m = b.toDouble; Side(m < x, m == x, m > x) }
+        case _ => None
+      }
+      case _ => exactLong(v).map(x => b => side(java.lang.Long.compare(b.toLong, x)))
     }
-    private def cmpValue(v: Any): Double = v match {
-      case n: java.lang.Number => n.doubleValue()
-      // temporal filter literals arrive as external Java objects (which
-      // flavor depends on spark.sql.datetime.java8API.enabled); convert
-      // to the same epoch-micros / epoch-days unit the manifest records
-      case t: java.sql.Timestamp =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils
-          .fromJavaTimestamp(t).toDouble
-      case i: java.time.Instant =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils
-          .instantToMicros(i).toDouble
-      case d: java.sql.Date =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils
-          .fromJavaDate(d).toDouble
-      case d: java.time.LocalDate =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils
-          .localDateToDays(d).toDouble
-      case dt: java.time.LocalDateTime =>
-        org.apache.spark.sql.catalyst.util.DateTimeUtils
-          .localDateTimeToMicros(dt).toDouble
-      case _ => Double.NaN
+
+    /** A filter value of an integral or temporal column as the long its
+      * stats record. Spark coerces the literal to the column's type before
+      * it pushes a filter, so other numbers stay undecided. */
+    private def exactLong(v: Any): Option[Long] = {
+      import org.apache.spark.sql.catalyst.util.DateTimeUtils
+      v match {
+        case n @ (_: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+            _: java.lang.Byte) => Some(n.asInstanceOf[java.lang.Number].longValue)
+        // temporal filter literals arrive as external Java objects (which
+        // flavor depends on spark.sql.datetime.java8API.enabled); convert
+        // to the same epoch-micros / epoch-days unit the manifest records
+        case t: java.sql.Timestamp => Some(DateTimeUtils.fromJavaTimestamp(t))
+        case i: java.time.Instant => Some(DateTimeUtils.instantToMicros(i))
+        case d: java.sql.Date => Some(DateTimeUtils.fromJavaDate(d).toLong)
+        case d: java.time.LocalDate => Some(DateTimeUtils.localDateToDays(d).toLong)
+        case t: java.time.LocalDateTime => Some(DateTimeUtils.localDateTimeToMicros(t))
+        case _ => None
+      }
     }
 
     def eval(f: Filter, e: FileEntry, schema: StructType): Tri =
@@ -4004,20 +4015,21 @@ object GraftStore {
         e.stats.get(c).flatMap(st =>
           schema.fields.find(_.name == c).filter(f => statable(f.dataType))
             .map(f => (st, f.dataType)))
-      // range predicate on column c: given (lo-ok, hi-ok) bounds checks
-      // over non-null values, fold in the null rules
-      def range(c: String, v: Any)(all: (Double, Double, Double) => Boolean)
-          (none: (Double, Double, Double) => Boolean): Tri =
+      // range predicate on column c: `all` and `none` test how the file's
+      // min and max compare with the value, over non-null values; fold
+      // in the null rules
+      def range(c: String, v: Any)(all: (Side, Side) => Boolean)
+          (none: (Side, Side) => Boolean): Tri =
         col(c) match {
           case Some((st, dt)) =>
-            val x = cmpValue(v)
-            if (x.isNaN) Unknown
-            else if (st.min.isEmpty) NoRows // every value null
-            else {
-              val (mn, mx) = (cmp(dt, st.min), cmp(dt, st.max))
-              if (none(mn, mx, x)) NoRows
-              else if (all(mn, mx, x) && (st.nulls == 0 || tol(c))) AllRows
-              else Unknown
+            against(dt, v) match {
+              case None => Unknown
+              case Some(_) if st.min.isEmpty => NoRows // every value null
+              case Some(cmp) =>
+                val (mn, mx) = (cmp(st.min), cmp(st.max))
+                if (none(mn, mx)) NoRows
+                else if (all(mn, mx) && (st.nulls == 0 || tol(c))) AllRows
+                else Unknown
             }
           case None => Unknown
         }
@@ -4032,7 +4044,7 @@ object GraftStore {
             case _ => Unknown
           }
         case EqualTo(c, v) =>
-          range(c, v)((mn, mx, x) => mn == x && mx == x)((mn, mx, x) => x < mn || x > mx)
+          range(c, v)((mn, mx) => mn.eq && mx.eq)((mn, mx) => mn.gt || mx.lt)
         // `PARTITION (k = v)` static-overwrite specs arrive as
         // EqualNullSafe. For a non-null literal it is EqualTo with one
         // extra certainty: an ALL-NULL file is provably NoRows (<=> is
@@ -4051,13 +4063,13 @@ object GraftStore {
             case _ => eval(EqualTo(c, v), e, schema, tol)
           }
         case GreaterThan(c, v) =>
-          range(c, v)((mn, _, x) => mn > x)((_, mx, x) => mx <= x)
+          range(c, v)((mn, _) => mn.gt)((_, mx) => mx.lt || mx.eq)
         case GreaterThanOrEqual(c, v) =>
-          range(c, v)((mn, _, x) => mn >= x)((_, mx, x) => mx < x)
+          range(c, v)((mn, _) => mn.gt || mn.eq)((_, mx) => mx.lt)
         case LessThan(c, v) =>
-          range(c, v)((_, mx, x) => mx < x)((mn, _, x) => mn >= x)
+          range(c, v)((_, mx) => mx.lt)((mn, _) => mn.gt || mn.eq)
         case LessThanOrEqual(c, v) =>
-          range(c, v)((_, mx, x) => mx <= x)((mn, _, x) => mn > x)
+          range(c, v)((_, mx) => mx.lt || mx.eq)((mn, _) => mn.gt)
         case In(c, vs) if vs.nonEmpty =>
           val tris = vs.toSeq.map(v => eval(EqualTo(c, v), e, schema, tol))
           if (tris.contains(AllRows)) AllRows // single-valued file, value present

@@ -13,13 +13,16 @@ class CodegenCacheSpec extends SparkSuite {
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   test("repeated single-stage queries hit the codegen cache: the second of two passes compiles nothing") {
-    // each k inlines a different literal into the stage's source, so each
-    // query is a distinct generated class; one task each keeps it cheap
+    // each k inlines a different substring position into the stage's
+    // source (graft.plans.HoistLiterals leaves it there: substring needs
+    // it foldable), so each query is a distinct generated class; one
+    // task each keeps it cheap
     val ks = 1 to 150
     def pass(): Unit = ks.foreach { k =>
-      val got = spark.range(0, 8, 1, 1).selectExpr(s"id * $k AS v")
-        .collect().map(_.getLong(0)).toSeq
-      assert(got == (0L until 8L).map(_ * k))
+      val got = spark.range(0, 8, 1, 1)
+        .selectExpr(s"substring(cast(id * 100 AS string), $k) AS v")
+        .collect().map(_.getString(0)).toSeq
+      assert(got == (0L until 8L).map(i => (i * 100).toString.drop(k - 1)))
     }
     val c0 = compiles
     pass()

@@ -214,4 +214,26 @@ class GraftCatalogSpec extends SparkSuite {
       catalog.loadTable(Identifier.of(Array("x/y"), "t"))
     }
   }
+
+  test("integral stats pruning is exact beyond 2^53: a decided file answers without a residual") {
+    // 2^53 and 2^53 + 1 are one double; compared through double, the
+    // 2^53 + 1 partition's file (min = max) decides AllRows for
+    // `k = 2^53`, and complete filter acceptance drops the residual
+    session.sql("DROP TABLE IF EXISTS g.big")
+    session.sql("CREATE TABLE g.big (k BIGINT, v STRING) PARTITIONED BY (k)")
+    session.sql("INSERT INTO g.big VALUES (9007199254740993, 'big'), (5, 'small')")
+    def ks(where: String): Seq[Long] =
+      session.sql(s"SELECT k FROM g.big WHERE $where").collect().map(_.getLong(0)).toSeq.sorted
+    val count = session.sql("SELECT count(*) FROM g.big WHERE k = 9007199254740992")
+      .head.getLong(0)
+    // every case is checked, so a failure names all the wrong answers
+    val wrong = Seq(
+      "k = 2^53" -> (ks("k = 9007199254740992"), Nil),
+      "count(*) where k = 2^53" -> (Seq(count), Seq(0L)),
+      "k IN (2^53)" -> (ks("k IN (9007199254740992)"), Nil),
+      "k > 2^53" -> (ks("k > 9007199254740992"), Seq(9007199254740993L)))
+      .filter { case (_, (got, want)) => got != want }
+    assert(wrong.isEmpty, wrong.mkString("; "))
+    assert(ks("k = 9007199254740993") == Seq(9007199254740993L))
+  }
 }
