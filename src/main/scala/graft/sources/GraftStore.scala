@@ -169,9 +169,10 @@ object GraftStore {
 
   /** Tiny per-file Bloom filter for STRING columns (256 bits, 2 probes,
     * Murmur3 over the UTF-8 bytes — deterministic across JVMs), carried
-    * in the manifest as 64 hex chars. Strings can't ride the min/max
-    * fields (arbitrary values would collide with the tab-format
-    * delimiters) but a fixed-width hash sketch can — and equality is
+    * in the manifest as 64 hex chars in [[KeySketch]]'s word format.
+    * Strings can't ride the min/max fields (arbitrary values would
+    * collide with the tab-format delimiters) but a fixed-width hash
+    * sketch can — and equality is
     * what string predicates overwhelmingly are. One-sided by
     * construction: absent ⇒ NoRows (skip the file), present ⇒ Unknown
     * (false positives just read the file; the residual filter still
@@ -182,29 +183,172 @@ object GraftStore {
   private[sources] object StringBloom {
     private val Bits = 256
     import scala.util.hashing.MurmurHash3
+    // `% Bits` of a non-negative int equals `& (Bits - 1)`: the same
+    // position rule as KeySketch, so folding stays exact
     private def probes(bytes: Array[Byte]): (Int, Int) = (
       (MurmurHash3.bytesHash(bytes, 0x9747b28c) & 0x7fffffff) % Bits,
       (MurmurHash3.bytesHash(bytes, 0x5f3759df) & 0x7fffffff) % Bits)
+    def empty: Array[Long] = new Array[Long](Bits / 64)
     def add(bits: Array[Long], bytes: Array[Byte]): Unit = {
       val (a, b) = probes(bytes)
       bits(a >> 6) |= 1L << (a & 63)
       bits(b >> 6) |= 1L << (b & 63)
     }
-    def hex(bits: Array[Long]): String =
-      bits.map(l => f"$l%016x").mkString
-    /** Bitwise OR of two bloom hexes (compaction stats merge). */
-    def orHex(a: String, b: String): String =
-      a.grouped(16).zip(b.grouped(16)).map { case (x, y) =>
-        f"${java.lang.Long.parseUnsignedLong(x, 16) | java.lang.Long.parseUnsignedLong(y, 16)}%016x"
-      }.mkString
     def mightContain(hexStr: String, v: String): Boolean = {
       val (a, b) = probes(v.getBytes(StandardCharsets.UTF_8))
-      def bit(i: Int): Boolean = {
-        val word = java.lang.Long.parseUnsignedLong(
-          hexStr.substring((i >> 6) * 16, (i >> 6) * 16 + 16), 16)
-        (word & (1L << (i & 63))) != 0
+      KeySketch.bit(hexStr, a) && KeySketch.bit(hexStr, b)
+    }
+  }
+
+  /** Per-file membership sketch for INT and LONG columns: the sibling of
+    * [[StringBloom]] in the same `bloom` sub-field (numeric columns left
+    * it empty before), so point lookups by id — `WHERE k = …`, `IN` —
+    * skip every file that cannot hold the key even when each file's
+    * min/max spans the whole key range (keys scattered over partitions).
+    *
+    * Format: 64-bit words as 16 hex chars each, bit `p` in word `p >> 6`;
+    * a sketch of `m` bits (a power of two, [[MinBits]] to [[MaxBits]])
+    * sets bits `(h1 + i*h2) & (m - 1)` for [[Probes]] probes, where h1
+    * and h2 are seeded Murmur3 of the value AS A LONG — deterministic
+    * across JVMs, and an int file and its int→long widened reading hash
+    * alike. Because positions are masks, halving a sketch is an OR of
+    * its two halves and keeps every set bit reachable: [[fold]] and
+    * [[or]] stay exactly one-sided at any size.
+    *
+    * Sizing ([[bitsFor]]): the power of two nearest [[BitsPerKey]] bits
+    * per distinct value (the file's HLL `ndv`, at most its rows), 7 to 14
+    * bits a key, ≈1 % false positives (4 % at worst). The floor is 2048
+    * bits, not less: below it a sketch saves fewer bytes than the line's
+    * other stats hold, so a small file's line costs the same whatever its
+    * row count (the manifest stays linear in files), and an OR of many
+    * small files' sketches (child refs) still prunes. Only identifier-like
+    * columns earn one — ndv at least half the file's rows; a low-ndv
+    * column recurs in every file and would prune nothing — and none when
+    * min == max (the range already decides) or when even the cap would
+    * answer "maybe" for more than [[MaxFpr]] of absent keys (≈8k
+    * distinct values per file). Writers build at the cap and fold down
+    * at commit; compaction rebuilds from the packed rows (folding a big
+    * file's sketch to a small one's size would saturate it).
+    *
+    * One-sided: absent ⇒ NoRows, present ⇒ Unknown, never AllRows. */
+  private[graft] object KeySketch {
+    val MinBits = 2048
+    val MaxBits = 1 << 15
+    private val Probes = 7
+    private val BitsPerKey = 10
+    private val MaxFpr = 0.25
+    import org.apache.spark.unsafe.hash.Murmur3_x86_32
+    @inline private def h1(v: Long): Int = Murmur3_x86_32.hashLong(v, 0x2f6b5c1d)
+    // odd stride: with a power-of-two size the probes never cycle early
+    @inline private def h2(v: Long): Int = Murmur3_x86_32.hashLong(v, 0x6a09e667) | 1
+
+    /** A cap-sized sketch, the writers' build buffer. */
+    def empty(bits: Int = MaxBits): Array[Long] = new Array[Long](bits / 64)
+
+    def add(bits: Array[Long], v: Long): Unit = {
+      val mask = bits.length * 64 - 1
+      val a = h1(v); val b = h2(v)
+      var i = 0
+      while (i < Probes) {
+        val p = (a + i * b) & mask
+        bits(p >>> 6) |= 1L << (p & 63)
+        i += 1
       }
-      bit(a) && bit(b)
+    }
+
+    private[sources] def bit(hexStr: String, p: Int): Boolean = {
+      val w = (p >>> 6) * 16
+      (java.lang.Long.parseUnsignedLong(hexStr.substring(w, w + 16), 16) &
+        (1L << (p & 63))) != 0
+    }
+
+    def mightContain(hexStr: String, v: Long): Boolean = {
+      val mask = hexStr.length * 4 - 1
+      val a = h1(v); val b = h2(v)
+      var i = 0
+      while (i < Probes) {
+        if (!bit(hexStr, (a + i * b) & mask)) return false
+        i += 1
+      }
+      true
+    }
+
+    /** Expected false-positive rate of `n` keys in `m` bits. */
+    def fpr(n: Double, m: Int): Double =
+      math.pow(1 - math.exp(-Probes * n / m), Probes)
+
+    /** The sketch size for an int/long column of a file with `rows` rows,
+      * from its stats; 0 = the column gets no sketch. */
+    def bitsFor(st: ColStats, rows: Long): Int =
+      if (st.ndv.isEmpty || st.min.isEmpty || st.min == st.max || rows <= 0) 0
+      else {
+        val n = math.min(NdvHll.estimate(NdvHll.fromHex(st.ndv)), rows)
+        if (2 * n < rows || fpr(n.toDouble, MaxBits) > MaxFpr) 0
+        else {
+          val want = math.min(n * BitsPerKey, MaxBits.toLong).toInt
+          val below = Integer.highestOneBit(want)
+          // nearest power of two, in the geometric sense
+          val near = if (want.toLong * want > 2L * below * below) below << 1 else below
+          math.min(MaxBits, math.max(MinBits, near))
+        }
+      }
+
+    /** Halve `bits` down to `m` bits (OR of halves). */
+    def fold(bits: Array[Long], m: Int): Array[Long] = {
+      var cur = bits
+      while (cur.length * 64 > m) {
+        val half = cur.length / 2
+        val c = cur
+        cur = Array.tabulate(half)(i => c(i) | c(i + half))
+      }
+      cur
+    }
+
+    def hex(bits: Array[Long]): String = {
+      val sb = new java.lang.StringBuilder(bits.length * 16)
+      bits.foreach { l =>
+        val h = java.lang.Long.toHexString(l)
+        var pad = 16 - h.length
+        while (pad > 0) { sb.append('0'); pad -= 1 }
+        sb.append(h)
+      }
+      sb.toString
+    }
+
+    def words(hexStr: String): Array[Long] =
+      Array.tabulate(hexStr.length / 16)(i =>
+        java.lang.Long.parseUnsignedLong(hexStr.substring(16 * i, 16 * i + 16), 16))
+
+    /** Bitwise OR of two sketches of the same value space (stats merges),
+      * the larger folded to the smaller's size first. */
+    def or(a: String, b: String): String = {
+      val m = math.min(a.length, b.length) * 4
+      val (x, y) = (fold(words(a), m), fold(words(b), m))
+      hex(Array.tabulate(x.length)(i => x(i) | y(i)))
+    }
+
+    /** True when a merged sketch would answer "maybe" for more than
+      * [[MaxFpr]] of absent keys: it costs manifest bytes and prunes
+      * almost nothing. */
+    def saturated(hexStr: String): Boolean = {
+      val ws = words(hexStr)
+      val set = ws.map(java.lang.Long.bitCount).sum.toDouble
+      math.pow(set / (ws.length * 64), Probes) > MaxFpr
+    }
+
+    /** A power-of-two run of at least 256 bits (a [[StringBloom]]) in
+      * lowercase hex (what [[hex]] writes), checked when a manifest line
+      * is parsed. */
+    def wellFormed(hexStr: String): Boolean = {
+      val n = hexStr.length
+      var ok = n >= 64 && (n & (n - 1)) == 0
+      var i = 0
+      while (ok && i < n) {
+        val ch = hexStr.charAt(i)
+        ok = (ch >= '0' && ch <= '9') || (ch >= 'a' && ch <= 'f')
+        i += 1
+      }
+      ok
     }
   }
 
@@ -339,7 +483,8 @@ object GraftStore {
   // pre-evolution manifests, the 5th only present when the file carries
   // a deletion vector (trailing empty fields don't survive split).
   // Per-column sub-fields: min:max:nulls[:bloom[:ndv[:mono[:sum]]]] —
-  // bloom is the string-equality sketch (empty for numerics), ndv the
+  // bloom is the membership sketch (StringBloom for strings, KeySketch
+  // for identifier-like int/long columns, empty otherwise), ndv the
   // HLL hex, mono the writer-verified sortedness marker (emitted as "1"
   // only when true; an empty slot when a later field follows), sum the
   // exact wrap-around int64 sum (round 11; emitted only when recorded).
@@ -378,7 +523,7 @@ object GraftStore {
       val stats = if (parts.length < 3 || parts(2).isEmpty) Map.empty[String, ColStats]
       else parts(2).split(';').map { kv =>
         val Array(c, v) = kv.split('=')
-        v.split(':') match {
+        val cs = v.split(':') match {
           case Array(mn, mx, nulls) => c -> ColStats(mn, mx, nulls.toLong)
           case Array(mn, mx, nulls, bloom) =>
             c -> ColStats(mn, mx, nulls.toLong, bloom)
@@ -389,6 +534,15 @@ object GraftStore {
           case Array(mn, mx, nulls, bloom, ndv, mono, sum) =>
             c -> ColStats(mn, mx, nulls.toLong, bloom, ndv, mono == "1", sum)
         }
+        // a sketch decides which files a lookup skips: a damaged one must
+        // fail the read, never prune at random
+        val bloom = cs._2.bloom
+        if (bloom.nonEmpty && !KeySketch.wellFormed(bloom))
+          throw new IllegalStateException(
+            s"malformed membership sketch for column '$c' of ${parts(0)} in " +
+              s"the manifest (${bloom.length} chars; expected a power-of-two " +
+              "run of lowercase hex, at least 64)")
+        cs
       }.toMap
       FileEntry(parts(0), parts(1).toLong, stats,
         if (parts.length >= 4) parts(3).toInt else -1,
@@ -633,7 +787,8 @@ object GraftStore {
     * Anything unprovable — a member missing the column, unknown null
     * counts, a non-schema pseudo-stat with differing values — drops the
     * column (or field) from the child: Unknown, the child is read. Mono
-    * never survives (children interleave files); blooms don't fold. */
+    * never survives (children interleave files); membership sketches OR
+    * together, and an integral one that the OR saturates is dropped. */
   private def mergeChildStats(schema: StructType,
       es: Seq[FileEntry]): Map[String, ColStats] = {
     import org.apache.spark.sql.types._
@@ -672,10 +827,15 @@ object GraftStore {
             sts.map(_.ndv).reduce(NdvHll.mergeHex) else ""
           val sum = if (sts.forall(_.sum.nonEmpty))
             sts.map(_.sum.toLong).foldLeft(0L)(_ + _).toString else ""
-          // string-equality blooms OR together (fixed-size bitsets), so
-          // a point predicate on a string column can skip whole children
-          val bloom = if (sts.forall(_.bloom.nonEmpty))
-            sts.map(_.bloom).reduce(StringBloom.orHex) else ""
+          // membership sketches OR together (folded to the smallest
+          // member's size), so a point predicate can skip whole children;
+          // many members' keys saturate an integral sketch, which then
+          // costs parent bytes and prunes nothing
+          val ored = if (sts.forall(_.bloom.nonEmpty))
+            sts.map(_.bloom).reduce(KeySketch.or) else ""
+          val bloom =
+            if (ored.nonEmpty && kind.contains(0) && KeySketch.saturated(ored)) ""
+            else ored
           c -> ColStats(mn, mx, nulls, bloom = bloom, ndv = ndv,
             mono = false, sum = sum)
         }
@@ -2270,24 +2430,33 @@ object GraftStore {
     (s, e)
   }
 
+  /** The table or the snapshot a read names does not exist (never
+    * committed, expired, or no table at the path). An
+    * IllegalArgumentException, as before, to callers; the scan builder's
+    * optional manifest answers decline on exactly this and nothing else. */
+  final class MissingSnapshotException(msg: String) extends IllegalArgumentException(msg)
+
+  private def missingSnapshot(path: String, v: Option[Long]) =
+    new MissingSnapshotException(v match {
+      case Some(x) => s"no snapshot v$x at $path (never committed, or expired)"
+      case None => s"no graft-store table at $path"
+    })
+
   private[sources] def selectWithEq(path: String, versionAsOf: Option[Long],
       fromVersion: Option[Long]): (StructType, Seq[FileEntry], Seq[EqDelete]) = {
     val (schema, current, eqDels) = versionAsOf match {
       case Some(v) =>
         readManifestFull(new File(path, s"$ManifestName.v$v"))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no snapshot v$v at $path (never committed, or expired)"))
+          .getOrElse(throw missingSnapshot(path, versionAsOf))
       case None =>
         readManifestFull(new File(path, ManifestName))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no graft-store table at $path"))
+          .getOrElse(throw missingSnapshot(path, None))
     }
     val entries = fromVersion match {
       case Some(v) =>
         val (_, baseEntries, baseEq) =
           readManifestFull(new File(path, s"$ManifestName.v$v"))
-            .getOrElse(throw new IllegalArgumentException(
-              s"no snapshot v$v at $path (never committed, or expired)"))
+            .getOrElse(throw missingSnapshot(path, fromVersion))
         val base = baseEntries.map(e => e.file -> e.dv).toMap
         // a file whose DELETION VECTOR changed is content-mutated even
         // though its name survives — append-only means names AND dvs
@@ -2329,10 +2498,7 @@ object GraftStore {
       case None => new File(path, ManifestName)
     }
     val (schema, inline, eqDels, children) = readManifestStructured(f)
-      .getOrElse(throw new IllegalArgumentException(versionAsOf match {
-        case Some(v) => s"no snapshot v$v at $path (never committed, or expired)"
-        case None => s"no graft-store table at $path"
-      }))
+      .getOrElse(throw missingSnapshot(path, versionAsOf))
     val kept = children.filter(c =>
       StatsPruning.evalAll(pushed, FileEntry(c.file, c.rows, c.stats),
         schema) != StatsPruning.NoRows)
@@ -3715,7 +3881,8 @@ object GraftStore {
     (a.keySet ++ b.keySet).flatMap { c =>
       (a.get(c), b.get(c)) match {
         case (Some(x), Some(y)) =>
-          // blooms OR together; one side lacking its bloom poisons the
+          // membership sketches OR together (the larger folded to the
+          // smaller's size); one side lacking its sketch poisons the
           // merged one (absence could no longer prove absence). NDV
           // sketches union by register max; one side lacking its sketch
           // poisons the estimate the same way. Monotonicity SURVIVES a
@@ -3759,7 +3926,7 @@ object GraftStore {
             }
           val bloom =
             if (x.bloom.nonEmpty && y.bloom.nonEmpty)
-              StringBloom.orHex(x.bloom, y.bloom)
+              KeySketch.or(x.bloom, y.bloom)
             else ""
           val ndv =
             if (x.ndv.nonEmpty && y.ndv.nonEmpty) NdvHll.mergeHex(x.ndv, y.ndv)
@@ -3778,6 +3945,11 @@ object GraftStore {
       }
     }.toMap
   }
+
+  /** The next frame's length in a data file, -1 at its end (committed
+    * files end exactly on a frame boundary). */
+  private def readFrameLength(in: DataInputStream): Int =
+    try in.readInt() catch { case _: java.io.EOFException => -1 }
 
   /** Table-level OPTIMIZE: bin-pack the current snapshot's small data
     * files, one partition key at a time, into ~`targetBytes` files and
@@ -3866,26 +4038,78 @@ object GraftStore {
     val toPack = bins.zipWithIndex.filter(_._1.length >= 2)
     if (toPack.isEmpty) return -1L
     val stamp = java.util.UUID.randomUUID().toString.take(8)
+    // key sketches are rebuilt from the packed rows, never OR-folded: a
+    // big file's sketch folded to a small one's size saturates. Per bin,
+    // the merged stats pick the int/long columns that earn one and its
+    // size (KeySketch.bitsFor); a column that earns none drops its sketch
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val merged = toPack.map { case (bin, i) =>
+      i -> bin.map(_.stats).reduce(mergeStats(schema, _, _)) }.toMap
+    val integralCols = schema.fields.collect {
+      case f if f.dataType == IntegerType || f.dataType == LongType => f.name
+    }.toSet
+    // per bin: its files, their row arity, and (ordinal, physical int
+    // lane, bits) for each column to sketch
+    val tasks = toPack.map { case (bin, i) =>
+      val arity = if (bin.head.cols > 0) bin.head.cols else schema.size
+      val rows = bin.map(_.rows).sum
+      val plan = schema.fields.zipWithIndex.toSeq.flatMap { case (f, ord) =>
+        val intLane = f.dataType == IntegerType ||
+          bin.head.narrow.contains(packNarrow(ord, NarrowIntToLong))
+        val bits = merged(i).get(f.name).filter(_ => integralCols(f.name) && ord < arity)
+          .map(KeySketch.bitsFor(_, rows)).getOrElse(0)
+        if (bits > 0) Seq((ord, intLane, bits)) else Seq.empty
+      }
+      (i, bin.map(_.file).toSeq, arity, plan)
+    }.toSeq
     // one task per bin: read-concat-write its files (shared-filesystem
-    // path locally; GET+multipart-PUT on an object store)
+    // path locally; GET+multipart-PUT on an object store). A bin with
+    // sketched columns walks the frames it copies and hashes their keys
     val packed = spark.sparkContext
-      .parallelize(toPack.map { case (bin, i) =>
-        (i, bin.map(_.file).toSeq) }.toSeq, math.max(1, toPack.size))
-      .map { case (i, files) =>
+      .parallelize(tasks, math.max(1, toPack.size))
+      .map { case (i, files, arity, plan) =>
         val rel = s"data/compact-$stamp-$i.bin"
-        val out = new BufferedOutputStream(
-          new FileOutputStream(new File(path, rel)))
+        val out = new DataOutputStream(new BufferedOutputStream(
+          new FileOutputStream(new File(path, rel))))
+        val sketches = plan.map { case (_, _, bits) => KeySketch.empty(bits) }
+        val row = new UnsafeRow(arity)
         files.foreach { f =>
-          Files.copy(Paths.get(path, f), out) // frame-preserving byte copy
+          if (plan.isEmpty) Files.copy(Paths.get(path, f), out) // frame-preserving byte copy
+          else {
+            val in = new DataInputStream(new BufferedInputStream(
+              new FileInputStream(new File(path, f))))
+            try {
+              var len = readFrameLength(in)
+              while (len >= 0) {
+                val bytes = new Array[Byte](len)
+                in.readFully(bytes)
+                out.writeInt(len); out.write(bytes)
+                row.pointTo(bytes, len)
+                var j = 0
+                while (j < plan.length) {
+                  val (ord, intLane, _) = plan(j)
+                  if (!row.isNullAt(ord)) KeySketch.add(sketches(j),
+                    if (intLane) row.getInt(ord).toLong else row.getLong(ord))
+                  j += 1
+                }
+                len = readFrameLength(in)
+              }
+            } finally in.close()
+          }
         }
         out.close()
-        (i, rel)
+        (i, (rel, plan.map(_._1).zip(sketches.map(KeySketch.hex)).toMap))
       }.collect().toMap
     val rewritten = bins.zipWithIndex.map { case (bin, i) =>
       packed.get(i) match {
-        case Some(rel) => FileEntry(rel, bin.map(_.rows).sum,
-          bin.map(_.stats).reduce(mergeStats(schema, _, _)), bin.head.cols,
-          narrow = bin.head.narrow, nested = bin.head.nested)
+        case Some((rel, sketches)) =>
+          // an int/long column carries its rebuilt sketch, or none
+          val stats = merged(i).map { case (c, st) =>
+            c -> (if (!integralCols(c)) st
+              else st.copy(bloom = sketches.getOrElse(schema.fieldIndex(c), "")))
+          }
+          FileEntry(rel, bin.map(_.rows).sum, stats, bin.head.cols,
+            narrow = bin.head.narrow, nested = bin.head.nested)
         case None => bin.head
       }
     }.toSeq ++ outOfScope ++ dvEntries
@@ -4043,8 +4267,20 @@ object GraftStore {
               if (StringBloom.mightContain(st.bloom, v)) Unknown else NoRows
             case _ => Unknown
           }
+        // integral equality: min/max first, then the key sketch, which
+        // can only turn an undecided file into a skipped one
         case EqualTo(c, v) =>
-          range(c, v)((mn, mx) => mn.eq && mx.eq)((mn, mx) => mn.gt || mx.lt)
+          range(c, v)((mn, mx) => mn.eq && mx.eq)((mn, mx) => mn.gt || mx.lt) match {
+            case Unknown => col(c) match {
+              case Some((st, IntegerType | LongType)) if st.bloom.nonEmpty =>
+                exactLong(v) match {
+                  case Some(x) if !KeySketch.mightContain(st.bloom, x) => NoRows
+                  case _ => Unknown
+                }
+              case _ => Unknown
+            }
+            case decided => decided
+          }
         // `PARTITION (k = v)` static-overwrite specs arrive as
         // EqualNullSafe. For a non-null literal it is EqualTo with one
         // extra certainty: an ALL-NULL file is provably NoRows (<=> is
@@ -5515,13 +5751,19 @@ class GraftStoreDataWriter(path: String, schema: StructType, partitionId: Int,
   private val bloomIdx = schema.fields.zipWithIndex.collect {
     case (f, i) if f.dataType == StringType && safeName(f) => i
   }
-  private val blooms = bloomIdx.map(_ => Array.fill(4)(0L))
+  private val blooms = bloomIdx.map(_ => GraftStore.StringBloom.empty)
   // per-column HLL NDV sketches (numeric + string stat columns): the
   // write-time pass the manifest needs so table-level distinct-count
   // estimates exist at PLANNING time with zero data I/O (see NdvHll)
   private val ndvIdx = statIdx ++ bloomIdx
   private val ndvs = ndvIdx.map(_ => GraftStore.NdvHll.empty)
   private val ndvPos: Map[Int, Int] = ndvIdx.zipWithIndex.toMap
+  // int/long columns build a cap-sized key sketch while rows stream;
+  // commit folds it to the size its ndv earns, or drops it (KeySketch)
+  private val keyIdx = statIdx.filter(i =>
+    schema.fields(i).dataType == IntegerType || schema.fields(i).dataType == LongType)
+  private val keyPos: Array[Int] = Array.tabulate(schema.length)(keyIdx.indexOf(_))
+  private val keySketches = keyIdx.map(_ => GraftStore.KeySketch.empty())
   private val minL = Array.fill(schema.length)(Long.MaxValue)
   private val maxL = Array.fill(schema.length)(Long.MinValue)
   private val minD = Array.fill(schema.length)(Double.PositiveInfinity)
@@ -5578,6 +5820,7 @@ class GraftStoreDataWriter(path: String, schema: StructType, partitionId: Int,
             prevL(i) = v
             sums(i) += v
             GraftStore.NdvHll.addLong(ndvs(ndvPos(i)), v)
+            if (keyPos(i) >= 0) GraftStore.KeySketch.add(keySketches(keyPos(i)), v)
           case _ =>
             val v = row.getLong(i)
             if (v < minL(i)) minL(i) = v
@@ -5586,6 +5829,7 @@ class GraftStoreDataWriter(path: String, schema: StructType, partitionId: Int,
             prevL(i) = v
             sums(i) += v
             GraftStore.NdvHll.addLong(ndvs(ndvPos(i)), v)
+            if (keyPos(i) >= 0) GraftStore.KeySketch.add(keySketches(keyPos(i)), v)
         }
       }
       j += 1
@@ -5616,7 +5860,7 @@ class GraftStoreDataWriter(path: String, schema: StructType, partitionId: Int,
           if (nonNaN(i) == 0) "NaN" else minD(i).toString,
           if (nanSeen(i)) "NaN" else maxD(i).toString)
         else (minL(i).toString, maxL(i).toString)
-      f.name -> GraftStore.ColStats(mn, mx, nulls(i),
+      val st = GraftStore.ColStats(mn, mx, nulls(i),
         ndv = GraftStore.NdvHll.hex(ndvs(ndvPos(i))),
         mono = mono(i) && nonNull(i) > 0,
         // exact wrap-around sums make sense for int/long only: a double
@@ -5624,9 +5868,13 @@ class GraftStoreDataWriter(path: String, schema: StructType, partitionId: Int,
         sum = if (nonNull(i) == 0 ||
             (f.dataType != IntegerType && f.dataType != LongType)) ""
           else sums(i).toString)
+      val bits =
+        if (keyPos(i) < 0) 0 else GraftStore.KeySketch.bitsFor(st, rows)
+      f.name -> (if (bits == 0) st else st.copy(bloom = GraftStore.KeySketch.hex(
+        GraftStore.KeySketch.fold(keySketches(keyPos(i)), bits))))
     }.toMap ++ bloomIdx.zipWithIndex.map { case (i, k) =>
       schema.fields(i).name -> GraftStore.ColStats("", "", nulls(i),
-        GraftStore.StringBloom.hex(blooms(k)),
+        GraftStore.KeySketch.hex(blooms(k)),
         GraftStore.NdvHll.hex(ndvs(ndvPos(i))))
     }.toMap
   private val failThis = failAllAttemptsOf.contains(partitionId) ||
@@ -5736,7 +5984,7 @@ class GraftStoreScanBuilder(path: String, versionAsOf: Option[Long] = None,
         case None =>
           val (v, latest) = GraftStore.readLatestVersioned(path)
           latest.map { case (sch, es) => (v, sch, es) }
-      } catch { case _: Exception => None }
+      } catch { case _: GraftStore.MissingSnapshotException => None }
     observed match {
       case Some((v, sch, entries)) if v > 0 =>
         def tris(f: Filter) = entries.map(e =>
@@ -5792,7 +6040,7 @@ class GraftStoreScanBuilder(path: String, versionAsOf: Option[Long] = None,
     if (residual.nonEmpty || onlyFiles.isDefined) return None
     val (schema, allEntries, eqDels) = try GraftStore.selectWithEq(path,
       versionAsOf.orElse(pinnedVersion), fromVersion)
-      catch { case _: Exception => return None }
+      catch { case _: GraftStore.MissingSnapshotException => return None }
     // a delete-vectored file's min/max may no longer be attained (the
     // extreme row may be deleted) and its null counts may be unknown (-1):
     // COUNT(*) from live `rows` would still be exact, but refusing the

@@ -123,4 +123,20 @@ class ManifestBudgetSpec extends SparkSuite {
     assert(after < before / 2,
       s"manifest must shrink with the file count: $before -> $after")
   }
+
+  test("a key sketch grows a 3.4k-row file's line by at most the cap per sketched column") {
+    val path = tempTable(); write(path, 3400, 1)
+    val entry = GraftStore.readManifest(path).get._2.head
+    val line = new String(java.nio.file.Files.readAllBytes(
+        new File(path, GraftStore.ManifestName).toPath), "UTF-8")
+      .split('\n').find(_.startsWith(entry.file + "\t")).get
+    // int/long columns carry min/max; string blooms (fixed 64 hex) do not
+    val sketches = entry.stats.values.filter(s => s.min.nonEmpty && s.bloom.nonEmpty)
+      .map(_.bloom.length)
+    assert(sketches.size == 1, s"expected the id column's sketch alone: $sketches")
+    assert(sketches.forall(_ <= GraftStore.KeySketch.MaxBits / 4))
+    // the rest of the line stays inside the per-line budget above
+    assert(line.length - sketches.sum < 1536,
+      s"line without its key sketch is ${line.length - sketches.sum} B")
+  }
 }

@@ -132,4 +132,100 @@ class PruningFuzzSpec extends SparkSuite {
     assert(nonEmpty >= 30, s"only $nonEmpty/80 predicates matched rows — " +
       "the generator drifted into a vacuous battery")
   }
+
+  test("seeded integral equality / IN fuzz: key sketches prune soundly across compaction, DV delete, widening and pre-sketch files") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261019L)
+    // `u` scatters over every k-range file, so min/max never prune it and
+    // only the key sketch can; every 17th row is null
+    def uOf(k: Long): java.lang.Integer =
+      if (k % 17 == 0) null else Int.box((k * 7919 % 100003).toInt)
+    val schema = StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("u", IntegerType, nullable = true)))
+    def rows(lo: Long, hi: Long) = spark.createDataFrame(spark.sparkContext
+      .parallelize((lo until hi).map(k => Row(k, uOf(k))), 4), schema)
+      .repartitionByRange(((hi - lo) / 250).toInt, col("k"))
+    val root = graft.ops.Util.managedTempDir("graft_prune_fuzz_keys_")
+    val stPath = s"$root/st"
+    rows(0L, 3000L).write.format("graft.sources.GraftStore")
+      .option("path", stPath).mode("overwrite").save()
+    val st = () => spark.read.format("graft.sources.GraftStore")
+      .option("path", stPath).load()
+    var stage = 0
+    /** The store against the same rows in parquet, for 20 predicates over
+      * present and absent keys; `long` = u is a bigint now. */
+    def check(what: String, expectRows: DataFrame, long: Boolean): Unit = {
+      stage += 1
+      val pqPath = s"$root/pq$stage"
+      expectRows.write.parquet(pqPath)
+      val pq = spark.read.parquet(pqPath)
+      val present = pq.select("u").where(col("u").isNotNull).collect().map(r =>
+        if (long) r.getLong(0) else r.getInt(0).toLong)
+      def key(): Column = {
+        val v = if (rnd.nextBoolean()) present(rnd.nextInt(present.length))
+          else rnd.nextInt(100003).toLong
+        if (long) lit(v) else lit(v.toInt)
+      }
+      def p(): Column = rnd.nextInt(6) match {
+        case 0 | 1 => col("u") === key()
+        case 2 => col("u") <=> key()
+        case 3 => col("u").isin(key(), key(), key())
+        case 4 => col("u") === key() && col("k") < lit(rnd.nextInt(4200).toLong)
+        case _ => col("u") === key() || col("u") === key()
+      }
+      def canon(d: DataFrame, c: Column): Seq[String] =
+        d.filter(c).collect().map(_.toString).sorted.toSeq
+      (1 to 20).foreach { i =>
+        val c = p()
+        assert(canon(st(), c) == canon(pq, c), s"$what: predicate #$i diverged: $c")
+      }
+      // the sketch really prunes here: a present key plans fewer files
+      // than the table holds
+      val files = GraftStore.readManifest(stPath).get._2.size
+      val v: Any = if (long) present.head else present.head.toInt
+      val planned = new graft.sources.GraftStoreScan(stPath,
+        Array(org.apache.spark.sql.sources.EqualTo("u", v))).planInputPartitions().length
+      assert(planned < files, s"$what: a present key planned $planned of $files files")
+    }
+    var truth = rows(0L, 3000L).toDF()
+    check("fresh files", truth, long = false)
+
+    // pre-sketch files: strip every other entry's sketch, as a manifest
+    // written before integral sketches reads; then append sketched files
+    val (v0, Some((sch0, es0))) = GraftStore.readLatestVersioned(stPath)
+    GraftStore.writeManifestAtomicAt(stPath, v0 + 1, sch0, es0.zipWithIndex.map {
+      case (e, i) if i % 2 == 0 =>
+        e.copy(stats = e.stats.map { case (c, cs) => c -> cs.copy(bloom = "") })
+      case (e, _) => e
+    }, op = "append")
+    rows(3000L, 3600L).write.format("graft.sources.GraftStore")
+      .option("path", stPath).mode("append").save()
+    truth = rows(0L, 3600L).toDF()
+    check("pre-sketch files mixed in", truth, long = false)
+
+    // compaction packs sketched and pre-sketch files alike and rebuilds
+    // each packed file's sketch from its rows
+    val before = GraftStore.readManifest(stPath).get._2.size
+    assert(GraftStore.compact(spark, stPath, 40L * 1024) > 0)
+    assert(GraftStore.readManifest(stPath).get._2.size < before)
+    check("after compact", truth, long = false)
+
+    // a DV delete keeps each file's sketch (a superset stays sound)
+    GraftStore.deleteWhereDV(spark, stPath, $"k" % 5 === 0)
+    assert(GraftStore.readManifest(stPath).get._2.exists(_.dv.nonEmpty))
+    truth = truth.where($"k" % 5 =!= 0)
+    check("after DV delete", truth, long = false)
+
+    // int -> long: old int files and new long files hash keys alike
+    GraftStore.widenColumn(stPath, "u")
+    val longSchema = StructType(Seq(schema.fields(0), schema.fields(1).copy(dataType = LongType)))
+    spark.createDataFrame(spark.sparkContext.parallelize((3600L until 4200L).map(k =>
+        Row(k, Option(uOf(k)).map(_.toLong).orNull)), 4), longSchema)
+      .repartitionByRange(2, col("k"))
+      .write.format("graft.sources.GraftStore").option("path", stPath).mode("append").save()
+    truth = truth.select($"k", $"u".cast("long").as("u"))
+      .union(rows(3600L, 4200L).select($"k", $"u".cast("long").as("u")))
+    check("after int->long widening", truth, long = true)
+  }
 }
