@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.DotProduct
 import graft.ops.{NormDiff, NormDiffCodegen, ShingleGenerator}
-import graft.plans.{AsOfJoinStrategy, HoistLiterals, RewritePowAsMultiply, RewriteWindowTopK, TopKPerGroupStrategy}
+import graft.plans.{AsOfJoinStrategy, PhysicalRules, RewritePowAsMultiply, RewriteWindowTopK, TopKPerGroupStrategy}
 
 /** The library's one-line installation point (SparkSessionExtensions — the
   * public extension hook):
@@ -26,6 +26,8 @@ import graft.plans.{AsOfJoinStrategy, HoistLiterals, RewritePowAsMultiply, Rewri
   *  - [[graft.plans.HoistLiterals]], which reads the primitive literals of
   *    filters and projections from the generated class instead of its
   *    source, so a query shape compiles once for all its parameters
+  *  - [[graft.plans.DriverRead]], which reads a single-split store scan
+  *    on the driver when it is `collect()`ed, so the read runs no job
   *
   * It also sizes the JVM's generated-class cache
   * (`spark.sql.codegen.cache.maxEntries`) to
@@ -80,6 +82,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Window is gone, so the pattern can't re-match and the batch stays
     // convergent
     ext.injectOptimizerRule(_ => RewriteWindowTopK)
-    HoistLiterals.install(ext)
+    PhysicalRules.install(ext)
   }
 }

@@ -74,7 +74,7 @@ object GraftSession {
       .config("spark.ui.retainedDeadExecutors", "0")
       // a static conf: the first session's context fixes it for the JVM
       .config(CodegenCacheKey, CodegenCacheEntries.toLong)
-      // the harness runs under the same literal hoisting GraftExtensions
+      // the harness runs under the same physical rules GraftExtensions
       // installs, so specs and the oracle dump check what users run
-      .withExtensions(graft.plans.HoistLiterals.install)
+      .withExtensions(graft.plans.PhysicalRules.install)
 }

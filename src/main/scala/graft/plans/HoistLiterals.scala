@@ -1,11 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
 import org.apache.spark.sql.types._
 
 /** A non-null primitive literal that generated code reads from the
@@ -38,15 +37,9 @@ case class BoundLiteral(lit: Literal) extends LeafExpression {
   * expressions need a foldable child (LIKE and regex patterns, window
   * frame bounds, `lag` offsets, `round` scale), and those are left
   * alone. It runs on the physical plan, after pushdown and pruning
-  * have seen the real literals, and before `CollapseCodegenStages`. */
+  * have seen the real literals, and before `CollapseCodegenStages`;
+  * [[PhysicalRules]] installs it. */
 object HoistLiterals extends Rule[SparkPlan] {
-  /** Installs the rule in a session's extensions; GraftExtensions and
-    * GraftSession.builder both install it through here. */
-  def install(ext: SparkSessionExtensions): Unit =
-    ext.injectColumnar(_ => new ColumnarRule {
-      override def preColumnarTransitions: Rule[SparkPlan] = HoistLiterals
-    })
-
   override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
     case f: FilterExec =>
       val c = hoist(f.condition)

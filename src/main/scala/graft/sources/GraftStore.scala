@@ -6450,6 +6450,14 @@ class GraftStoreScan(path: String,
     * UnsafeRow null bitset word. */
   private def rowWidth: Long = schema.fields.map(_.dataType.defaultSize).sum + 8L
 
+  /** Estimated bytes of the files this scan reads (live rows ×
+    * [[rowWidth]], the weights [[splitsOf]] packs by): one split's when
+    * it plans one. Unknown when a legacy entry lacks its row count. */
+  private[graft] def estimatedBytes: Long = {
+    val sel = selected
+    if (sel.exists(_.rows < 0)) Long.MaxValue else sel.map(_.rows).sum * rowWidth
+  }
+
   /** MANIFEST-DERIVED PLANNING STATISTICS — the ANALYZE-free CBO feed.
     * Called by Spark after pushdown, so row counts and column stats
     * reflect the files that survived manifest skipping. Everything here

@@ -127,11 +127,14 @@ class GraftStoreKeySketchSpec extends SparkSuite {
     // min/max alone decide nothing for a key: every file spans the range
     assert(entries.forall(e => e.stats("k").min.toLong < 700 && e.stats("k").max.toLong > 13000))
     val lookup = session.sql("SELECT k, g, v FROM gks.lookup WHERE k = 7007")
-    var rows = Array.empty[org.apache.spark.sql.Row]
-    val tasks = tasksOf { rows = lookup.collect() }
+    val (rows, jobs) = DriverReads.jobsOf(spark)(lookup.collect())
     assert(rows.map(_.getLong(0)).toSeq == Seq(7007L))
     val desc = scanOf(lookup).description()
     assert(desc.contains("files=1/5") && desc.contains("splits=1"), desc)
+    // collect() reads the one split on the driver (graft.plans.DriverRead);
+    // the job path the plan keeps runs one task
+    assert(jobs == 0, s"point lookup collect() ran $jobs jobs")
+    val tasks = tasksOf { lookup.queryExecution.toRdd.count() }
     assert(tasks == 1, s"point lookup ran $tasks tasks")
     // IN over two keys opens at most their two files
     val in = session.sql("SELECT v FROM gks.lookup WHERE k IN (7, 13993)")

@@ -121,6 +121,8 @@ class PruningFuzzSpec extends SparkSuite {
       val p = pred()
       val expect = canon(pq, p)
       val got = canon(st, p)
+      assert(got == DriverReads.canon(DriverReads.viaJob(st.filter(p))),
+        s"fuzz predicate #$i: collect() and the job path diverged: $p")
       assert(got == expect,
         s"fuzz predicate #$i diverged: $p — store ${got.length} rows vs " +
           s"parquet ${expect.length}; first diff: " +
@@ -176,10 +178,21 @@ class PruningFuzzSpec extends SparkSuite {
       }
       def canon(d: DataFrame, c: Column): Seq[String] =
         d.filter(c).collect().map(_.toString).sorted.toSeq
-      (1 to 20).foreach { i =>
-        val c = p()
-        assert(canon(st(), c) == canon(pq, c), s"$what: predicate #$i diverged: $c")
+      var onDriver = 0
+      // the 20 fuzzed predicates, then a key within the one file holding
+      // k < 100 in every state: a single-split read
+      val probe = col("u") === (if (long) lit(7919L) else lit(7919)) && col("k") < lit(100L)
+      ((1 to 20).map(i => (i, p())) :+ ((21, probe))).foreach { case (i, c) =>
+        val got = canon(st(), c)
+        assert(got == canon(pq, c), s"$what: predicate #$i diverged: $c")
+        // single-split reads collect on the driver (graft.plans.DriverRead):
+        // the job path must agree with them
+        val df = st().filter(c)
+        assert(got == DriverReads.canon(DriverReads.viaJob(df)),
+          s"$what: predicate #$i: collect() and the job path diverged: $c")
+        if (DriverReads.onDriver(df)) onDriver += 1
       }
+      assert(onDriver >= 1, s"$what: no predicate read on the driver")
       // the sketch really prunes here: a present key plans fewer files
       // than the table holds
       val files = GraftStore.readManifest(stPath).get._2.size
