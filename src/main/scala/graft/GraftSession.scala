@@ -21,12 +21,14 @@ object GraftSession {
     * queries alone (78 distinct classes), so every repetition of a query
     * recompiled its stages. One pass over the whole registry at sf0.01
     * compiles about 3,900 distinct classes; 8192 holds that with slack
-    * for the uneven segment split while staying bounded: a second pass
-    * still adds about 690 entries, nearly all (640) for source already in
-    * the cache. The cache key is the class loader and the source, and
-    * every `newSession()` clone gets its own executor class loader, so
-    * the 46 registry queries that clone a session miss on every call and
-    * would grow an unbounded cache for ever. */
+    * for the uneven segment split while staying bounded. The cache key is
+    * the class loader and the source, and every session gets its own
+    * executor class loader. The query builders therefore make their
+    * sessions through `graft.ops.Util.child`, one child per conf set,
+    * reused across calls, so a second pass at sf0.01 adds about 70
+    * entries: classes whose source changes per call, and the stages of
+    * streaming queries, which Spark runs in a fresh clone of their
+    * session on every start. */
   val CodegenCacheEntries = 8192
 
   /** The cache size a context with `conf` gets: an explicit setting of

@@ -307,7 +307,7 @@ object Extras {
     * substituted plan is semantically invisible. Plan-shape and staleness
     * bounds in PlanShapeSpec. */
   /** Build + register the lineitem rollup MV (once per source file set)
-    * and return a CLONED session with the rewrite rule injected — the
+    * and return a CHILD session with the rewrite rule injected — the
     * shared session stays rule-free so no OTHER registry query's bench
     * number silently measures the MV path instead of its own plan.
     * (MvCatalog registration is JVM-wide either way; it is inert without
@@ -343,10 +343,7 @@ object Extras {
         files = MvCatalog.inputFiles(lr),
         rows = s.read.parquet(mvPath).count()))
     }
-    val s2 = s0.newSession()
-    s2.experimental.extraOptimizations =
-      s2.experimental.extraOptimizations :+ RewriteAggToMv
-    s2
+    Util.child(s0, rules = Seq(RewriteAggToMv))
   }
 
   val qMvRewrite: Q = (s0, dir) => {
@@ -427,12 +424,9 @@ object Extras {
     MvCatalog.register(key, MvCatalog.MvDef(s"$root/mv_v2",
       MvCatalog.fingerprint(lr2).get, Set("o_orderstatus"), measures,
       MvCatalog.inputFiles(lr2)))
-    // rule on a CLONE so the shared session's other queries stay unrewritten
-    val s2 = s.newSession()
-    s2.experimental.extraOptimizations =
-      s2.experimental.extraOptimizations :+ RewriteAggToMv
+    // rule on a CHILD so the shared session's other queries stay unrewritten
     // the user query over the grown fact table — served by the maintained MV
-    s2.read.parquet(fact)
+    Util.child(s, rules = Seq(RewriteAggToMv)).read.parquet(fact)
       .groupBy($"o_orderstatus")
       .agg(dsum($"o_totalprice").as("sum_price"), count(lit(1)).as("n_rows"))
       .orderBy($"o_orderstatus")
@@ -452,7 +446,7 @@ object Extras {
     * invisible. */
   private def ensureFineLineitemMv(s0: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.SparkSession = {
-    val s = ensureLineitemMv(s0, dir) // the coarse MV + a rule-injected clone
+    val s = ensureLineitemMv(s0, dir) // the coarse MV + a rule-injected child
     import s.implicits._
     import graft.plans.MvCatalog
     val src = table(s0, dir, "lineitem")
@@ -537,10 +531,7 @@ object Extras {
           "cnt" -> "cnt"),
         rows = s0.read.parquet(mvPath).count()))
     }
-    val s2 = s0.newSession()
-    s2.experimental.extraOptimizations =
-      s2.experimental.extraOptimizations :+ RewriteAggToMv
-    s2
+    Util.child(s0, rules = Seq(RewriteAggToMv))
   }
 
   val qMvJoin: Q = (s0, dir) => {

@@ -222,19 +222,17 @@ object Joins {
     * table and shuffling only the ~fraction that can join — with zero
     * manual work beyond leaving the optimizer enabled (exactness is
     * unconditional: false positives just travel to the join and lose
-    * there). Runs in a cloned session (conf-isolation precedent:
+    * there). Runs in a child session (conf-isolation precedent:
     * q_layout_compact) because the fixture-sized scan sits below the
     * 10 GB default application-side threshold that gates the rewrite on
     * real clusters; broadcast is disabled so the plan is the shuffle join
     * the rule targets. PlanShapeSpec pins `might_contain` into the
     * executed plan. */
   val qJoinBloom: Q = (s, dir) => {
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    s2.conf.set(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "1024")
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s2 = Util.child(s, confs = Map(
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1024",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
     import s2.implicits._
     val urgent = table(s2, dir, "orders")
       .filter($"o_orderpriority" === "1-URGENT")
@@ -292,7 +290,7 @@ object Joins {
     *     bucket (`SelectedBucketsCount 1 out of 8`) with no runtime
     *     machinery at all — bucket pruning is static metadata.
     *
-    * Cloned session to disable auto-broadcast (the fixture dims are
+    * Child session to disable auto-broadcast (the fixture dims are
     * tiny; at 100 TB both sides would exceed the threshold and SMJ is
     * what the planner picks anyway) and to opt into the sorted-scan
     * property: since 3.0 Spark only trusts per-file order under
@@ -304,9 +302,9 @@ object Joins {
     * content is invariant to the storage layout. */
   val qJoinBucketed: Q = (s, dir) => {
     val (ot, ct) = bucketedTables(s, dir)
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    val s2 = Util.child(s, confs = Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true"))
     import s2.implicits._
     val o = s2.table(ot)
     val c = s2.table(ct)
@@ -356,11 +354,14 @@ object Joins {
     * it; the engine's job is to keep stats fresh, not to hand-order SQL.
     * PlanShapeSpec pins the reorder (lineitem is the OUTERMOST join leaf
     * in the optimized plan, despite being first in the query text). */
+  /** Cost-based optimizer with join reordering (also q_store_cbo's). */
+  private[ops] val cboConfs = Map(
+    "spark.sql.cbo.enabled" -> "true",
+    "spark.sql.cbo.joinReorder.enabled" -> "true")
+
   val qCboReorder: Q = (s, dir) => {
     val (lt, ot, ct) = cboTables(s, dir)
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.cbo.enabled", "true")
-    s2.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+    val s2 = Util.child(s, confs = cboConfs)
     import s2.implicits._
     val l = s2.table(lt); val o = s2.table(ot); val c = s2.table(ct)
     l.join(o, l("l_orderkey") === o("o_orderkey"))

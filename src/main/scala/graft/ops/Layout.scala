@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import Util._
 
@@ -131,11 +131,28 @@ object Layout {
       .orderBy($"id_a", $"id_b")
   }
 
-  /** "fragDir|compDir" pairs already materialized this JVM, keyed by
-    * (session UUID, fixture dir) — the write happens exactly once.
-    * private[graft] so the compaction spec can count the actual files. */
-  private[graft] val compactedDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
+  /** (fragmented dir, compacted dir), written once per (session, fixture
+    * dir); private[graft] so the compaction spec can count the files. */
+  private[graft] def compactedDirs(s: SparkSession, dir: String): (String, String) =
+    Util.staged(s, dir, "layout_compact") {
+      import s.implicits._
+      val frag = Util.managedTempDir("graft_frag_")
+      val comp = Util.managedTempDir("graft_compact_")
+      // over-fragment: 64 round-robin shards of a small table
+      table(s, dir, "documents")
+        .select($"doc_id", $"lang", $"text", $"n_chars")
+        .repartition(64)
+        .write.mode("overwrite").parquet(frag)
+      // The bin-size scanner confs live in a CHILD session (same
+      // SparkContext, isolated SQLConf), so queries planned concurrently
+      // on the caller's session — a real pattern here, e.g. qSimPq's
+      // parallel fits — can never observe the 4 MB scan setting.
+      Util.child(s, confs = Map(
+        "spark.sql.files.maxPartitionBytes" -> (4L << 20).toString,
+        "spark.sql.files.openCostInBytes" -> "1024"))
+        .read.parquet(frag).write.mode("overwrite").parquet(comp)
+      (frag, comp)
+    }
 
   /** Small-file COMPACTION — the other half of table maintenance next to
     * Z-order: an OPTIMIZE-style bin-packing rewrite of an over-fragmented
@@ -156,27 +173,7 @@ object Layout {
     * LayoutCompactionSpec (the oracle can't see the filesystem). */
   val qLayoutCompact: Q = (s, dir) => {
     import s.implicits._
-    val path = compactedDirs.computeIfAbsent(
-      s"${Util.sessionKey(s)}:$dir", _ => {
-        val frag = Util.managedTempDir("graft_frag_")
-        val comp = Util.managedTempDir("graft_compact_")
-        // over-fragment: 64 round-robin shards of a small table
-        table(s, dir, "documents")
-          .select($"doc_id", $"lang", $"text", $"n_chars")
-          .repartition(64)
-          .write.mode("overwrite").parquet(frag)
-        // The bin-size scanner confs live in a CLONED session (same
-        // SparkContext, isolated SQLConf), so queries planned concurrently
-        // on the caller's session — a real pattern here, e.g. qSimPq's
-        // parallel fits — can never observe the temporary 4 MB scan
-        // setting. Nothing to restore; the clone is discarded.
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.files.maxPartitionBytes", (4L << 20).toString)
-        s2.conf.set("spark.sql.files.openCostInBytes", "1024")
-        s2.read.parquet(frag).write.mode("overwrite").parquet(comp)
-        s"$frag|$comp"
-      })
-    s.read.parquet(path.split('|')(1))
+    s.read.parquet(compactedDirs(s, dir)._2)
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),
         sum($"doc_id").as("docsum"),

@@ -257,10 +257,6 @@ object LlmOpsExt {
       .orderBy($"probe_id", $"rn")
   }
 
-  /** (vector table, centroid table) dirs already written this JVM. */
-  private val ivfStoredWritten =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]
-
   /** STORED IVF INDEX (round 8) — q_sim_ivf with the index as TABLES
     * instead of a per-query recomputation, the q_pipeline_incr_stored
     * pattern applied to ANN: the centroid sidecar (nlist rows of one
@@ -281,28 +277,25 @@ object LlmOpsExt {
     * identical. */
   val qSimIvfStored: Q = (s, dir) => {
     import s.implicits._
-    val (vecPath, centPath) = ivfStoredWritten.computeIfAbsent(
-      s"${Util.sessionKey(s)}:$dir", _ => {
-        val root = Util.managedTempDir("graft_ivf_vec_")
-        val cd = Util.managedTempDir("graft_ivf_cent_")
-        val e = emb(s, dir)
-        // vectors PARTITIONED BY cell: per-value file rolling single-
-        // values `label` per file, which is what the scan's cluster-like
-        // detection needs to advertise it for runtime pruning
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.givf", "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.givf.root", root)
-        emb(s2, dir).createOrReplaceTempView("ivf_vecs")
-        s2.sql(
-          """CREATE TABLE givf.v PARTITIONED BY (label) AS
-            |SELECT vec_id, label, emb FROM ivf_vecs""".stripMargin)
-        val vd = s"$root/v"
-        centroidsOf(e)
-          .repartition(1)
-          .write.format("graft.sources.GraftStore").option("path", cd)
-          .mode("overwrite").save()
-        (vd, cd)
-      })
+    val (vecPath, centPath) = Util.staged(s, dir, "ivf_stored") {
+      val root = Util.managedTempDir("graft_ivf_vec_")
+      val cd = Util.managedTempDir("graft_ivf_cent_")
+      val e = emb(s, dir)
+      // vectors PARTITIONED BY cell: per-value file rolling single-
+      // values `label` per file, which is what the scan's cluster-like
+      // detection needs to advertise it for runtime pruning
+      val s2 = Util.child(s, Map("givf" -> root))
+      emb(s2, dir).createOrReplaceTempView("ivf_vecs")
+      s2.sql(
+        """CREATE TABLE givf.v PARTITIONED BY (label) AS
+          |SELECT vec_id, label, emb FROM ivf_vecs""".stripMargin)
+      val vd = s"$root/v"
+      centroidsOf(e)
+        .repartition(1)
+        .write.format("graft.sources.GraftStore").option("path", cd)
+        .mode("overwrite").save()
+      (vd, cd)
+    }
     val vecs = s.read.format("graft.sources.GraftStore")
       .option("path", vecPath).load()
     val cent = s.read.format("graft.sources.GraftStore")
@@ -638,10 +631,6 @@ object LlmOpsExt {
         org.apache.spark.sql.graft.GraftSql.expression(embCol), cbs, sub))
   }
 
-  /** (codes table, centroid table, codebooks) staged this JVM. */
-  private val ivfpqIndex = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, Seq[Seq[Seq[Double]]])]
-
   /** IVF+PQ composed — the production FAISS `IVFx,PQy` layout (round 18,
     * verdict item 6), with the index STAGED the way a production service
     * runs it (the q_sim_ivf_stored precedent): the PQ codebooks and the
@@ -660,30 +649,27 @@ object LlmOpsExt {
   val qSimIvfPq: Q = (s, dir) => {
     import s.implicits._
     val m = 4; val sub = 16; val k = 16
-    val (codesPath, centPath, codebooks) = ivfpqIndex.computeIfAbsent(
-      s"${Util.sessionKey(s)}:$dir", _ => {
-        val root = Util.managedTempDir("graft_ivfpq_codes_")
-        val cd = Util.managedTempDir("graft_ivfpq_cent_")
-        val cbs = pqCodebooks(s, dir, m, sub, k)
-        val cbl = typedlit(cbs)
-        // encode once: per-value file rolling single-values `label` per
-        // file — the layout the probed-cell scan prunes on
-        val s2 = s.newSession()
-        s2.conf.set("spark.sql.catalog.gipq", "graft.sources.GraftCatalog")
-        s2.conf.set("spark.sql.catalog.gipq.root", root)
-        emb(s2, dir).select($"vec_id", $"label",
-          pqEncodeExpr($"emb", cbs, m, sub).as("codes"))
-          .createOrReplaceTempView("ivfpq_codes_src")
-        s2.sql(
-          """CREATE TABLE gipq.c PARTITIONED BY (label) AS
-            |SELECT vec_id, label, codes FROM ivfpq_codes_src""".stripMargin)
-        // exact per-label centroids (identical math to q_sim_ivf)
-        centroidsOf(emb(s, dir))
-          .repartition(1)
-          .write.format("graft.sources.GraftStore").option("path", cd)
-          .mode("overwrite").save()
-        (s"$root/c", cd, cbs)
-      })
+    val (codesPath, centPath, codebooks) = Util.staged(s, dir, "ivfpq") {
+      val root = Util.managedTempDir("graft_ivfpq_codes_")
+      val cd = Util.managedTempDir("graft_ivfpq_cent_")
+      val cbs = pqCodebooks(s, dir, m, sub, k)
+      val cbl = typedlit(cbs)
+      // encode once: per-value file rolling single-values `label` per
+      // file — the layout the probed-cell scan prunes on
+      val s2 = Util.child(s, Map("gipq" -> root))
+      emb(s2, dir).select($"vec_id", $"label",
+        pqEncodeExpr($"emb", cbs, m, sub).as("codes"))
+        .createOrReplaceTempView("ivfpq_codes_src")
+      s2.sql(
+        """CREATE TABLE gipq.c PARTITIONED BY (label) AS
+          |SELECT vec_id, label, codes FROM ivfpq_codes_src""".stripMargin)
+      // exact per-label centroids (identical math to q_sim_ivf)
+      centroidsOf(emb(s, dir))
+        .repartition(1)
+        .write.format("graft.sources.GraftStore").option("path", cd)
+        .mode("overwrite").save()
+      (s"$root/c", cd, cbs)
+    }
     ivfPqProbe(s, dir, codesPath, centPath, codebooks)
   }
 
@@ -751,11 +737,6 @@ object LlmOpsExt {
       .orderBy($"probe_id", $"rn")
   }
 
-  /** Incremental-index staging cache: (codes table, centroid table,
-    * codebooks) per (session, corpus). */
-  private val ivfpqIncrIndex = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, Seq[Seq[Seq[Double]]])]
-
   /** The growth split shared by BOTH incremental index families (dense
     * IVF+PQ over vec_id, sparse postings over doc_id): id % 5 == 0 (20%
     * of the corpus) arrives AFTER the index was built — held out of
@@ -786,7 +767,7 @@ object LlmOpsExt {
     * and (c) the probe output over both layouts is identical. */
   private[graft] def ivfPqIncrStaged(s: SparkSession, dir: String)
       : (String, String, Seq[Seq[Seq[Double]]]) =
-    ivfpqIncrIndex.computeIfAbsent(s"${Util.sessionKey(s)}:$dir", _ => {
+    Util.staged(s, dir, "ivfpq_incr") {
       import s.implicits._
       val m = 4; val sub = 16; val k = 16
       val root = Util.managedTempDir("graft_ivfpqi_root_")
@@ -799,9 +780,7 @@ object LlmOpsExt {
         .write.format("graft.sources.GraftStore").option("path", cd)
         .mode("overwrite").save()
       val cbl = typedlit(cbs)
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.gipqi", "graft.sources.GraftCatalog")
-      s2.conf.set("spark.sql.catalog.gipqi.root", root)
+      val s2 = Util.child(s, Map("gipqi" -> root))
       emb(s2, dir).filter($"vec_id" % IncrGrowthMod =!= 0)
         .select($"vec_id", $"label", pqEncodeExpr($"emb", cbs, m, sub).as("codes"))
         .createOrReplaceTempView("ivfpqi_codes_src")
@@ -815,7 +794,7 @@ object LlmOpsExt {
         .createOrReplaceTempView("ivfpqi_incr_src")
       s2.sql("INSERT INTO gipqi.c SELECT vec_id, label, codes FROM ivfpqi_incr_src")
       (s"$root/c", cd, cbs)
-    })
+    }
 
   /** Frozen-model encode of a new batch: PQ codes from the frozen
     * codebooks, cell (`label` column) from the nearest frozen centroid
@@ -1172,10 +1151,6 @@ object LlmOpsExt {
       .orderBy($"doc_a", $"doc_b")
   }
 
-  /** Staged postings-table path this JVM, keyed (session, corpus). */
-  private val sparseIndex =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** SPARSE-SIM STORED INDEX (round 19, verdict item 6) — the tf-idf
     * postings staged the way the dense family already stages IVF/PQ
     * (q_sim_ivf_stored precedent): the whole build prefix — tokenize →
@@ -1259,14 +1234,12 @@ object LlmOpsExt {
 
   private[graft] def sparseStagedIndex(s: SparkSession,
       dir: String): String =
-    sparseIndex.computeIfAbsent(s"${Util.sessionKey(s)}:$dir", _ => {
+    Util.staged(s, dir, "sparse_index") {
       val root = Util.managedTempDir("graft_sparse_idx_")
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.gsprs", "graft.sources.GraftCatalog")
-      s2.conf.set("spark.sql.catalog.gsprs.root", root)
+      val s2 = Util.child(s, Map("gsprs" -> root))
       stageSparsePostings(s2, "gsprs", table(s2, dir, "documents"))
       s"$root/postings"
-    })
+    }
 
   /** q_sim_sparse as a PROBE over the staged index: read the bucketed
     * postings, salt, join, aggregate, normalize — no tokenize, no tf/df
@@ -1303,10 +1276,6 @@ object LlmOpsExt {
       .orderBy($"doc_a", $"doc_b")
   }
 
-  /** Incrementally-grown sparse index path, keyed (session, corpus). */
-  private val sparseIncrIndex =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** INCREMENTAL SPARSE-INDEX MAINTENANCE (round 19) — the text-side
     * sibling of q_sim_ivfpq_incr: grow the staged postings index by a
     * document batch WITHOUT retraining the model. The frozen model here
@@ -1331,11 +1300,9 @@ object LlmOpsExt {
     * FULLY oracle-checkable: DuckDB recomputes idf over the base subset
     * and scores old ∪ new pairs with it. */
   private[graft] def sparseIncrStagedIndex(s: SparkSession, dir: String): String =
-    sparseIncrIndex.computeIfAbsent(s"${Util.sessionKey(s)}:$dir", _ => {
+    Util.staged(s, dir, "sparse_incr") {
       val root = Util.managedTempDir("graft_sparse_incr_")
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.catalog.gspri", "graft.sources.GraftCatalog")
-      s2.conf.set("spark.sql.catalog.gspri.root", root)
+      val s2 = Util.child(s, Map("gspri" -> root))
       import s2.implicits._
       val docs = table(s2, dir, "documents")
       // ---- base build: the shared staging, restricted to the base ----
@@ -1377,7 +1344,7 @@ object LlmOpsExt {
         """INSERT INTO gspri.postings
           |SELECT top_tid, doc_id, tid, w, g, ssq FROM sparse_incr_batch""".stripMargin)
       s"$root/postings"
-    })
+    }
 
   /** All-pairs probe over the incrementally-grown index: old ∪ new
     * documents under the frozen base-corpus idf. */

@@ -296,10 +296,6 @@ object Pipelines {
       .orderBy($"user_id")
   }
 
-  /** Hive-layout tables already backfilled this JVM, keyed by
-    * (session, fixture dir) — the qSrcJdbc memoization pattern. */
-  private val backfilled = new java.util.concurrent.ConcurrentHashMap[String, String]
-
   /** Partition backfill via DYNAMIC partition overwrite — the restatement
     * primitive (INSERT OVERWRITE one partition, leave the rest untouched):
     * orders land partitioned by o_year, then ONE year is rewritten with
@@ -311,19 +307,18 @@ object Pipelines {
     * survived byte-for-byte and the restated one changed. */
   val qEtlBackfill: Q = (s, dir) => {
     import s.implicits._
-    val path = backfilled.computeIfAbsent(
-      s"${Util.sessionKey(s)}:$dir", _ => {
-        val d = Util.managedTempDir("graft_backfill_")
-        val base = table(s, dir, "orders")
-          .select($"o_orderkey", $"o_custkey", $"o_totalprice",
-            year($"o_orderdate").as("o_year"))
-        base.write.partitionBy("o_year").mode("overwrite").parquet(d)
-        base.filter($"o_year" === 1996)
-          .withColumn("o_totalprice", $"o_totalprice" + 1000.0)
-          .write.partitionBy("o_year").mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic").parquet(d)
-        d
-      })
+    val path = Util.staged(s, dir, "backfill") {
+      val d = Util.managedTempDir("graft_backfill_")
+      val base = table(s, dir, "orders")
+        .select($"o_orderkey", $"o_custkey", $"o_totalprice",
+          year($"o_orderdate").as("o_year"))
+      base.write.partitionBy("o_year").mode("overwrite").parquet(d)
+      base.filter($"o_year" === 1996)
+        .withColumn("o_totalprice", $"o_totalprice" + 1000.0)
+        .write.partitionBy("o_year").mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").parquet(d)
+      d
+    }
     s.read.parquet(path)
       .groupBy($"o_year")
       .agg(count(lit(1)).as("n_orders"), dsum($"o_totalprice").as("sum_price"))

@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 
 /** Shared helpers for all query modules.
@@ -131,6 +133,105 @@ object Util {
     id
   }
 
+  // Child sessions. A builder that needs its own catalogs, confs or
+  // optimizer rules runs them in a child of the caller's session, never
+  // in the caller's session itself. Each distinct conf set gets ONE child
+  // per parent, made on first use and reused by every later call: Spark
+  // gives every session UUID its own executor class loader, and the
+  // generated-class cache is keyed on the loader, so a session made per
+  // call would recompile every stage of its query on every call (and
+  // stay pinned by the `table` memo above).
+  private final case class ChildKey(catalogs: Map[String, String],
+      confs: Map[String, String], rules: Seq[Rule[LogicalPlan]],
+      extensions: Boolean)
+  private val children = new java.util.WeakHashMap[SparkSession,
+    java.util.concurrent.ConcurrentHashMap[ChildKey, SparkSession]]
+
+  /** The child of `s` for one conf set, made with `newSession()` on the
+    * first call and returned by every later call with an equal conf set.
+    *
+    * @param catalogs GraftCatalog name -> root: an absolute path is used
+    *   as given, anything else names the prefix of a managed temp dir made
+    *   with the child. The root is fixed for the child's life, because
+    *   `CatalogManager` caches the catalog instance; a builder that needs
+    *   a fresh table per call drops and re-creates it under that root.
+    * @param rules optimizer rules appended to the child's
+    *   `extraOptimizations`
+    * @param extensions build the child with [[graft.GraftExtensions]]
+    *   (SQL views over GraftCatalog, `table_changes`), which a
+    *   `newSession()` child lacks unless the parent was built with them
+    */
+  def child(s: SparkSession, catalogs: Map[String, String] = Map.empty,
+      confs: Map[String, String] = Map.empty,
+      rules: Seq[Rule[LogicalPlan]] = Nil,
+      extensions: Boolean = false): SparkSession = {
+    val ofParent = children.synchronized {
+      children.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap)
+    }
+    ofParent.computeIfAbsent(ChildKey(catalogs, confs, rules, extensions), k => {
+      val c =
+        if (k.extensions) SparkSession.builder()
+          .master(s.sparkContext.master)
+          .withExtensions(new graft.GraftExtensions())
+          .config("spark.sql.shuffle.partitions",
+            s.conf.get("spark.sql.shuffle.partitions"))
+          .config("spark.sql.session.timeZone", "UTC")
+          .create()
+        else s.newSession()
+      k.catalogs.foreach { case (name, root) =>
+        c.conf.set(s"spark.sql.catalog.$name", "graft.sources.GraftCatalog")
+        c.conf.set(s"spark.sql.catalog.$name.root",
+          if (new java.io.File(root).isAbsolute) root else managedTempDir(root))
+      }
+      k.confs.foreach { case (key, v) => c.conf.set(key, v) }
+      c.experimental.extraOptimizations ++= k.rules
+      c
+    })
+  }
+
+  /** `batch`'s rows as a DataFrame of `s`, for a foreachBatch body. Spark
+    * runs each stream in a fresh clone of its session, so work done in
+    * the batch's own session runs under a new executor class loader, and
+    * recompiles every stage, on every start of the stream; re-homed in a
+    * session that outlives the stream, the body's jobs reuse its loader. */
+  def rehome(s: SparkSession, batch: DataFrame): DataFrame =
+    s.createDataFrame(batch.rdd, batch.schema)
+
+  /** Root directory of catalog `name` in a [[child]] session. */
+  def catalogRoot(s: SparkSession, name: String): String =
+    s.conf.get(s"spark.sql.catalog.$name.root")
+
+  // Fixture staging: a builder that writes a fixture (a store table, a
+  // Derby table, binary files, a registered rollup) does so once per
+  // (parent session, fixture dir) and every later call reuses it. The
+  // map is not locked while a fixture builds, so one staging step may
+  // call another; concurrent callers of one key wait for the first.
+  private final class Once(build: () => AnyRef) { lazy val value: AnyRef = build() }
+  private val stagedValues =
+    new java.util.concurrent.ConcurrentHashMap[String, Once]
+
+  /** `build`'s value, computed once per (session, fixture dir, tag). A
+    * failed build is retried by the next call. */
+  def staged[T <: AnyRef](s: SparkSession, dir: String, tag: String)(build: => T): T =
+    stagedValues.computeIfAbsent(s"${sessionKey(s)}:$dir:$tag",
+      _ => new Once(() => build)).value.asInstanceOf[T]
+
+  /** Forget every fixture staged under `tag`, so the next call rebuilds
+    * it (for a test that committed onto a shared fixture). */
+  def unstage(tag: String): Unit =
+    stagedValues.keySet.removeIf(_.endsWith(s":$tag"))
+
+  /** Delete `path` and everything under it, best effort. */
+  def deleteTree(path: java.nio.file.Path): Unit =
+    try {
+      java.nio.file.Files.walk(path)
+        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach { p =>
+          try java.nio.file.Files.deleteIfExists(p)
+          catch { case _: Exception => () }
+        }
+    } catch { case _: Exception => () }
+
   // ONE static shutdown hook draining a concurrent list (not one hook per
   // directory): the per-directory form is unbounded if a caller ever
   // creates temp dirs per-query instead of per-(session, dir) memo entry.
@@ -139,17 +240,7 @@ object Util {
   private lazy val tempDirHookInstalled: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       var d = managedTempDirs.poll()
-      while (d != null) {
-        try {
-          java.nio.file.Files.walk(d)
-            .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach { p =>
-              try java.nio.file.Files.deleteIfExists(p)
-              catch { case _: Exception => () }
-            }
-        } catch { case _: Exception => () }
-        d = managedTempDirs.poll()
-      }
+      while (d != null) { deleteTree(d); d = managedTempDirs.poll() }
     }))
 
   /** Temp directory with JVM-exit cleanup: library callers shouldn't leak

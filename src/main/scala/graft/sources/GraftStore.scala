@@ -4133,14 +4133,40 @@ object GraftStore {
     * feeds stay silent, history shows maintenance, and the pre-rewrite
     * snapshot stays time-travelable. The key column is computed, sorted
     * on, and DROPPED before the sink — stored bytes carry only table
-    * columns. Returns the new snapshot version. */
+    * columns. Returns the new snapshot version.
+    *
+    * The file ranges are equal-sized ranges of the sorted keys (of a
+    * fixed-seed sample of them past 100k rows), not `repartitionByRange`'s:
+    * Spark seeds its sample with the RDD's id, so the layout (and the
+    * files a query prunes) would depend on how many RDDs the JVM made
+    * before. Here the same table always lays out the same way. */
   private[graft] def rewriteClustered(spark: org.apache.spark.sql.SparkSession,
       path: String, zkey: org.apache.spark.sql.Column,
       targetFiles: Int): Long = {
-    import org.apache.spark.sql.functions.col
-    spark.read.format("graft.sources.GraftStore").option("path", path).load()
-      .withColumn("__zkey", zkey)
-      .repartitionByRange(targetFiles, col("__zkey"))
+    val keyed = spark.read.format("graft.sources.GraftStore").option("path", path)
+      .load().withColumn("__zkey", zkey.cast("long"))
+    // every key up to 100k rows, so small tables split at exact quantiles
+    val rows = readManifest(path).map(_._2.map(_.rows).sum).getOrElse(0L)
+    val fraction = math.min(1.0, 1e5 / math.max(rows, 1L))
+    val sample = keyed.select("__zkey").where("__zkey IS NOT NULL")
+      .sample(withReplacement = false, fraction, seed = 0x5eedL)
+      .collect().map(_.getLong(0)).sorted
+    // bound i is the last key of range i: equal-sized ranges
+    val bounds = (1 until targetFiles)
+      .flatMap(i => sample.lift((i.toLong * sample.length / targetFiles).toInt - 1))
+      .distinct.toArray
+    val ranges = new org.apache.spark.Partitioner {
+      override def numPartitions: Int = bounds.length + 1
+      // rows equal to a bound go below it, as in Spark's RangePartitioner
+      override def getPartition(key: Any): Int = {
+        val i = java.util.Arrays.binarySearch(bounds, key.asInstanceOf[Long])
+        if (i >= 0) i else -i - 1
+      }
+    }
+    val zi = keyed.schema.fieldIndex("__zkey")
+    // null keys sort first, as the ascending sort below puts them
+    val byKey = keyed.rdd.keyBy(r => if (r.isNullAt(zi)) Long.MinValue else r.getLong(zi))
+    spark.createDataFrame(byKey.partitionBy(ranges).values, keyed.schema)
       .sortWithinPartitions("__zkey")
       .drop("__zkey")
       .write.format("graft.sources.GraftStore").option("path", path)

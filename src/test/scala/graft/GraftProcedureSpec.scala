@@ -176,6 +176,28 @@ class GraftProcedureSpec extends SparkSuite {
       s2.sql("CALL gproc.system.zorder('z', 'x,nope', 16)").collect())
   }
 
+  test("CALL zorder lays out identical tables identically, whatever ran in between") {
+    // one 20k-row input file: more rows than a range sample takes from a
+    // partition, so a sample seeded per RDD would pick different bounds
+    s2.range(0, 20000, 1, 1).selectExpr(
+      "id % 128 AS x", "CAST(id DIV 128 AS BIGINT) AS y", "id AS v")
+      .createOrReplaceTempView("src_zd")
+    def envelopes(name: String): Seq[(String, String, String, String)] = {
+      s2.sql(s"CREATE TABLE gproc.$name AS SELECT * FROM src_zd")
+      s2.sql(s"CALL gproc.system.zorder('$name', 'x,y', 16)").collect()
+      GraftStore.readManifest(s"$root/$name").get._2.map { e =>
+        (e.stats("x").min, e.stats("x").max, e.stats("y").min, e.stats("y").max)
+      }.sorted
+    }
+    val first = envelopes("zd1")
+    // unrelated jobs: each makes RDDs, which moves Spark's RDD ids on
+    (1 to 3).foreach(i => s2.range(0, 1000, 1, 4).selectExpr(s"id % $i AS m")
+      .distinct().collect())
+    val second = envelopes("zd2")
+    assert(first.size > 1, s"${first.size} files")
+    assert(first == second, s"layouts differ:\n$first\n$second")
+  }
+
   test("CALL zorder round 16: timestamp dimension and 3 columns — either-dimension pruning, content invariant, refusals") {
     import org.apache.spark.sql.functions.col
     // time×key: 64 hourly buckets × 64 keys, written row-hashed so every

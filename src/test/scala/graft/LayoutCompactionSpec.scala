@@ -16,8 +16,7 @@ class LayoutCompactionSpec extends SparkSuite {
     import spark.implicits._
     // run the query once — materializes frag + compacted dirs
     val agg = SparkEntry.queries("q_layout_compact")(spark, sfDir).collect()
-    val key = s"${graft.ops.Util.sessionKey(spark)}:$sfDir"
-    val Array(frag, comp) = graft.ops.Layout.compactedDirs.get(key).split('|')
+    val (frag, comp) = graft.ops.Layout.compactedDirs(spark, sfDir)
 
     val fragFiles = parquetFiles(frag)
     val compFiles = parquetFiles(comp)
@@ -44,11 +43,8 @@ class LayoutCompactionSpec extends SparkSuite {
   }
 
   test("the compaction rewrite plan is narrow (no shuffle)") {
-    val key = s"${graft.ops.Util.sessionKey(spark)}:$sfDir"
-    // materialize if this test runs first
-    if (!graft.ops.Layout.compactedDirs.containsKey(key))
-      SparkEntry.queries("q_layout_compact")(spark, sfDir).collect()
-    val Array(frag, _) = graft.ops.Layout.compactedDirs.get(key).split('|')
+    // materializes the dirs if this test runs first
+    val (frag, _) = graft.ops.Layout.compactedDirs(spark, sfDir)
     // the rewrite is scan→write: re-planning the same read shows no
     // Exchange anywhere (the bin-packing lives in the scan's partitioning)
     val plan = spark.read.parquet(frag).queryExecution.executedPlan.toString

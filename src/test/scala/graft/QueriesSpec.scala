@@ -81,6 +81,33 @@ class QueriesSpec extends SparkSuite {
       s"SURVEY §2 rows with no registry query: ${notInReg.toSeq.sorted}")
   }
 
+  test("query builders make sessions only through Util.child (no clone per call)") {
+    // a session made per call gets its own executor class loader, so its
+    // query recompiles every stage on every call; Util.child keeps one
+    // child per conf set instead
+    val made = "newSession\\(\\)|SparkSession\\.builder\\(\\)".r
+    val sources = new java.io.File("src/main/scala/graft/ops").listFiles()
+      .filter(_.getName.endsWith(".scala")).sortBy(_.getName)
+    assert(sources.length > 20, s"ops sources not found: ${sources.length}")
+    val offending = sources.flatMap { f =>
+      // comments out, line breaks kept so the line numbers stay true
+      val code = "(?s)/\\*.*?\\*/".r.replaceAllIn(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"),
+        m => m.matched.filter(_ == '\n')).replaceAll("//[^\n]*", "")
+      // the helper's own body is the one place allowed to make sessions
+      val (from, to) =
+        if (f.getName != "Util.scala") (-1, -1)
+        else {
+          val at = code.indexOf("def child(")
+          (at, code.indexOf("\n  def ", at + 1))
+        }
+      made.findAllMatchIn(code)
+        .filterNot(m => m.start > from && m.start < to)
+        .map(m => s"${f.getName}:${code.take(m.start).count(_ == '\n') + 1}")
+    }
+    assert(offending.isEmpty, s"sessions made outside Util.child: ${offending.mkString(", ")}")
+  }
+
   test("entry returns rows (t1 smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
