@@ -266,7 +266,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     }
     val dir = dirFor(ident)
     if (!isTable(dir)) throw new NoSuchTableException(ident)
-    val schema = GraftStore.readManifest(dir.getPath).get._1
+    val schema = GraftStore.snapshot(GraftStore.manifestFile(dir.getPath, None)).get.schema
     new GraftStoreTable(dir.getPath, schema, None, None, None, None,
       partitionBy = GraftStore.readPartitionBy(dir.getPath))
   }
@@ -282,10 +282,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     // name resolved against the table's _refs/ (the Iceberg surface
     // where VERSION AS OF accepts a ref name)
     val v = GraftStore.resolveVersionSpec(dir.getPath, version)
-    val snap = new java.io.File(dir,
-      s"${GraftStore.ManifestName}.v$v")
-    val schema = GraftStore.readManifestFile(snap)
-      .getOrElse(throw new NoSuchTableException(ident))._1
+    val schema = GraftStore.snapshot(GraftStore.manifestFile(dir.getPath, Some(v)))
+      .getOrElse(throw new NoSuchTableException(ident)).schema
     new GraftStoreTable(dir.getPath, schema, None, None, None, None, Some(v))
   }
 
@@ -468,8 +466,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
     GraftStore.writeProps(dir.getPath, persistedPropsOf(schema, properties))
     // an empty manifest IS the table: created atomically, never half-visible
     // (base 0: a racing CREATE on the same ident conflicts on the v1 claim)
-    GraftStore.writeManifestAtomic(dir.getPath, 0L, schema, Seq.empty,
-      op = "create")
+    GraftStore.commit(dir.getPath, GraftStore.Manifest(schema))(_.copy(op = "create"))
     new GraftStoreTable(dir.getPath, schema, None, sortBy, None, None,
       partitionBy = partitionBy)
   }
@@ -581,9 +578,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
             created.foreach(p => java.nio.file.Files.deleteIfExists(p))
             throw t
           }
-          val (base, _) = GraftStore.readLatestVersioned(target.getPath)
-          GraftStore.writeManifestAtomic(target.getPath, base, schema2,
-            entries, op = "replace", eqDels = Some(Seq.empty))
+          GraftStore.commit(target.getPath, GraftStore.latest(target.getPath)
+            .getOrElse(GraftStore.Manifest(schema2)))(_.copy(schema = schema2,
+            entries = entries, op = "replace", epoch = None, eqDels = Seq.empty))
           // spec/props swap AFTER the commit (same ordering rationale as
           // evolvePartitionBy: the spec is a write-layout hint)
           val pf = new File(target, GraftStore.PartitionFileName)
@@ -711,9 +708,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           u.newDataType())
       case _ => ()
     }
-    val (base, latest) = GraftStore.readLatestVersioned(dir.getPath)
-    val (schema, entries) = latest.get
-    val newSchema = routed._2.foldLeft(schema) {
+    val base = GraftStore.latest(dir.getPath).get
+    val newSchema = routed._2.foldLeft(base.schema) {
       case (sch, add: TableChange.AddColumn) =>
         require(add.fieldNames().length == 1,
           "ADD COLUMN supports top-level columns and struct subfields " +
@@ -730,8 +726,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           s"ALTER COLUMN TYPE BIGINT (got ${other.getClass.getSimpleName})")
     }
     if (routed._2.nonEmpty)
-      GraftStore.writeManifestAtomic(dir.getPath, base, newSchema, entries,
-        GraftStore.readEpoch(dir.getPath), op = "evolve")
+      GraftStore.commit(dir.getPath, base)(b => b.copy(schema = newSchema,
+        entries = b.files(dir.getPath), op = "evolve"))
     new GraftStoreTable(dir.getPath, newSchema, None, None, None, None)
   }
 
@@ -857,27 +853,26 @@ class GraftMetadataScan(path: String, kind: String, schema: StructType)
         import org.apache.spark.unsafe.types.UTF8String.{fromString => utf8}
         GraftStore.branchList(path).map { b =>
           val bp = GraftStore.branchPath(path, b)
-          val (head, latest) = GraftStore.readLatestVersioned(bp)
-          Array[Any](utf8(b), GraftStore.branchForkVersion(path, b), head,
-            latest.map(_._2.map(_.rows).sum).getOrElse(0L),
+          val tip = GraftStore.latest(bp)
+          Array[Any](utf8(b), GraftStore.branchForkVersion(path, b),
+            tip.fold(0L)(_.version),
+            tip.fold(0L)(_.files(bp).map(_.rows).sum),
             GraftStore.branchCreatedAt(path, b) * 1000L,
             GraftStore.branchLastCommitAt(path, b) * 1000L,
             GraftStore.branchRetainFor(path, b).map(Long.box).orNull)
         }.toArray
       case "refs" => GraftStore.readRefs(path).toSeq.sortBy(_._1)
         .map { case (tag, v) =>
-          val rows = GraftStore.readManifestFile(
-            new java.io.File(path, s"${GraftStore.ManifestName}.v$v"))
-            .map(_._2.map(_.rows).sum).getOrElse(0L)
+          val rows = GraftStore.snapshot(GraftStore.manifestFile(path, Some(v)))
+            .fold(0L)(_.files(path).map(_.rows).sum)
           Array[Any](
             org.apache.spark.unsafe.types.UTF8String.fromString(tag), v, rows)
         }.toArray
       case "deletes" =>
         import org.apache.spark.unsafe.types.UTF8String.{fromString => utf8}
-        val (_, entries, eqs) = GraftStore.readManifestFull(
-          new java.io.File(path, GraftStore.ManifestName))
-          .getOrElse((null, Seq.empty[GraftStore.FileEntry],
-            Seq.empty[GraftStore.EqDelete]))
+        val (entries, eqs) = GraftStore.snapshot(GraftStore.manifestFile(path, None))
+          .fold((Seq.empty[GraftStore.FileEntry], Seq.empty[GraftStore.EqDelete]))(
+            m => (m.files(path), m.eqDels))
         val dvRows = entries.filter(_.dv.nonEmpty).map { e =>
           val masked = GraftStore.Dv.bitset(
             new java.io.File(path, e.dv).getPath).cardinality().toLong
@@ -892,14 +887,13 @@ class GraftMetadataScan(path: String, kind: String, schema: StructType)
         (dvRows ++ eqRows).toArray
       case "manifests" =>
         import org.apache.spark.unsafe.types.UTF8String.{fromString => utf8}
-        GraftStore.readManifestStructured(
-          new java.io.File(path, GraftStore.ManifestName)) match {
-          case Some((_, inline, _, children)) if children.nonEmpty =>
-            children.map(c => Array[Any](utf8(c.file), c.nfiles, c.rows,
+        GraftStore.snapshot(GraftStore.manifestFile(path, None)) match {
+          case Some(m) if m.children.nonEmpty =>
+            m.children.map(c => Array[Any](utf8(c.file), c.nfiles, c.rows,
               utf8(c.cell))).toArray
-          case Some((_, inline, _, _)) =>
-            Array(Array[Any](utf8("(inline)"), inline.size.toLong,
-              inline.map(e => math.max(e.rows, 0L)).sum, utf8("")))
+          case Some(m) =>
+            Array(Array[Any](utf8("(inline)"), m.entries.size.toLong,
+              m.entries.map(e => math.max(e.rows, 0L)).sum, utf8("")))
           case None => Array.empty[Array[Any]]
         }
       case _ => GraftStore.readManifest(path).map(_._2).getOrElse(Seq.empty)

@@ -154,8 +154,8 @@ private[sources] object GraftProcedures {
       P("where", StringType, "SQL predicate over top-level columns"))
     override def run(spark: SparkSession, input: InternalRow): Array[Any] = {
       val path = tablePath(input)
-      val (schema, _) = GraftStore.readManifest(path).getOrElse(
-        throw new IllegalArgumentException(s"no graft-store table at $path"))
+      val schema = GraftStore.latest(path).getOrElse(
+        throw new IllegalArgumentException(s"no graft-store table at $path")).schema
       val f = GraftStore.v1FilterOf(spark, schema, "compact_where scope",
         input.getUTF8String(2).toString)
       val v = GraftStore.compact(spark, path, input.getLong(1), Some(f))
@@ -318,7 +318,7 @@ private[sources] object GraftProcedures {
       new StructType().add("removed", LongType, nullable = false)
     override def run(spark: SparkSession, input: InternalRow): Array[Any] = {
       val path = tablePath(input)
-      require(GraftStore.readManifest(path).isDefined,
+      require(GraftStore.latest(path).isDefined,
         s"no graft-store table at $path")
       val age = input.getLong(1)
       require(age > 0,

@@ -468,14 +468,6 @@ object GraftStore {
     * files and bounds the accumulation. */
   case class EqDelete(file: String, seq: Long, cols: Seq[String])
 
-  private[sources] def fmtEqDelete(d: EqDelete): String =
-    s"!eqdel=${d.seq}\t${d.file}\t${d.cols.mkString(",")}"
-
-  private[sources] def parseEqDelete(line: String): EqDelete = {
-    val Array(seq, file, cols) = line.stripPrefix("!eqdel=").split('\t')
-    EqDelete(file, seq.toLong, cols.split(',').toSeq)
-  }
-
   // file<TAB>rows<TAB>col=min:max:nulls;col2=...<TAB>cols<TAB>dv —
   // ':'/';'/'=' cannot occur inside Long/Double.toString, and
   // stats-bearing column names are restricted to ones without the
@@ -679,13 +671,157 @@ object GraftStore {
     }
   }
 
-  /** Manifest = schema DDL line, optional `!`-prefixed header lines
-    * (`!version=<n>`, the snapshot id; `!epoch=<n>`, the last committed
-    * STREAMING epoch — the replay-idempotence marker), then one
-    * [[FileEntry]] line per committed data file. Read/written only on
-    * the driver. */
-  private[graft] def readManifest(path: String): Option[(StructType, Seq[FileEntry])] =
-    readManifestFile(new File(path, ManifestName))
+  /** One snapshot manifest: the whole state of a table at one version,
+    * and the one record every reader and every commit goes through.
+    * Read and written only on the driver. On disk it is UTF-8 text, one
+    * item per line, in this order:
+    *   - the schema, as DDL;
+    *   - `!version=<n>`: the snapshot id, the `n` of `_manifest.v<n>`;
+    *   - `!uid=<uuid>`: unique per manifest write, the parse cache's key
+    *     (see [[manifestCache]]);
+    *   - `!ts=<millis>`: the commit time, strictly increasing along a
+    *     lineage; TIMESTAMP AS OF resolves on it;
+    *   - `!stats=2`: the stats format version. Without it, every
+    *     DoubleType column's stats are dropped at parse (`demoted`, see
+    *     [[StatsFormatVersion]]);
+    *   - `!op=<kind>`: the commit kind ("create", "append", "overwrite",
+    *     "delete", "replace" for copy-on-write DML, "optimize",
+    *     "evolve…", "restore(v<n>)", …). The change feed tells a
+    *     compaction from an overwrite by it; absent before op tracking;
+    *   - `!epoch=<n>`: the last streaming epoch committed, the sink's
+    *     replay marker;
+    *   - `!txn=<app>:<version>`, one per writer application: the highest
+    *     idempotent-write version it committed (`txnAppId`/`txnVersion`);
+    *   - `!eqdel=<seq>\t<file>\t<cols>`, one per live [[EqDelete]];
+    *   - one [[FileEntry]] line per data file (`fmtEntry`), or, past the
+    *     shard threshold, one `!clist=` [[ChildRef]] line per child
+    *     manifest that holds those lines.
+    * A `!` line this build does not know is skipped. `entries` are the
+    * inline entry lines; [[files]] adds the children's. A commit maps
+    * its base record to the next one with `copy` ([[commit]]), so the
+    * epoch, the txn watermarks and the equality deletes carry forward
+    * unless the commit sets them. */
+  private[graft] case class Manifest(schema: StructType, version: Long = 0L,
+      uid: String = "", ts: Long = 0L, op: String = "",
+      epoch: Option[Long] = None, txns: Map[String, Long] = Map.empty,
+      eqDels: Seq[EqDelete] = Seq.empty, entries: Seq[FileEntry] = Seq.empty,
+      children: Seq[ChildRef] = Seq.empty, demoted: Set[String] = Set.empty) {
+    /** Every live file of this manifest, read from table directory `dir`:
+      * the inline entries, then each child's entries in listed order. A
+      * pruned scan passes `keep` to leave children unopened. */
+    def files(dir: String, keep: ChildRef => Boolean = _ => true): Seq[FileEntry] =
+      if (children.isEmpty) entries
+      else entries ++ children.filter(keep).flatMap { c =>
+        val es = readChildEntries(new File(dir), c.file)
+        // children inherit the parent's stats version
+        if (demoted.isEmpty) es else es.map(e => e.copy(stats = e.stats -- demoted))
+      }
+  }
+
+  /** The manifest codec: `parse` and `fmt` are exact inverses on records
+    * (`parse(fmt(m)) == m`), and `header` is the bounded read behind the
+    * cache key, [[readVersion]] and the timestamp lookups. */
+  private[graft] object Manifest {
+    private val Version = "!version="
+    private val Uid = "!uid="
+    private val Ts = "!ts="
+    private val Stats = "!stats="
+    private val Op = "!op="
+    private val Epoch = "!epoch="
+    private val Txn = "!txn="
+    private val EqDel = "!eqdel="
+    private val CList = "!clist="
+
+    def parse(text: String): Option[Manifest] = {
+      val lines = text.split('\n').iterator.filter(_.nonEmpty)
+      if (!lines.hasNext) return None
+      var m = Manifest(StructType.fromDDL(lines.next()))
+      var statsV = 1L
+      val eqDels = Vector.newBuilder[EqDelete]
+      val entries = Vector.newBuilder[FileEntry]
+      val children = Vector.newBuilder[ChildRef]
+      lines.foreach { l =>
+        if (!l.startsWith("!")) entries += parseEntry(l)
+        else if (l.startsWith(CList)) {
+          // a ref line is a FileEntry line: nfiles in the cols slot, the
+          // cell tag in the dv slot
+          val e = parseEntry(l.substring(CList.length))
+          children += ChildRef(e.file, e.cols.toLong, e.rows, e.stats, e.dv)
+        } else if (l.startsWith(EqDel)) {
+          val Array(seq, file, cols) = l.substring(EqDel.length).split('\t')
+          eqDels += EqDelete(file, seq.toLong, cols.split(',').toSeq)
+        } else if (l.startsWith(Stats)) statsV = l.substring(Stats.length).toLong
+        else m = withHeader(m, l)
+      }
+      // pre-NaN-fix double stats are untrustworthy (see
+      // StatsFormatVersion); the child refs' folds and the entries inside
+      // the children were written by the same writer, so they go too
+      val demoted =
+        if (statsV >= StatsFormatVersion) Set.empty[String]
+        else m.schema.fields
+          .filter(_.dataType == org.apache.spark.sql.types.DoubleType)
+          .map(_.name).toSet
+      val es = entries.result()
+      val cs = children.result()
+      Some(m.copy(eqDels = eqDels.result(), demoted = demoted,
+        entries =
+          if (demoted.isEmpty) es else es.map(e => e.copy(stats = e.stats -- demoted)),
+        children =
+          if (demoted.isEmpty) cs else cs.map(c => c.copy(stats = c.stats -- demoted))))
+    }
+
+    private def withHeader(m: Manifest, l: String): Manifest =
+      if (l.startsWith(Version)) m.copy(version = l.substring(Version.length).toLong)
+      else if (l.startsWith(Uid)) m.copy(uid = l.substring(Uid.length))
+      else if (l.startsWith(Ts)) m.copy(ts = l.substring(Ts.length).toLong)
+      else if (l.startsWith(Op)) m.copy(op = l.substring(Op.length))
+      else if (l.startsWith(Epoch))
+        m.copy(epoch = Some(l.substring(Epoch.length).toLong))
+      else if (l.startsWith(Txn)) {
+        val kv = l.substring(Txn.length)
+        val i = kv.lastIndexOf(':')
+        m.copy(txns = m.txns + (kv.take(i) -> kv.drop(i + 1).toLong))
+      } else m
+
+    def fmt(m: Manifest): String = {
+      val out = Seq.newBuilder[String]
+      out += m.schema.toDDL
+      out += s"$Version${m.version}"
+      out += s"$Uid${m.uid}"
+      out += s"$Ts${m.ts}"
+      if (m.demoted.isEmpty) out += s"$Stats$StatsFormatVersion"
+      if (m.op.nonEmpty) out += s"$Op${m.op}"
+      m.epoch.foreach(e => out += s"$Epoch$e")
+      m.txns.toSeq.sortBy(_._1).foreach { case (app, v) => out += s"$Txn$app:$v" }
+      m.eqDels.foreach(d =>
+        out += s"$EqDel${d.seq}\t${d.file}\t${d.cols.mkString(",")}")
+      m.entries.foreach(e => out += fmtEntry(e))
+      m.children.foreach(c => out += CList + fmtEntry(
+        FileEntry(c.file, c.rows, c.stats, cols = c.nfiles.toInt, dv = c.cell)))
+      out.result().mkString("\n")
+    }
+
+    /** The header fields of the manifest at `f` (version, uid, ts, op,
+      * epoch, txns), read up to the first line that names a file and
+      * never further; the schema is left empty. None if there is no
+      * readable manifest at `f`. */
+    def header(f: File): Option[Manifest] = {
+      val in =
+        try Files.newBufferedReader(f.toPath, StandardCharsets.UTF_8)
+        catch { case _: java.io.IOException => return None }
+      try {
+        if (in.readLine() == null) return None // schema DDL
+        var m = Manifest(new StructType())
+        var l = in.readLine()
+        while (l != null && l.startsWith("!") && !l.startsWith(EqDel) &&
+            !l.startsWith(CList)) {
+          m = withHeader(m, l)
+          l = in.readLine()
+        }
+        Some(m)
+      } catch { case _: java.io.IOException => None } finally in.close()
+    }
+  }
 
   // ------------------------------------------------ manifest SHARDING
   // (round 18, verdict item 1): past a threshold the snapshot manifest
@@ -749,33 +885,9 @@ object GraftStore {
     * `u` (catch-all of unprovable-cell files), `` (legacy ref written
     * before tags — disables the append fast path, never correctness). */
   private[graft] case class ChildRef(file: String, nfiles: Long, rows: Long,
-      stats: Map[String, ColStats], cell: String = "",
-      // parse-time only, never serialized: columns whose stats the
-      // PARENT's `!stats=` version demoted (see [[StatsFormatVersion]]).
-      // Children carry no version header of their own — they inherit the
-      // parent's — so the demotion context must travel with the ref to
-      // every consumer that opens the child's entries (r18 review: the
-      // sharded layout must not silently bypass the demotion on the next
-      // version bump).
-      demoted: Set[String] = Set.empty)
-
-  /** Apply the parent-manifest stats demotion to a child's entries. */
-  private def demoteChild(c: ChildRef, es: Seq[FileEntry]): Seq[FileEntry] =
-    if (c.demoted.isEmpty) es
-    else es.map(e => e.copy(stats = e.stats -- c.demoted))
+      stats: Map[String, ColStats], cell: String = "")
 
   private def cellTag(k: Option[String]): String = k.fold("u")("c:" + _)
-
-  // a ChildRef wire line reuses the FileEntry line format verbatim
-  // (name TAB rows TAB stats TAB nfiles-in-the-cols-slot, cell tag in
-  // the dv slot), so the existing fmt/parse round-trip is the only codec
-  private def fmtChildRef(c: ChildRef): String =
-    "!clist=" + fmtEntry(FileEntry(c.file, c.rows, c.stats,
-      cols = c.nfiles.toInt, dv = c.cell))
-  private def parseChildRef(line: String): ChildRef = {
-    val e = parseEntry(line.stripPrefix("!clist="))
-    ChildRef(e.file, e.cols.toLong, e.rows, e.stats, cell = e.dv)
-  }
 
   /** Child-level stats = the per-column fold of the members' stats,
     * kept only where the fold is PROVABLY sound for the tri-state
@@ -884,9 +996,9 @@ object GraftStore {
   }
 
   /** Write one cell-chunk as a content-addressed child (skip if the
-    * name exists) and return its `!clist=` line. */
+    * name exists) and return its ref. */
   private def writeChunk(path: String, schema: StructType,
-      chunk: Seq[FileEntry], tag: String): String = {
+      chunk: Seq[FileEntry], tag: String): ChildRef = {
     shardFmtEntries.addAndGet(chunk.size.toLong)
     val content = chunk.map(fmtEntry).mkString("\n")
       .getBytes(StandardCharsets.UTF_8)
@@ -908,9 +1020,9 @@ object GraftStore {
       // manifest claim, bricking the committed snapshot (r18 review)
       refreshChildMtime(target.toFile)
     }
-    fmtChildRef(ChildRef(name, chunk.size.toLong,
+    ChildRef(name, chunk.size.toLong,
       chunk.map(e => math.max(e.rows, 0L)).sum,
-      mergeChildStats(schema, chunk), cell = tag))
+      mergeChildStats(schema, chunk), cell = tag)
   }
 
   private def groupByCell(path: String, schema: StructType,
@@ -939,11 +1051,11 @@ object GraftStore {
     * writes this format produces, the flattened read-back is the exact
     * original sequence), chunk each cell at the threshold, write any
     * child whose content-addressed name doesn't exist yet, and return
-    * the `!clist=` lines. Unprovable-cell files (pre-spec history,
+    * their refs. Unprovable-cell files (pre-spec history,
     * compaction-merged cells) group into one catch-all child —
     * degraded honestly: it merely never prunes. */
   private def shardEntries(path: String, schema: StructType,
-      files: Seq[FileEntry], threshold: Int): Seq[String] = {
+      files: Seq[FileEntry], threshold: Int): Seq[ChildRef] = {
     import scala.jdk.CollectionConverters._
     groupByCell(path, schema, files).asScala.toSeq.flatMap {
       case (tag, group) =>
@@ -972,24 +1084,21 @@ object GraftStore {
     * pruning is unaffected (it reads the refs' aggregated STATS, never
     * the tags) and a rewrite (OPTIMIZE/restore) regroups everything. */
   private def shardEntriesIncremental(path: String, schema: StructType,
-      files: Seq[FileEntry], threshold: Int, v: Long): Seq[String] = {
+      files: Seq[FileEntry], threshold: Int, base: Manifest): Seq[ChildRef] = {
     val full = () => shardEntries(path, schema, files, threshold)
-    if (v <= 1) return full()
-    val base = readManifestStructured(
-      new File(path, s"$ManifestName.v${v - 1}")).getOrElse(return full())
-    val (_, baseInline, _, baseRefs) = base
-    if (baseRefs.isEmpty || baseInline.nonEmpty) return full()
+    val baseRefs = base.children
+    if (baseRefs.isEmpty || base.entries.nonEmpty) return full()
     if (baseRefs.exists(_.cell.isEmpty)) return full() // legacy refs
     // a base written at an older `!stats=` version has demoted refs —
     // carrying them verbatim into a parent that claims the CURRENT
     // version would relabel untrustworthy stats as trustworthy; full()
     // regroups from the already-demoted entries instead
-    if (baseRefs.exists(_.demoted.nonEmpty)) return full()
+    if (base.demoted.nonEmpty) return full()
     val dir = new File(path)
     // prefix check against the flattened base — by reference first (the
     // append path concatenates the very Seq the child cache returned),
     // falling back to value equality
-    val baseFlat = baseRefs.flatMap(c => readChildEntries(dir, c.file))
+    val baseFlat = base.files(path)
     if (files.size < baseFlat.size) return full()
     // lockstep iterators, never positional indexing (a List-backed Seq
     // would turn files(i) into an O(n²) pointer walk at 10⁶ entries);
@@ -1014,14 +1123,14 @@ object GraftStore {
         rs.init.exists(_.nfiles != threshold) || rs.last.nfiles > threshold))
       return full()
     val appended = groupByCell(path, schema, files.drop(baseFlat.size))
-    val out = Seq.newBuilder[String]
+    val out = Seq.newBuilder[ChildRef]
     refsByCell.asScala.foreach { case (tag, refs) =>
       val adds = Option(appended.remove(tag)).map(_.toSeq).getOrElse(Seq.empty)
       if (adds.isEmpty) refs.foreach { r =>
         // same grace-refresh as writeChunk's reuse branch: a carried-
         // forward child must look recently-touched to the GC sweep
         refreshChildMtime(new File(dir, r.file))
-        out += fmtChildRef(r)
+        out += r
       }
       else {
         val (fullRefs, tail) =
@@ -1029,7 +1138,7 @@ object GraftStore {
           else (refs.init.toSeq, Seq(refs.last))
         fullRefs.foreach { r =>
           refreshChildMtime(new File(dir, r.file))
-          out += fmtChildRef(r)
+          out += r
         }
         val tailEntries = tail.flatMap(r => readChildEntries(dir, r.file))
         (tailEntries ++ adds).grouped(threshold)
@@ -1081,7 +1190,7 @@ object GraftStore {
     * are. Stats written by a v1 (pre-NaN-fix) build may advertise a
     * stale non-NaN max and mono=true over NaN-bearing doubles — unsound
     * for the LessThan-AllRows fast path and SMJ sort elision — so
-    * [[readManifestFile]] DEMOTES them: a manifest without `!stats=2`
+    * [[Manifest.parse]] DEMOTES them: a manifest without `!stats=2`
     * has every DoubleType column's stats dropped at parse time
     * (no pruning, no metadata agg, no ordering claim — conservative,
     * never wrong). Because demotion happens before any carry-forward,
@@ -1092,7 +1201,7 @@ object GraftStore {
 
   /** Parsed-manifest LRU: every metadata consumer (scan planning, file
     * skipping, estimateStatistics, metadata aggregates, DML base reads,
-    * the catalog) funnels through [[readManifestFile]], and a busy
+    * the catalog) funnels through [[snapshot]], and a busy
     * session re-reads the SAME immutable snapshot many times per query.
     * The cache key is the manifest's `!uid=` header — a UUID stamped by
     * every manifest write, i.e. the CONTENT's own identity. Nothing
@@ -1103,130 +1212,51 @@ object GraftStore {
     * table is dropped and recreated in the same directory (versions
     * restart at 1, `_manifest.v1` gets REWRITTEN) — both serve readers
     * a stale snapshot, breaking read-your-writes. The uid is resolved
-    * with a three-line header scan (uncached, O(1) I/O); manifests
+    * with the bounded header read (uncached, O(1) I/O); manifests
     * written before uid stamping parse uncached — correct, merely
     * unaccelerated. Driver-side only, 64 entries — at 10^6-line
     * manifests this turns the per-query metadata fold from re-parse
     * (O(lines × columns) string work) into a map hit. */
   private val manifestCache =
-    new java.util.LinkedHashMap[String,
-        Option[(StructType, Seq[FileEntry], Seq[EqDelete], Seq[ChildRef])]](64, 0.75f, true) {
+    new java.util.LinkedHashMap[String, Manifest](64, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String,
-            Option[(StructType, Seq[FileEntry], Seq[EqDelete], Seq[ChildRef])]])
-          : Boolean = size() > 64
+          e: java.util.Map.Entry[String, Manifest]): Boolean = size() > 64
     }
 
-  /** `!uid=` from the file's header lines — a three-line read, never a
-    * full parse (headers directly follow the schema DDL line). Empty =
-    * pre-uid manifest or unreadable (raced delete). */
-  private def headerUid(f: File): String = {
-    val in = try new java.io.BufferedReader(new java.io.InputStreamReader(
-      new FileInputStream(f), StandardCharsets.UTF_8))
-    catch { case _: java.io.IOException => return "" }
-    try {
-      var line = in.readLine() // schema DDL
-      line = in.readLine()
-      while (line != null && line.startsWith("!")) {
-        if (line.startsWith("!uid=")) return line.stripPrefix("!uid=")
-        line = in.readLine()
-      }
-      ""
-    } catch { case _: java.io.IOException => "" } finally in.close()
-  }
-
-  private def uidOfBytes(bytes: Array[Byte]): String =
-    new String(bytes, StandardCharsets.UTF_8).split('\n')
-      .find(_.startsWith("!uid=")).map(_.stripPrefix("!uid=")).getOrElse("")
-
-  private[graft] def readManifestFile(f: File): Option[(StructType, Seq[FileEntry])] =
-    readManifestFull(f).map { case (s, e, _) => (s, e) }
-
-  /** Equality deletes a snapshot manifest carries (same cached parse). */
-  private[graft] def readEqDeletesOf(f: File): Seq[EqDelete] =
-    readManifestFull(f).map(_._3).getOrElse(Seq.empty)
-
-  /** STRUCTURED parse: inline entries and child refs kept apart — what
-    * the pruned scan path and the child GC sweep consume. Every other
-    * consumer goes through [[readManifestFull]], which flattens. */
-  private[graft] def readManifestStructured(
-      f: File): Option[(StructType, Seq[FileEntry], Seq[EqDelete], Seq[ChildRef])] = {
-    if (!f.exists()) None
-    else {
-      val uid = headerUid(f)
-      if (uid.nonEmpty) {
-        val hit = manifestCache.synchronized(Option(manifestCache.get(uid)))
-        if (hit.isDefined) return hit.get
-      }
-      val bytes =
-        try Files.readAllBytes(f.toPath)
-        catch { case _: java.io.IOException => return None } // raced deletion
-      val parsed = parseManifestBytes(bytes)
-      // cache under the uid of the bytes ACTUALLY read — the pointer may
-      // have been atomically replaced between the header scan and the
-      // full read
-      val actual = uidOfBytes(bytes)
-      if (actual.nonEmpty)
-        manifestCache.synchronized(manifestCache.put(actual, parsed))
-      parsed
+  /** The manifest at `f` (the pointer or a retained `_manifest.v<n>`),
+    * parsed once per `!uid=`; None if there is none. */
+  private[graft] def snapshot(f: File): Option[Manifest] = {
+    val uid = Manifest.header(f).getOrElse(return None).uid
+    if (uid.nonEmpty) {
+      val hit = manifestCache.synchronized(manifestCache.get(uid))
+      if (hit != null) return Some(hit)
     }
+    val bytes =
+      try Files.readAllBytes(f.toPath)
+      catch { case _: java.io.IOException => return None } // raced deletion
+    val parsed = Manifest.parse(new String(bytes, StandardCharsets.UTF_8))
+    // cached under the uid of the bytes ACTUALLY read — the pointer may
+    // have been atomically replaced between the header read and this one
+    parsed.filter(_.uid.nonEmpty).foreach(m =>
+      manifestCache.synchronized(manifestCache.put(m.uid, m)))
+    parsed
   }
 
-  private[graft] def readManifestFull(
-      f: File): Option[(StructType, Seq[FileEntry], Seq[EqDelete])] =
-    readManifestStructured(f).map { case (s, es, eqs, children) =>
-      // flatten children in listed (= first-appearance grouping) order,
-      // applying the parent's stats-version demotion to each child's
-      // entries (the ref's `demoted` set — children inherit the parent's
-      // `!stats=` version)
-      (s, es ++ children.flatMap(c =>
-        demoteChild(c, readChildEntries(f.getParentFile, c.file))),
-        eqs)
-    }
+  /** The latest COMMITTED table state: the highest retained snapshot,
+    * even while the pointer lags it — the base every compare-and-swap
+    * commit works from (its `version` is the one the commit claims
+    * past). None for a table with no manifest yet. */
+  private[graft] def latest(path: String): Option[Manifest] =
+    snapshot(snapshotFiles(path).lastOption.getOrElse(new File(path, ManifestName)))
 
-  private def parseManifestBytes(
-      bytes: Array[Byte]): Option[(StructType, Seq[FileEntry], Seq[EqDelete], Seq[ChildRef])] = {
-    val lines = new String(bytes, StandardCharsets.UTF_8)
-      .split('\n').toSeq.filter(_.nonEmpty)
-    if (lines.isEmpty) return None
-    val schema = StructType.fromDDL(lines.head)
-    val statsV = lines.tail.find(_.startsWith("!stats="))
-      .map(_.stripPrefix("!stats=").toLong).getOrElse(1L)
-    val eqDels = lines.tail.filter(_.startsWith("!eqdel=")).map(parseEqDelete)
-    val children = lines.tail.filter(_.startsWith("!clist=")).map(parseChildRef)
-    val entries = lines.tail.filterNot(_.startsWith("!")).map(parseEntry)
-    val doubleCols =
-      if (statsV >= StatsFormatVersion) Set.empty[String]
-      else schema.fields
-        .filter(_.dataType == org.apache.spark.sql.types.DoubleType)
-        .map(_.name).toSet
-    // pre-NaN-fix double stats are untrustworthy (see above). The SAME
-    // demotion applies to child refs: a child has no `!stats=` header of
-    // its own — its stats (both the ref's aggregated fold and the
-    // entries inside) were written by the same-era writer as the parent
-    // that listed it, so the parent's version governs them. The ref's
-    // `demoted` set carries the context to the flatten / pruned-scan
-    // consumers, and the append fast path refuses to carry demoted refs
-    // verbatim into a new current-version parent.
-    val safe =
-      if (doubleCols.isEmpty) entries
-      else entries.map(e => e.copy(stats = e.stats -- doubleCols))
-    val safeChildren =
-      if (doubleCols.isEmpty) children
-      else children.map(c => c.copy(stats = c.stats -- doubleCols,
-        demoted = doubleCols))
-    Some((schema, safe, eqDels, safeChildren))
-  }
+  /** The (schema, every live file) the pointer names. */
+  private[graft] def readManifest(path: String): Option[(StructType, Seq[FileEntry])] =
+    snapshot(new File(path, ManifestName)).map(m => (m.schema, m.files(path)))
 
   /** Snapshot id the current pointer carries (0 = pre-versioning table
     * or no table — the next commit becomes v1 either way). */
-  private[graft] def readVersion(path: String): Long = {
-    val f = new File(path, ManifestName)
-    if (!f.exists()) 0L
-    else new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      .split('\n').find(_.startsWith("!version="))
-      .map(_.stripPrefix("!version=").toLong).getOrElse(0L)
-  }
+  private[graft] def readVersion(path: String): Long =
+    Manifest.header(new File(path, ManifestName)).fold(0L)(_.version)
 
   /** Retained snapshot manifests (`_manifest.v<n>`), oldest first. */
   private[graft] def snapshotFiles(path: String): Seq[File] =
@@ -1234,81 +1264,20 @@ object GraftStore {
       .filter(_.getName.startsWith(ManifestName + ".v")).toSeq
       .sortBy(_.getName.stripPrefix(ManifestName + ".v").toLong)
 
-  /** Last streaming epoch committed to this table, if any. */
-  private[graft] def readEpoch(path: String): Option[Long] = {
-    val f = new File(path, ManifestName)
-    if (!f.exists()) None
-    else new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      .split('\n').find(_.startsWith("!epoch=")).map(_.stripPrefix("!epoch=").toLong)
-  }
-
-  /** Operation kind a snapshot's commit recorded (`!op=` header):
-    * "create" / "append" / "overwrite" / "delete" / "replace" (copy-on-
-    * write DML) / "optimize" / "evolve"; "" for manifests written before
-    * op tracking. What makes the CHANGE-DATA-FEED read precise: a
-    * file-set diff alone cannot tell a compaction (files churn, content
-    * identical — emit NOTHING) from an overwrite (same churn shape,
-    * content replaced — emit everything), the Iceberg snapshot-summary
-    * `operation` field distinction. */
-  private[graft] def readOpOf(f: File): String =
-    if (!f.exists()) ""
-    else new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      .split('\n').find(_.startsWith("!op=")).map(_.stripPrefix("!op="))
-      .getOrElse("")
-
-  /** Commit wall-clock millis a snapshot recorded (`!ts=` header; 0 for
-    * manifests written before timestamp tracking). Resolution input for
-    * TIMESTAMP-AS-OF reads; deliberately NOT exposed in oracle-checked
-    * query output (wall clocks aren't reproducible). */
-  private[graft] def readTsOf(f: File): Long =
-    if (!f.exists()) 0L
-    else {
-      // HEADER-BOUNDED read: !ts= is within the first few lines (schema
-      // DDL, !version, !uid, !ts, ...) — the commit path calls this per
-      // commit for the monotonic-ts rule, and slurping a whole manifest
-      // (thousands of stat-bearing file entries at scale) per commit
-      // would tax exactly the write-heavy queries. Stop at the first
-      // non-header line.
-      val r = Files.newBufferedReader(f.toPath, StandardCharsets.UTF_8)
-      try {
-        var line = r.readLine() // schema DDL
-        var n = 0
-        while (line != null && n < 16) {
-          if (line.startsWith("!ts=")) return line.stripPrefix("!ts=").toLong
-          line = r.readLine()
-          n += 1
-        }
-        0L
-      } finally r.close()
-    }
-
-  /** Writer-transaction watermarks a snapshot recorded (`!txn=app:ver`
-    * lines, carried forward by every commit): the highest `txnVersion`
-    * each `txnAppId` has committed. The Delta idempotent-write design —
-    * a re-delivered (app, version ≤ recorded) write is a no-op, which is
-    * what makes foreachBatch appends exactly-once under replay even when
-    * the payload itself isn't idempotent. */
-  private[graft] def readTxnsOf(f: File): Map[String, Long] =
-    if (!f.exists()) Map.empty
-    else new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      .split('\n').filter(_.startsWith("!txn=")).map { l =>
-        val kv = l.stripPrefix("!txn=")
-        val i = kv.lastIndexOf(':')
-        kv.take(i) -> kv.drop(i + 1).toLong
-      }.toMap
-
   /** Latest snapshot committed at or before `tsMillis` (the Iceberg/Delta
     * timestamp-resolution rule), or None if the table's history starts
     * after it. */
   private[graft] def versionAsOfTimestamp(path: String, tsMillis: Long): Option[Long] =
-    snapshotFiles(path).filter(readTsOf(_) <= tsMillis).lastOption
-      .map(_.getName.stripPrefix(ManifestName + ".v").toLong)
+    commitTimestamps(path).filter(_._2 <= tsMillis).lastOption.map(_._1)
 
   /** (version, commit wall-clock millis) per retained snapshot, oldest
-    * first — the resolution table a TIMESTAMP AS OF read consults. */
+    * first — the resolution table a TIMESTAMP AS OF read consults. The
+    * `!ts=` commit time is deliberately NOT exposed in oracle-checked
+    * query output (wall clocks aren't reproducible). */
   private[graft] def commitTimestamps(path: String): Seq[(Long, Long)] =
     snapshotFiles(path).map(f =>
-      (f.getName.stripPrefix(ManifestName + ".v").toLong, readTsOf(f)))
+      (f.getName.stripPrefix(ManifestName + ".v").toLong,
+        Manifest.header(f).fold(0L)(_.ts)))
 
   /** Two writers that both read base version N both try to commit N+1 —
     * without a claim step the second pointer move would silently erase
@@ -1337,13 +1306,6 @@ object GraftStore {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Next version = one past the highest COMMITTED snapshot (the pointer
-    * can lag for an instant between a competitor's claim and its pointer
-    * refresh — versioning must never reuse a claimed id). */
-  private[sources] def nextVersion(path: String): Long =
-    (readVersion(path) +: snapshotFiles(path).map(
-      _.getName.stripPrefix(ManifestName + ".v").toLong)).max + 1
-
   /** Every commit writes the manifest under the NEXT snapshot id and
     * retains the previous ones. OPTIMISTIC CONCURRENCY: the versioned
     * name `_manifest.v<n>` is CLAIMED with a hard link — `link(2)` is
@@ -1359,96 +1321,43 @@ object GraftStore {
     * yet — the same commit-ambiguity window every log-structured table
     * format has. Retained snapshots are what make time-travel reads
     * and cross-OPTIMIZE history possible; [[expireSnapshots]] bounds
-    * their cost. */
-  /** Commit as a true COMPARE-AND-SWAP: the claimed version is exactly
-    * `baseVersion + 1`, where `baseVersion` is the version the CALLER's
-    * base read observed (via [[readLatestVersioned]]) — never a version
-    * recomputed at claim time. The distinction is the lost-update bug
-    * class: with a claim-time `nextVersion()`, a writer whose base read
-    * raced behind N other commits would claim base+N+1 WITHOUT conflict
-    * and publish its stale merge, silently erasing those commits'
-    * files (caught by the 8-writer stress spec). Pinning the claim to
-    * base+1 makes any interleaving commit turn the claim into
-    * [[ConflictException]], which appends retry and content-dependent
-    * commits surface. */
-  private[sources] def writeManifestAtomic(
-      path: String, baseVersion: Long, schema: StructType,
-      files: Seq[FileEntry],
-      epoch: Option[Long] = None, op: String = "",
-      newTxn: Option[(String, Long)] = None,
-      eqDels: Option[Seq[EqDelete]] = None,
-      regroup: Boolean = false): Long = {
-    val v = baseVersion + 1
-    // txn watermarks carry FORWARD through every commit (vacuum may drop
-    // the snapshot that first recorded one): merge the base's map with
-    // this commit's claim, keeping the max per app
-    val baseTxns =
-      if (baseVersion > 0)
-        readTxnsOf(new File(path, s"$ManifestName.v$baseVersion"))
-      else Map.empty[String, Long]
-    val txns = newTxn.fold(baseTxns) { case (app, ver) =>
-      baseTxns + (app -> math.max(ver, baseTxns.getOrElse(app, Long.MinValue)))
-    }
-    // equality deletes carry forward like txn watermarks (None = carry
-    // the base's; Some(xs) = this commit's authoritative set — the
-    // delete/upsert/overwrite/restore sites). While any delete is live,
-    // every file NEW in this commit gets stamped addedv = v, the
-    // exemption marker that keeps deletes applying only to files that
-    // existed before them (a file the commit merely carries forward
-    // keeps whatever it had — 0 means "predates every delete").
-    val baseFile = new File(path, s"$ManifestName.v$baseVersion")
-    val eqs = eqDels.getOrElse(
-      if (baseVersion > 0) readEqDeletesOf(baseFile) else Seq.empty)
-    val stamped =
-      if (eqs.isEmpty) files
+    * their cost.
+    *
+    * The commit is a true COMPARE-AND-SWAP: the claimed version is
+    * exactly `base.version + 1`, where `base` is the record the CALLER
+    * read (via [[latest]]) — never a version recomputed at claim time.
+    * The distinction is the lost-update bug class: with a version
+    * recomputed at claim time, a writer whose base read raced behind N other
+    * commits would claim base+N+1 WITHOUT conflict and publish its stale
+    * merge, silently erasing those commits' files (caught by the
+    * 8-writer stress spec). Pinning the claim to base+1 makes any
+    * interleaving commit turn the claim into [[ConflictException]],
+    * which appends retry and content-dependent commits surface.
+    *
+    * `change` maps the base record to the new one, typically
+    * `_.copy(entries = …, op = …)`: its `entries` are EVERY live file
+    * of the new snapshot (the commit lays them out inline or in
+    * children itself), and what it leaves alone — schema, epoch, txn
+    * watermarks, equality deletes — carries forward from the base. The
+    * commit reads nothing of the base from disk again. Returns the
+    * claimed version. */
+  private[graft] def commit(path: String, base: Manifest,
+      regroup: Boolean = false)(change: Manifest => Manifest): Long = {
+    val next = change(base)
+    val v = base.version + 1
+    // While any equality delete is live, every file NEW in this commit
+    // gets stamped addedv = v, the exemption marker that keeps deletes
+    // applying only to files that existed before them (a file the
+    // commit merely carries forward keeps whatever it had — 0 means
+    // "predates every delete").
+    val files =
+      if (next.eqDels.isEmpty) next.entries
       else {
-        val baseNames =
-          if (baseVersion > 0)
-            readManifestFile(baseFile).map(_._2.map(_.file).toSet)
-              .getOrElse(Set.empty[String])
-          else Set.empty[String]
-        files.map(e =>
+        val baseNames = base.files(path).iterator.map(_.file).toSet
+        next.entries.map(e =>
           if (e.addedv == 0L && !baseNames.contains(e.file)) e.copy(addedv = v)
           else e)
       }
-    writeManifestAtomicAt(path, v, schema, stamped, epoch, op, txns, eqs,
-      regroup)
-    v
-  }
-
-  /** The latest committed (version, schema, entries) as ONE observation —
-    * the base every compare-and-swap commit must be computed from. The
-    * version comes from the same snapshot file the content is read from,
-    * so a commit claiming version+1 proves no interleaving writer. For a
-    * table with no snapshot yet: (0, None). */
-  private[graft] def readLatestVersioned(
-      path: String): (Long, Option[(StructType, Seq[FileEntry])]) =
-    snapshotFiles(path).lastOption match {
-      case Some(f) =>
-        (f.getName.stripPrefix(ManifestName + ".v").toLong, readManifestFile(f))
-      case None => (math.max(0L, readVersion(path)), readManifest(path))
-    }
-
-  /** The claim-then-refresh step at an EXPLICIT version id (split out so
-    * the conflict branch is unit-testable without a thread race). */
-  private[graft] def writeManifestAtomicAt(
-      path: String, v: Long, schema: StructType, files: Seq[FileEntry],
-      epoch: Option[Long] = None, op: String = "",
-      txns: Map[String, Long] = Map.empty,
-      eqDels: Seq[EqDelete] = Seq.empty,
-      regroup: Boolean = false): Unit = {
-    val tmp = Paths.get(path, s"$ManifestTmpPrefix${java.util.UUID.randomUUID()}")
-    // !uid = this manifest WRITE's unique identity — the only sound cache
-    // key: version numbers restart when a table is dropped and recreated
-    // in the same directory, and (mtime, size) collides across same-tick
-    // equal-length rewrites (see manifestCache)
-    // STRICTLY MONOTONIC commit timestamps (the Delta rule, r17 advice):
-    // two commits landing in the same millisecond would make
-    // timestamp-AS-OF / table_changes boundary resolution ambiguous
-    // (commits.find(ts >= x) could straddle them) — stamp
-    // max(now, prev_ts + 1) so the commit index is a strict order.
-    val ts = math.max(System.currentTimeMillis(),
-      readTsOf(new File(path, s"$ManifestName.v${v - 1}")) + 1L)
     // past the shard threshold the entry block becomes a manifest list
     // (see the sharding section above); children land before the claim
     // below, so they are invisible until this commit wins. A base that
@@ -1459,11 +1368,7 @@ object GraftStore {
     // parent: answers right, metadata wall back); the layout follows
     // the TABLE, the session conf only tunes chunk size and first entry.
     val threshold = shardThreshold
-    // def, not val: only the files.size <= threshold branch needs it, and
-    // for a pre-!uid legacy base this is an uncacheable O(entries) parse
-    def baseSharded = v > 1 && readManifestStructured(
-      new File(path, s"$ManifestName.v${v - 1}")).exists(_._4.nonEmpty)
-    val entryLines =
+    val (inline, children) =
       if (regroup)
         // rewrite_manifests: force the canonical layout at the CURRENT
         // threshold — full regroup (never the carry-forward fast path,
@@ -1471,21 +1376,27 @@ object GraftStore {
         // the explicit override of the layout-follows-the-table rule: a
         // table whose entry count shrank back under the threshold
         // collapses to inline here and only here
-        if (files.size > threshold) shardEntries(path, schema, files, threshold)
-        else files.map(fmtEntry)
-      else if (files.size > threshold || (files.nonEmpty && baseSharded))
-        shardEntriesIncremental(path, schema, files, threshold, v)
-      else files.map(fmtEntry)
-    val lines = schema.toDDL +: (s"!version=$v" +:
-      (s"!uid=${java.util.UUID.randomUUID()}" +:
-        (s"!ts=$ts" +:
-          (s"!stats=$StatsFormatVersion" +:
-          ((if (op.nonEmpty) Seq(s"!op=$op") else Seq.empty) ++
-            epoch.map(e => s"!epoch=$e").toSeq ++
-            txns.toSeq.sortBy(_._1).map { case (a, ver) => s"!txn=$a:$ver" } ++
-            eqDels.map(fmtEqDelete) ++
-            entryLines)))))
-    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
+        if (files.size > threshold)
+          (Seq.empty, shardEntries(path, next.schema, files, threshold))
+        else (files, Seq.empty)
+      else if (files.size > threshold || (files.nonEmpty && base.children.nonEmpty))
+        (Seq.empty, shardEntriesIncremental(path, next.schema, files, threshold, base))
+      else (files, Seq.empty)
+    // !uid = this manifest WRITE's unique identity — the only sound cache
+    // key: version numbers restart when a table is dropped and recreated
+    // in the same directory, and (mtime, size) collides across same-tick
+    // equal-length rewrites (see manifestCache).
+    // STRICTLY MONOTONIC commit timestamps (the Delta rule, r17 advice):
+    // two commits landing in the same millisecond would make
+    // timestamp-AS-OF / table_changes boundary resolution ambiguous
+    // (commits.find(ts >= x) could straddle them) — stamp
+    // max(now, prev_ts + 1) so the commit index is a strict order.
+    val text = Manifest.fmt(next.copy(version = v,
+      uid = java.util.UUID.randomUUID().toString,
+      ts = math.max(System.currentTimeMillis(), base.ts + 1L),
+      entries = inline, children = children, demoted = Set.empty))
+    val tmp = Paths.get(path, s"$ManifestTmpPrefix${java.util.UUID.randomUUID()}")
+    Files.write(tmp, text.getBytes(StandardCharsets.UTF_8))
     try Files.createLink(Paths.get(path, s"$ManifestName.v$v"), tmp)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
@@ -1498,6 +1409,7 @@ object GraftStore {
     Files.move(tmp, Paths.get(path, ManifestName),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     repointIfBehind(path)
+    v
   }
 
   /** If a racing pointer refresh landed out of order, re-point to the
@@ -1513,15 +1425,6 @@ object GraftStore {
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     }
   }
-
-  /** The latest COMMITTED table state — the highest retained snapshot if
-    * the pointer lags it (commit retry must merge against this, never a
-    * stale pointer). */
-  private[graft] def readLatest(path: String): Option[(StructType, Seq[FileEntry])] =
-    snapshotFiles(path).lastOption match {
-      case Some(f) => readManifestFile(f)
-      case None => readManifest(path)
-    }
 
   /** Snapshot retention: keep the newest `keepLast` snapshot manifests
     * (the current pointer's snapshot is always among them), delete the
@@ -1544,15 +1447,8 @@ object GraftStore {
       .filterNot(f => tagged.contains(
         f.getName.stripPrefix(ManifestName + ".v").toLong))
       .foreach(_.delete())
-    gcUnreferenced(path,
-      readManifestFull(new File(path, ManifestName))
-        .map { case (_, es, eqs) =>
-          es.flatMap(e =>
-            if (e.dv.isEmpty) Seq(e.file) else Seq(e.file, e.dv)) ++
-            eqs.map(_.file)
-        }
-        .getOrElse(Seq.empty).toSet,
-      graceMs)
+    // the sweep keeps whatever the pointer and the retained snapshots name
+    gcUnreferenced(path, Set.empty, graceMs)
   }
 
   /** TIME-BASED snapshot retention (round 15) — the form every
@@ -1565,7 +1461,7 @@ object GraftStore {
     * always among them), and TAGGED snapshots survive at any age —
     * the same ref-retention contract as count-based expiry. A
     * snapshot's commit time is its manifest file's mtime: every commit
-    * writes `_manifest.v<n>` exactly once (writeManifestAtomic renames
+    * writes `_manifest.v<n>` exactly once ([[commit]] renames
     * over nothing), so the mtime is the publish instant. */
   private[graft] def expireSnapshotsOlderThan(path: String,
       olderThanMs: Long, keepLastFloor: Int = 1,
@@ -1579,15 +1475,8 @@ object GraftStore {
       .filterNot(f => tagged.contains(
         f.getName.stripPrefix(ManifestName + ".v").toLong))
       .foreach(_.delete())
-    gcUnreferenced(path,
-      readManifestFull(new File(path, ManifestName))
-        .map { case (_, es, eqs) =>
-          es.flatMap(e =>
-            if (e.dv.isEmpty) Seq(e.file) else Seq(e.file, e.dv)) ++
-            eqs.map(_.file)
-        }
-        .getOrElse(Seq.empty).toSet,
-      graceMs)
+    // the sweep keeps whatever the pointer and the retained snapshots name
+    gcUnreferenced(path, Set.empty, graceMs)
   }
 
   /** NAMED SNAPSHOT REFS — TAGS (the Iceberg `tag` surface): a durable
@@ -1688,8 +1577,7 @@ object GraftStore {
     val bp = branchPath(path, name)
     require(!new File(bp, ManifestName).exists(),
       s"branch '$name' already exists at $path — drop it first")
-    val (forkV, latest) = readLatestVersioned(path)
-    require(latest.isDefined, s"no graft-store table at $path")
+    val forkV = latest(path).getOrElse(throw missingSnapshot(path, None)).version
     // the branch's first manifest is numbered forkV (NOT 1): inherited
     // addedv / eq-delete seq values are main-lineage version numbers, so
     // the branch's own commits (forkV+1, ...) stay ordered after them —
@@ -1780,11 +1668,12 @@ object GraftStore {
     * the same branch can keep accumulating the next audit cycle. */
   private[graft] def fastForward(path: String, name: String): Long = {
     val bp = branchPath(path, name)
-    val (schema, entries, eqDels) = readManifestFull(
-      new File(bp, ManifestName)).getOrElse(
+    val tip = snapshot(new File(bp, ManifestName)).getOrElse(
       throw new IllegalArgumentException(s"no branch '$name' at $path"))
+    val (entries, eqDels) = (tip.files(bp), tip.eqDels)
     val forkV = branchForkVersion(path, name)
-    val (mainV, _) = readLatestVersioned(path)
+    val main = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val mainV = main.version
     require(mainV == forkV,
       s"cannot fast-forward '$name' into $path: main is at v$mainV but " +
         s"the branch forked at v$forkV — main has committed since the " +
@@ -1823,13 +1712,14 @@ object GraftStore {
         s"(e.g. ${hazard.head._1} vs ${hazard.head._2}) — squashing the " +
         "branch history into one publish commit would exempt it and " +
         "resurrect deleted rows; run purgeDeletes on the branch first")
-    val v0 = mainV + 1 // the version writeManifestAtomic will claim
+    val v0 = mainV + 1 // the version the commit will claim
     val squashedEntries = entries.map(e =>
       if (e.addedv > forkV) e.copy(addedv = v0) else e)
     val squashedDels = eqDels.map(d =>
       if (d.seq > forkV) d.copy(seq = v0) else d)
-    val v = writeManifestAtomic(path, mainV, schema, squashedEntries,
-      op = s"fastForward($name)", eqDels = Some(squashedDels))
+    val v = commit(path, main)(_.copy(schema = tip.schema,
+      entries = squashedEntries, op = s"fastForward($name)", epoch = None,
+      eqDels = squashedDels))
     Files.write(Paths.get(bp, ForkFileName),
       v.toString.getBytes(StandardCharsets.UTF_8))
     v
@@ -1856,15 +1746,13 @@ object GraftStore {
     * undoes it — the documented RESTORE hazard) or conflicts and
     * retries on top. */
   private[graft] def restore(path: String, version: Long): Long = {
-    val (schema, entries, eqDels) = readManifestFull(
-      new File(path, s"$ManifestName.v$version")).getOrElse(
-      throw new IllegalArgumentException(
-        s"no snapshot v$version at $path (never committed, or expired)"))
-    val (base, _) = readLatestVersioned(path)
+    val old = snapshot(new File(path, s"$ManifestName.v$version"))
+      .getOrElse(throw missingSnapshot(path, Some(version)))
     // the restored snapshot's equality deletes come with it (restoring
     // to before a delete revives the rows; to after keeps them hidden)
-    writeManifestAtomic(path, base, schema, entries,
-      op = s"restore(v$version)", eqDels = Some(eqDels))
+    commit(path, latest(path).getOrElse(throw missingSnapshot(path, None)))(
+      _.copy(schema = old.schema, entries = old.files(path),
+        op = s"restore(v$version)", epoch = None, eqDels = old.eqDels))
   }
 
   /** METADATA-ONLY MANIFEST REWRITE (`CALL cat.system.rewrite_manifests`,
@@ -1888,17 +1776,13 @@ object GraftStore {
     // not die on the CAS. Recomputing from the new base is always sound
     // here — the regroup is metadata-only and derives entirely from
     // whatever file list the re-read observes.
-    def childCount(v: Long): Long = readManifestStructured(
-      new File(path, s"$ManifestName.v$v")).map(_._4.size.toLong).getOrElse(0L)
     retryOnConflict {
-      val (baseV, latest) = readLatestVersioned(path)
-      val (schema, entries) = latest.getOrElse(throw new IllegalArgumentException(
-        s"no graft-store table at $path"))
-      (baseV, schema, entries, childCount(baseV))
-    } { case (baseV, schema, entries, before) =>
-      val v = writeManifestAtomic(path, baseV, schema, entries,
-        epoch = readEpoch(path), op = "rewrite_manifests", regroup = true)
-      (v, before, childCount(v))
+      latest(path).getOrElse(throw missingSnapshot(path, None))
+    } { base =>
+      val v = commit(path, base, regroup = true)(
+        _.copy(entries = base.files(path), op = "rewrite_manifests"))
+      (v, base.children.size.toLong, snapshot(new File(path,
+        s"$ManifestName.v$v")).fold(0L)(_.children.size.toLong))
     }
   }
 
@@ -1915,9 +1799,9 @@ object GraftStore {
     * any, is cloned with the table. */
   private[graft] def cloneTable(src: String, dst: String,
       startVersion: Option[Long] = None): Unit = {
-    val (schema, entries, eqDels) = readManifestFull(
-      new File(src, ManifestName)).getOrElse(
-      throw new IllegalArgumentException(s"no graft-store table at $src"))
+    val from = snapshot(new File(src, ManifestName))
+      .getOrElse(throw missingSnapshot(src, None))
+    val (entries, eqDels) = (from.files(src), from.eqDels)
     Files.createDirectories(Paths.get(dst))
     entries.foreach { e =>
       val to = Paths.get(dst, e.file)
@@ -1944,9 +1828,11 @@ object GraftStore {
     // eq-delete seq values then stay coherent with versions the clone
     // itself commits next (a v1-restart clone with live deletes could
     // otherwise mint a new delete whose seq is BELOW inherited addedv
-    // stamps — see the guard in commitEqDelete)
-    writeManifestAtomicAt(dst, startVersion.getOrElse(1L), schema, entries,
-      op = s"clone(v${readVersion(src)})", eqDels = eqDels)
+    // stamps — see the guard in commitEqDelete). Its base holds the
+    // source's files and deletes at the clone's numbering, so the commit
+    // stamps no file as new.
+    commit(dst, Manifest(from.schema, version = startVersion.getOrElse(1L) - 1,
+      eqDels = eqDels, entries = entries))(_.copy(op = s"clone(v${from.version})"))
   }
 
   /** MERGE-ON-READ DELETE via deletion vectors (the Delta/Iceberg-v2 DV
@@ -1976,9 +1862,8 @@ object GraftStore {
   private[graft] def deleteWhereDV(spark: org.apache.spark.sql.SparkSession,
       path: String, condition: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.col
-    val (base, latest) = readLatestVersioned(path)
-    val (schema, entries) = latest.getOrElse(
-      throw new IllegalArgumentException(s"no graft-store table at $path"))
+    val snap = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val (base, entries) = (snap.version, snap.files(path))
     val oldDvByFile = entries.map(e => e.file -> e.dv).toMap
     val absRoot = new File(path).getAbsolutePath
     val stamp = java.util.UUID.randomUUID().toString.take(8)
@@ -2027,8 +1912,7 @@ object GraftStore {
         case None => Some(e)
       }
     }
-    writeManifestAtomic(path, base, schema, newEntries, readEpoch(path),
-      op = "delete")
+    commit(path, snap)(_.copy(entries = newEntries, op = "delete"))
   }
 
   /** A file's column stats once a deletion vector hides more of its
@@ -2087,9 +1971,8 @@ object GraftStore {
       appendRows: Option[org.apache.spark.sql.DataFrame], op: String): Long = {
     import org.apache.spark.sql.types.{DateType, IntegerType, LongType,
       StringType, TimestampNTZType, TimestampType}
-    val (base0, latest0) = readLatestVersioned(path)
-    val (tblSchema, _) = latest0.getOrElse(throw new IllegalArgumentException(
-      s"no graft-store table at $path"))
+    val snap0 = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val tblSchema = snap0.schema
     val keyCols = keys.schema.fields.map(_.name).toSeq
     keys.schema.fields.foreach { f =>
       val tf = tblSchema.fields.find(_.name == f.name).getOrElse(
@@ -2184,18 +2067,15 @@ object GraftStore {
       if (sidecarsF == null) writeSidecars()
       else try sidecarsF.get()
       catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-    if (sidecars.isEmpty && fresh.isEmpty) return base0
+    if (sidecars.isEmpty && fresh.isEmpty) return snap0.version
     // commit with append-style retry: key deletes stay valid under any
     // concurrent commit (they address KEYS, not positions), so a lost
     // CAS just re-reads the base — the delete's seq becomes the new
     // commit's version, which still post-dates every pre-existing file
     retryOnConflict {
-      val (base, latest) = readLatestVersioned(path)
-      val (sch, entries) = latest.getOrElse((tblSchema, Seq.empty[FileEntry]))
-      val carried =
-        if (base > 0) readEqDeletesOf(new File(path, s"$ManifestName.v$base"))
-        else Seq.empty
-      val seq = base + 1
+      val base = latest(path).getOrElse(Manifest(tblSchema))
+      val entries = base.files(path)
+      val seq = base.version + 1
       // lineage soundness: an addedv stamp at or beyond this commit's seq
       // can only come from a v1-restart clone of a table whose history
       // was longer than the clone's — minting a delete here would be
@@ -2207,10 +2087,10 @@ object GraftStore {
           "(a restarted-lineage clone of a longer history) — an equality " +
           "delete committed now would not apply to those files; " +
           "purgeDeletes on the source then re-clone, or OPTIMIZE first")
-      (base, sch, entries, carried ++ sidecars.map(f => EqDelete(f, seq, keyCols)))
-    } { case (base, sch, entries, eqDels) =>
-      writeManifestAtomic(path, base, sch, entries ++ fresh,
-        readEpoch(path), op = op, eqDels = Some(eqDels))
+      (base, entries)
+    } { case (base, entries) =>
+      commit(path, base)(b => b.copy(entries = entries ++ fresh, op = op,
+        eqDels = b.eqDels ++ sidecars.map(EqDelete(_, b.version + 1, keyCols))))
     }
   }
 
@@ -2255,16 +2135,12 @@ object GraftStore {
     * version (base version if the table has no DVs). */
   private[graft] def purgeDeletes(spark: org.apache.spark.sql.SparkSession,
       path: String): Long = {
-    val (base, latest) = readLatestVersioned(path)
-    val (schema, entries) = latest.getOrElse(
-      throw new IllegalArgumentException(s"no graft-store table at $path"))
+    val snap = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val (base, entries, eqDels0) = (snap.version, snap.files(path), snap.eqDels)
     // fold BOTH delete flavors: position vectors and applicable
     // equality deletes (the read below composes them, so the rewritten
     // files are clean of each) — afterwards the eqdel headers drop and
     // metadata-only answers come back
-    val eqDels0 =
-      if (base > 0) readEqDeletesOf(new File(path, s"$ManifestName.v$base"))
-      else Seq.empty
     val dvd = entries.filter(e =>
       e.dv.nonEmpty || eqDels0.exists(e.addedv < _.seq))
     if (dvd.isEmpty && eqDels0.isEmpty) return base
@@ -2278,9 +2154,9 @@ object GraftStore {
         .option("path", scratch.getAbsolutePath).mode("append").save()
     val fresh = linkStamped(path, scratch, "purge")
     val dvdSet = dvd.map(_.file).toSet
-    val v = writeManifestAtomic(path, base, schema,
-      entries.filterNot(e => dvdSet.contains(e.file)) ++ fresh,
-      readEpoch(path), op = "optimize", eqDels = Some(Seq.empty))
+    val v = commit(path, snap)(_.copy(
+      entries = entries.filterNot(e => dvdSet.contains(e.file)) ++ fresh,
+      op = "optimize", eqDels = Seq.empty))
     deleteRecursively(scratch) // data bytes survive via the hard links
     v
   }
@@ -2306,15 +2182,12 @@ object GraftStore {
   private[graft] def compactSorted(spark: org.apache.spark.sql.SparkSession,
       path: String, sortBy: Seq[String],
       targetBytes: Long = Long.MaxValue): Long = {
-    val (base, latest) = readLatestVersioned(path)
-    val (schema, entries) = latest.getOrElse(
-      throw new IllegalArgumentException(s"no graft-store table at $path"))
+    val snap = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val (base, schema, entries) = (snap.version, snap.schema, snap.files(path))
     require(sortBy.nonEmpty, "compactSorted needs at least one sort column")
     sortBy.foreach(c => require(schema.fieldNames.contains(c),
       s"no column '$c' at $path — columns: ${schema.fieldNames.mkString(", ")}"))
-    val eqDels0 =
-      if (base > 0) readEqDeletesOf(new File(path, s"$ManifestName.v$base"))
-      else Seq.empty
+    val eqDels0 = snap.eqDels
     val (dvEntries, packable) = entries.partition(e =>
       e.dv.nonEmpty || eqDels0.exists(e.addedv < _.seq))
     if (packable.isEmpty) return -1L
@@ -2332,9 +2205,9 @@ object GraftStore {
       .option("path", scratch.getAbsolutePath).mode("append").save()
     val renamed = linkStamped(path, scratch, "sortopt")
     val packedSet = packable.map(_.file).toSet
-    val v = writeManifestAtomic(path, base, schema,
-      entries.filterNot(e => packedSet.contains(e.file)) ++ renamed,
-      readEpoch(path), op = "optimize")
+    val v = commit(path, snap)(_.copy(
+      entries = entries.filterNot(e => packedSet.contains(e.file)) ++ renamed,
+      op = "optimize"))
     deleteRecursively(scratch) // data bytes survive via the hard links
     gcUnreferenced(path, (dvEntries.flatMap(e =>
       if (e.dv.isEmpty) Seq(e.file) else Seq(e.file, e.dv)) ++
@@ -2355,15 +2228,16 @@ object GraftStore {
     * lost update (re-branch and replay is the resolution, exactly
     * git's fast-forward-only discipline). Returns main's new version. */
   private[graft] def publish(mainPath: String, branchPath: String): Long = {
-    val (schema, entries, brEqDels) = readManifestFull(
-      new File(branchPath, ManifestName)).getOrElse(
+    val tip = snapshot(new File(branchPath, ManifestName)).getOrElse(
       throw new IllegalArgumentException(
         s"no graft-store branch table at $branchPath"))
-    val v1op = readOpOf(new File(branchPath, s"$ManifestName.v1"))
+    val (entries, brEqDels) = (tip.files(branchPath), tip.eqDels)
+    val v1op = snapshot(new File(branchPath, s"$ManifestName.v1")).fold("")(_.op)
     require(v1op.startsWith("clone(v"),
       s"publish source is not a cloned branch (v1 op is '$v1op')")
     val forkV = v1op.stripPrefix("clone(v").stripSuffix(")").toLong
-    val (mainV, _) = readLatestVersioned(mainPath)
+    val main = latest(mainPath).getOrElse(Manifest(tip.schema))
+    val mainV = main.version
     if (mainV != forkV)
       throw new ConflictException(
         s"cannot fast-forward publish: main is at v$mainV but the branch " +
@@ -2388,8 +2262,8 @@ object GraftStore {
         Files.createLink(to, Paths.get(branchPath, d.file))
       }
     }
-    writeManifestAtomic(mainPath, mainV, schema, entries, op = "publish",
-      eqDels = Some(brEqDels))
+    commit(mainPath, main)(_.copy(schema = tip.schema, entries = entries,
+      op = "publish", epoch = None, eqDels = brEqDels))
   }
 
   private[sources] def deleteRecursively(f: File): Unit = {
@@ -2405,18 +2279,14 @@ object GraftStore {
     * pre-op-tracking manifests). */
   private[graft] def history(path: String): Seq[(Long, Long, Long, String)] =
     snapshotFiles(path).map { f =>
-      val v = f.getName.stripPrefix(ManifestName + ".v").toLong
       // answer from the parent alone: ChildRef lines already carry each
       // child's entry count and row sum, so a sharded snapshot's history
       // row costs zero child-manifest opens — keeping the documented
       // "one small file read per retained version" contract (r18 review)
-      val (nFiles, nRows) = readManifestStructured(f) match {
-        case Some((_, inline, _, children)) =>
-          (inline.size.toLong + children.map(_.nfiles).sum,
-            inline.map(_.rows).sum + children.map(_.rows).sum)
-        case None => (0L, 0L)
-      }
-      (v, nFiles, nRows, readOpOf(f))
+      val m = snapshot(f).getOrElse(Manifest(new StructType()))
+      (f.getName.stripPrefix(ManifestName + ".v").toLong,
+        m.entries.size.toLong + m.children.map(_.nfiles).sum,
+        m.entries.map(_.rows).sum + m.children.map(_.rows).sum, m.op)
     }
 
   /** The (schema, entries) a read with these options sees: the current
@@ -2444,20 +2314,15 @@ object GraftStore {
 
   private[sources] def selectWithEq(path: String, versionAsOf: Option[Long],
       fromVersion: Option[Long]): (StructType, Seq[FileEntry], Seq[EqDelete]) = {
-    val (schema, current, eqDels) = versionAsOf match {
-      case Some(v) =>
-        readManifestFull(new File(path, s"$ManifestName.v$v"))
-          .getOrElse(throw missingSnapshot(path, versionAsOf))
-      case None =>
-        readManifestFull(new File(path, ManifestName))
-          .getOrElse(throw missingSnapshot(path, None))
-    }
+    val m = snapshot(manifestFile(path, versionAsOf))
+      .getOrElse(throw missingSnapshot(path, versionAsOf))
+    val (schema, current, eqDels) = (m.schema, m.files(path), m.eqDels)
     val entries = fromVersion match {
       case Some(v) =>
-        val (_, baseEntries, baseEq) =
-          readManifestFull(new File(path, s"$ManifestName.v$v"))
-            .getOrElse(throw missingSnapshot(path, fromVersion))
-        val base = baseEntries.map(e => e.file -> e.dv).toMap
+        val from = snapshot(manifestFile(path, fromVersion))
+          .getOrElse(throw missingSnapshot(path, fromVersion))
+        val baseEq = from.eqDels
+        val base = from.files(path).map(e => e.file -> e.dv).toMap
         // a file whose DELETION VECTOR changed is content-mutated even
         // though its name survives — append-only means names AND dvs
         // are stable for every base file. An EQUALITY delete landing in
@@ -2493,20 +2358,16 @@ object GraftStore {
       versionAsOf: Option[Long],
       pushed: Seq[org.apache.spark.sql.sources.Filter])
     : (StructType, Seq[FileEntry], Seq[EqDelete]) = {
-    val f = versionAsOf match {
-      case Some(v) => new File(path, s"$ManifestName.v$v")
-      case None => new File(path, ManifestName)
-    }
-    val (schema, inline, eqDels, children) = readManifestStructured(f)
+    val m = snapshot(manifestFile(path, versionAsOf))
       .getOrElse(throw missingSnapshot(path, versionAsOf))
-    val kept = children.filter(c =>
+    (m.schema, m.files(path, c =>
       StatsPruning.evalAll(pushed, FileEntry(c.file, c.rows, c.stats),
-        schema) != StatsPruning.NoRows)
-    (schema,
-      inline ++ kept.flatMap(c =>
-        demoteChild(c, readChildEntries(f.getParentFile, c.file))),
-      eqDels)
+        m.schema) != StatsPruning.NoRows), m.eqDels)
   }
+
+  /** The pointer (None) or retained snapshot `v`'s manifest file. */
+  private[sources] def manifestFile(path: String, v: Option[Long]): File =
+    v.fold(new File(path, ManifestName))(x => new File(path, s"$ManifestName.v$x"))
 
   /** Flatten task commit messages: plain writers send one
     * [[GraftStoreCommitMessage]], partition-rolling writers send a
@@ -2749,9 +2610,8 @@ object GraftStore {
     * snapshots see the CURRENT spec for write-distribution purposes
     * only — their correctness never depended on it. */
   private[graft] def evolvePartitionBy(path: String, newSpec: Option[String]): Long = {
-    val (baseV, latest) = readLatestVersioned(path)
-    val (schema, entries) = latest.getOrElse(throw new IllegalArgumentException(
-      s"no graft-store table at $path"))
+    val base = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val (schema, entries) = (base.schema, base.files(path))
     val newTerms = partitionTermsOf(newSpec)
     validatePartitionTerms(schema, newTerms)
     // store the CANONICAL rendering (create-path format: no spaces), so
@@ -2763,8 +2623,8 @@ object GraftStore {
     // change, and a reader between commit and swap merely sees the new
     // version with the old spec, which is harmless (the spec is a
     // write-layout hint; every read-side consumer re-proves from stats)
-    val v = writeManifestAtomic(path, baseV, schema, entries,
-      epoch = readEpoch(path), op = "evolve-partition")
+    val v = commit(path, base)(_.copy(entries = entries,
+      op = "evolve-partition"))
     newCol match {
       case Some(c) =>
         val tmp = Paths.get(path, s"$PartitionTmpPrefix${java.util.UUID.randomUUID()}")
@@ -2795,9 +2655,8 @@ object GraftStore {
     * read-side fact). */
   private[graft] def renameColumn(path: String, from: String,
       to: String): Long = {
-    val (baseV, latest) = readLatestVersioned(path)
-    val (schema, entries) = latest.getOrElse(throw new IllegalArgumentException(
-      s"no graft-store table at $path"))
+    val base = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val (schema, entries) = (base.schema, base.files(path))
     require(schema.fieldNames.contains(from),
       s"no column '$from' at $path — columns: ${schema.fieldNames.mkString(", ")}")
     require(!schema.fieldNames.contains(to),
@@ -2825,11 +2684,10 @@ object GraftStore {
       } else k
     val newEntries = entries.map(e =>
       e.copy(stats = e.stats.map { case (k, v) => mapKey(k) -> v }))
-    val eqs = readEqDeletesOf(new File(path, s"$ManifestName.v$baseV"))
+    val eqs = base.eqDels
       .map(d => d.copy(cols = d.cols.map(c => if (c == from) to else c)))
-    val v = writeManifestAtomic(path, baseV, newSchema, newEntries,
-      epoch = readEpoch(path), op = s"rename($from->$to)",
-      eqDels = Some(eqs))
+    val v = commit(path, base)(_.copy(schema = newSchema, entries = newEntries,
+      op = s"rename($from->$to)", eqDels = eqs))
     readPartitionBy(path).foreach { spec =>
       val terms = partitionTermsOf(Some(spec))
       if (terms.exists(_.source == from)) {
@@ -2874,9 +2732,8 @@ object GraftStore {
       target: org.apache.spark.sql.types.DataType =
         org.apache.spark.sql.types.LongType): Long = {
     import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType}
-    val (baseV, latest) = readLatestVersioned(path)
-    val (schema, entries) = latest.getOrElse(throw new IllegalArgumentException(
-      s"no graft-store table at $path"))
+    val base = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val (schema, entries) = (base.schema, base.files(path))
     require(schema.fieldNames.contains(col),
       s"no column '$col' at $path — columns: ${schema.fieldNames.mkString(", ")}")
     val ord = schema.fieldIndex(col)
@@ -2952,7 +2809,7 @@ object GraftStore {
           s"cannot widen '$col' to double: it is a partition source " +
             s"in spec '$spec' — drop it from the spec (evolvePartitionBy) first")
       }
-      val liveEq = readEqDeletesOf(new File(path, s"$ManifestName.v$baseV"))
+      val liveEq = base.eqDels
       require(!liveEq.exists(_.cols.contains(col)),
         s"cannot widen '$col' to double: live equality deletes key on it " +
           "(their stored key renderings would no longer match) — run " +
@@ -2988,8 +2845,8 @@ object GraftStore {
       // native double stats again.
       if (target == DoubleType) e2.copy(stats = e2.stats - statName) else e2
     }
-    writeManifestAtomic(path, baseV, newSchema, newEntries,
-      epoch = readEpoch(path), op = s"widen($col)")
+    commit(path, base)(_.copy(schema = newSchema, entries = newEntries,
+      op = s"widen($col)"))
   }
 
   /** CHECK CONSTRAINTS (round 15) — Delta-style `check.<name>` table
@@ -3166,9 +3023,8 @@ object GraftStore {
     * columns carry no per-file stats, so nothing is dropped. */
   private[graft] def addStructField(path: String, col: String,
       field: String, dt: org.apache.spark.sql.types.DataType): Long = {
-    val (baseV, latest) = readLatestVersioned(path)
-    val (schema, entries) = latest.getOrElse(throw new IllegalArgumentException(
-      s"no graft-store table at $path"))
+    val base = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val (schema, entries) = (base.schema, base.files(path))
     require(schema.fieldNames.contains(col),
       s"no column '$col' at $path — columns: ${schema.fieldNames.mkString(", ")}")
     val ord = schema.fieldIndex(col)
@@ -3200,8 +3056,8 @@ object GraftStore {
             .sortBy(m => (nestedOrd(m), m)))
       }
     }
-    writeManifestAtomic(path, baseV, newSchema, newEntries,
-      epoch = readEpoch(path), op = s"evolve-nested($col.$field)")
+    commit(path, base)(_.copy(schema = newSchema, entries = newEntries,
+      op = s"evolve-nested($col.$field)"))
   }
 
   /** Physical position of logical subfield `logical` in bytes whose
@@ -3236,9 +3092,8 @@ object GraftStore {
     * written after the commit don't carry the field at all. */
   private[graft] def dropStructField(path: String, col: String,
       field: String): Long = {
-    val (baseV, latest) = readLatestVersioned(path)
-    val (schema, entries) = latest.getOrElse(throw new IllegalArgumentException(
-      s"no graft-store table at $path"))
+    val base = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val (schema, entries) = (base.schema, base.files(path))
     val (st, ord) = structAt(schema, path, col)
     require(st.fieldNames.contains(field),
       s"no field '$col.$field' — fields: ${st.fieldNames.mkString(", ")}")
@@ -3266,8 +3121,8 @@ object GraftStore {
             .sortBy(m => (nestedOrd(m), m)))
       }
     }
-    writeManifestAtomic(path, baseV, newSchema, newEntries,
-      epoch = readEpoch(path), op = s"evolve-nested(drop $col.$field)")
+    commit(path, base)(_.copy(schema = newSchema, entries = newEntries,
+      op = s"evolve-nested(drop $col.$field)"))
   }
 
   /** NESTED-FIELD WIDEN long→double (round 16) — metadata-only: the
@@ -3280,9 +3135,8 @@ object GraftStore {
     * doubles. Narrowing and other type flips refuse. */
   private[graft] def widenStructField(path: String, col: String,
       field: String, to: org.apache.spark.sql.types.DataType): Long = {
-    val (baseV, latest) = readLatestVersioned(path)
-    val (schema, entries) = latest.getOrElse(throw new IllegalArgumentException(
-      s"no graft-store table at $path"))
+    val base = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val (schema, entries) = (base.schema, base.files(path))
     val (st, ord) = structAt(schema, path, col)
     require(st.fieldNames.contains(field),
       s"no field '$col.$field' — fields: ${st.fieldNames.mkString(", ")}")
@@ -3314,8 +3168,8 @@ object GraftStore {
             .sortBy(m => (nestedOrd(m), m)))
       }
     }
-    writeManifestAtomic(path, baseV, newSchema, newEntries,
-      epoch = readEpoch(path), op = s"evolve-nested(widen $col.$field)")
+    commit(path, base)(_.copy(schema = newSchema, entries = newEntries,
+      op = s"evolve-nested(widen $col.$field)"))
   }
 
   /** RENAME a struct subfield — pure metadata: data is positional and
@@ -3324,9 +3178,8 @@ object GraftStore {
     * enforced at their creation sites). */
   private[graft] def renameStructField(path: String, col: String,
       from: String, to: String): Long = {
-    val (baseV, latest) = readLatestVersioned(path)
-    val (schema, entries) = latest.getOrElse(throw new IllegalArgumentException(
-      s"no graft-store table at $path"))
+    val base = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val (schema, entries) = (base.schema, base.files(path))
     require(schema.fieldNames.contains(col),
       s"no column '$col' at $path")
     val ord = schema.fieldIndex(col)
@@ -3345,8 +3198,8 @@ object GraftStore {
     val newSchema = StructType(schema.fields.zipWithIndex.map { case (f, i) =>
       if (i == ord) f.copy(dataType = newStruct) else f
     })
-    writeManifestAtomic(path, baseV, newSchema, entries,
-      epoch = readEpoch(path), op = s"evolve-nested($col.$from->$to)")
+    commit(path, base)(_.copy(schema = newSchema, entries = entries,
+      op = s"evolve-nested($col.$from->$to)"))
   }
 
   /** Shared per-transform validation (create / evolve must agree):
@@ -3534,17 +3387,13 @@ object GraftStore {
       toV: Long): Seq[CdfUnit] = {
     require(0 <= fromV && fromV <= toV,
       s"invalid change range v$fromV..v$toV")
-    def manifestAt(v: Long): (String, StructType, Seq[FileEntry]) = {
-      val f = new File(path, s"$ManifestName.v$v")
-      val (sch, entries) = readManifestFile(f).getOrElse(
+    def manifestAt(v: Long): Manifest =
+      snapshot(new File(path, s"$ManifestName.v$v")).getOrElse(
         throw new IllegalArgumentException(
           s"snapshot v$v at $path is not retained (expired or never " +
             "committed) — a change feed needs every snapshot in its range"))
-      (readOpOf(f), sch, entries)
-    }
     def eqAt(v: Long): Seq[EqDelete] =
-      if (v <= 0) Seq.empty
-      else readEqDeletesOf(new File(path, s"$ManifestName.v$v"))
+      if (v <= 0) Seq.empty else manifestAt(v).eqDels
     // A type-widening commit inside the range flips the feed's output
     // schema. The feed reads EVERYTHING under the schema at `toV` and
     // upgrades each unit's narrow markers STRUCTURALLY: for every
@@ -3556,7 +3405,7 @@ object GraftStore {
     // identically. Old images from pre-widen versions thus emit in the
     // WIDENED type, the Delta/Iceberg changelog behavior.
     import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType, LongType}
-    val tgtSchema = if (toV > 0) manifestAt(toV)._2 else StructType(Seq.empty)
+    val tgtSchema = if (toV > 0) manifestAt(toV).schema else StructType(Seq.empty)
     val tgtTypes = tgtSchema.fields.map(_.dataType)
     def upgradeNarrow(e: FileEntry, srcSchema: StructType): Seq[Int] = {
       val srcTypes = srcSchema.fields.map(_.dataType)
@@ -3701,7 +3550,7 @@ object GraftStore {
     // compound corner honestly (widenColumn itself refuses it for live
     // deletes, but an old range can still hold since-purged ones)
     (fromV to toV).filter(_ > 0).foreach { v =>
-      lazy val sch = manifestAt(v)._2
+      lazy val sch = manifestAt(v).schema
       eqAt(v).foreach { d =>
         d.cols.foreach { c =>
           val srcDt = if (sch.fieldNames.contains(c))
@@ -3718,15 +3567,15 @@ object GraftStore {
     var base: Map[String, FileEntry] = Map.empty
     var baseSchema: StructType = tgtSchema
     if (fromV > 0) {
-      val (_, sch0, entries0) = manifestAt(fromV)
-      base = entries0.map(e => e.file -> e).toMap
-      baseSchema = sch0
+      val m = manifestAt(fromV)
+      base = m.files(path).map(e => e.file -> e).toMap
+      baseSchema = m.schema
     }
     var eqBase: Seq[EqDelete] = eqAt(fromV)
     (fromV + 1 to toV).flatMap { v =>
-      val (op, curSchema, entries) = manifestAt(v)
-      val cur = entries.map(e => e.file -> e).toMap
-      val eqCur = eqAt(v)
+      val m = manifestAt(v)
+      val (op, curSchema, eqCur) = (m.op, m.schema, m.eqDels)
+      val cur = m.files(path).map(e => e.file -> e).toMap
       def baseNarrow(e: FileEntry): Seq[Int] = upgradeNarrow(e, baseSchema)
       def curNarrow(e: FileEntry): Seq[Int] = upgradeNarrow(e, curSchema)
       def baseNested(e: FileEntry): Seq[Int] = upgradeNested(e, baseSchema)
@@ -3822,22 +3671,6 @@ object GraftStore {
       out
     }
   }
-
-  /** Schema committed at snapshot `v` (None below v1). Streams compare
-    * consecutive batch endpoints' schemas STRUCTURALLY — a type flip or
-    * arity change mid-batch means the stream's fixed start-time schema
-    * no longer matches the files, however the evolving commit was
-    * labeled (a widen smuggled in by a fastForward publish carries
-    * op="fastForward(…)", so an op-string check would miss it). */
-  private[sources] def schemaAt(path: String, v: Long): Option[StructType] =
-    if (v <= 0) None
-    else readSchemaOf(new File(path, s"$ManifestName.v$v"))
-
-  /** Schema WITHOUT flattening children — the DDL line is in the parent,
-    * so schema-only consumers (inferSchema, schema pins) never pay a
-    * child-manifest open on a sharded table. */
-  private[graft] def readSchemaOf(f: File): Option[StructType] =
-    readManifestStructured(f).map(_._1)
 
   /** Resolve equality deletes to reader-side refs (sidecar absolute
     * path + key ordinals and type tags in `schema`); a key column the
@@ -3977,18 +3810,15 @@ object GraftStore {
   private[graft] def compact(spark: org.apache.spark.sql.SparkSession,
       path: String, targetBytes: Long,
       scope: Option[org.apache.spark.sql.sources.Filter] = None): Long = {
-    val (base, latest) = readLatestVersioned(path)
-    val (schema, entries) = latest.getOrElse(
-      throw new IllegalArgumentException(s"no graft-store table at $path"))
+    val snap = latest(path).getOrElse(throw missingSnapshot(path, None))
+    val (schema, entries) = (snap.schema, snap.files(path))
     // delete-vectored files never join a bin: a byte concat would revive
     // their deleted frames — purgeDeletes is their compaction path.
     // Files with an APPLICABLE equality delete stay out for the same
     // reason in reverse: the packed entry is stamped addedv = the
     // compaction version, which would EXEMPT it from the very deletes
     // that still hide its rows
-    val eqDels0 =
-      if (base > 0) readEqDeletesOf(new File(path, s"$ManifestName.v$base"))
-      else Seq.empty
+    val eqDels0 = snap.eqDels
     val (dvEntries, packable0) = entries.partition(e =>
       e.dv.nonEmpty || eqDels0.exists(e.addedv < _.seq))
     // scoped compaction keeps out-of-scope and stats-undecidable files
@@ -4113,8 +3943,7 @@ object GraftStore {
         case None => bin.head
       }
     }.toSeq ++ outOfScope ++ dvEntries
-    val v = writeManifestAtomic(path, base, schema, rewritten, readEpoch(path),
-      op = "optimize")
+    val v = commit(path, snap)(_.copy(entries = rewritten, op = "optimize"))
     gcUnreferenced(path, rewritten.flatMap(e =>
       if (e.dv.isEmpty) Seq(e.file) else Seq(e.file, e.dv)).toSet)
     v
@@ -4429,14 +4258,14 @@ object GraftStore {
     * `CALL remove_orphan_files` with an explicit age. */
   private[sources] def gcUnreferenced(path: String, referenced: Set[String],
       graceMs: Long = GcGraceMs): Long = {
-    val retained = snapshotFiles(path)
-      .flatMap(f => readManifestFull(f).toSeq.flatMap { case (_, es, eqs) =>
-        es.flatMap(e =>
-          if (e.dv.isEmpty) Seq(e.file) else Seq(e.file, e.dv)) ++
-          eqs.map(_.file)
-      })
-      .toSet
-    val keep = referenced ++ retained
+    // one walk over the pointer and every retained snapshot: the data
+    // files, deletion vectors, equality-delete sidecars and child
+    // manifests they name all survive
+    val snaps = (snapshotFiles(path) :+ new File(path, ManifestName)).flatMap(snapshot)
+    val keep = referenced ++ snaps.flatMap(m =>
+      m.files(path).flatMap(e =>
+        if (e.dv.isEmpty) Seq(e.file) else Seq(e.file, e.dv)) ++
+        m.eqDels.map(_.file))
     val cutoff = System.currentTimeMillis() - graceMs
     val dataDir = new File(path, "data")
     var removed = 0L
@@ -4451,9 +4280,7 @@ object GraftStore {
     // young unreferenced child may be someone's in-flight commit).
     // Swept children don't count toward `removed` (callers report DATA
     // files reclaimed).
-    val refChildren = (snapshotFiles(path) :+ new File(path, ManifestName))
-      .flatMap(f => readManifestStructured(f).toSeq.flatMap(_._4.map(_.file)))
-      .toSet
+    val refChildren = snaps.flatMap(_.children.map(_.file)).toSet
     // crash-residue sweep: every atomic metadata write stages through a
     // dot-tmp name in the table root (.manifest.tmp.*, .mchild.tmp.*,
     // .partition.tmp.*) and a writer SIGKILLed between the stage and the
@@ -4500,15 +4327,13 @@ class GraftStore extends TableProvider {
         Option(options.get("versionAsOf")) match {
           case Some(spec) =>
             val v = GraftStore.resolveVersionSpec(path, spec)
-            GraftStore.readSchemaOf(
-              new java.io.File(path, s"${GraftStore.ManifestName}.v$v"))
+            GraftStore.snapshot(GraftStore.manifestFile(path, Some(v)))
               .getOrElse(throw new IllegalArgumentException(
-                s"no snapshot v$v at $path (never committed, or expired)"))
+                s"no snapshot v$v at $path (never committed, or expired)")).schema
           case None =>
-            GraftStore.readSchemaOf(
-              new java.io.File(path, GraftStore.ManifestName))
+            GraftStore.snapshot(GraftStore.manifestFile(path, None))
               .getOrElse(throw new IllegalArgumentException(
-                s"no graft-store table at $path (missing ${GraftStore.ManifestName})"))
+                s"no graft-store table at $path (missing ${GraftStore.ManifestName})")).schema
         }
     }
   }
@@ -4684,18 +4509,17 @@ class GraftStoreTable(path: String, tableSchema: StructType,
     * (and clear live equality deletes — nothing left for them to
     * address); history stays time-travelable like every delete. */
   override def truncateTable(): Boolean = {
-    val (base, latest0) = GraftStore.readLatestVersioned(path)
-    latest0.foreach { case (sch, _) =>
-      GraftStore.writeManifestAtomic(path, base, sch, Seq.empty,
-        op = "delete", eqDels = Some(Seq.empty))
+    GraftStore.latest(path).foreach { base =>
+      GraftStore.commit(path, base)(_.copy(entries = Seq.empty, op = "delete",
+        epoch = None, eqDels = Seq.empty))
       GraftStore.gcUnreferenced(path, Set.empty)
     }
     true
   }
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
-    val (base, latest0) = GraftStore.readLatestVersioned(path)
-    val (sch, entries) = latest0.getOrElse(return)
+    val base = GraftStore.latest(path).getOrElse(return)
+    val (sch, entries) = (base.schema, base.files(path))
     val tri = entries.map(e =>
       e -> GraftStore.StatsPruning.evalAll(filters.toSeq, e, sch))
     // canDeleteWhere gates this, but belt-and-braces: an undecidable file
@@ -4703,7 +4527,8 @@ class GraftStoreTable(path: String, tableSchema: StructType,
     require(tri.forall(_._2 != GraftStore.StatsPruning.Unknown),
       s"delete predicate undecidable for ${tri.count(_._2 == GraftStore.StatsPruning.Unknown)} file(s)")
     val kept = tri.collect { case (e, GraftStore.StatsPruning.NoRows) => e }
-    GraftStore.writeManifestAtomic(path, base, sch, kept, op = "delete")
+    // the streaming epoch marker survives, as on every other DELETE path
+    GraftStore.commit(path, base)(_.copy(entries = kept, op = "delete"))
     GraftStore.gcUnreferenced(path, kept.map(_.file).toSet)
   }
 
@@ -4829,12 +4654,8 @@ class GraftStoreReplaceBatchWrite(path: String, schema: StructType,
   // into the rewrites (which the commit stamps exempt) — stale merge,
   // fail loudly like any interleaving commit (same guard as the DV
   // row-level path)
-  private val plannedEqDels: Seq[GraftStore.EqDelete] = {
-    val (v, _) = GraftStore.readLatestVersioned(path)
-    if (v <= 0) Seq.empty
-    else GraftStore.readEqDeletesOf(
-      new File(path, s"${GraftStore.ManifestName}.v$v"))
-  }
+  private val plannedEqDels: Seq[GraftStore.EqDelete] =
+    GraftStore.latest(path).fold(Seq.empty[GraftStore.EqDelete])(_.eqDels)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new GraftStoreReplaceWriterFactory(path, schema, stamp, rollOn)
@@ -4853,25 +4674,18 @@ class GraftStoreReplaceBatchWrite(path: String, schema: StructType,
     if (committed.nonEmpty)
       GraftStore.enforceChecks(org.apache.spark.sql.SparkSession.active,
         path, schema, committed, "rewritten")
-    val (base, latest0) = GraftStore.readLatestVersioned(path)
-    val (tblSchema, entries) = latest0
-      .getOrElse((schema, Seq.empty[GraftStore.FileEntry]))
-    val curEq =
-      if (base <= 0) Seq.empty
-      else GraftStore.readEqDeletesOf(
-        new File(path, s"${GraftStore.ManifestName}.v$base"))
-    if (curEq != plannedEqDels)
+    val base = GraftStore.latest(path).getOrElse(GraftStore.Manifest(schema))
+    if (base.eqDels != plannedEqDels)
       throw new GraftStore.ConflictException(
         "copy-on-write DML lost a conflict: equality deletes changed " +
           "under it since planning — re-run the DML against the " +
           "current table")
     val replaced = replacedFiles().toSet
-    val files = entries.filterNot(e => replaced(e.file)) ++ committed
+    val files = base.files(path).filterNot(e => replaced(e.file)) ++ committed
     // table schema and streaming-epoch marker survive DML untouched;
     // a commit that interleaved since this row-level operation's base
     // read surfaces as ConflictException (stale copy-on-write merge)
-    GraftStore.writeManifestAtomic(path, base, tblSchema, files,
-      GraftStore.readEpoch(path), op = "replace")
+    GraftStore.commit(path, base)(_.copy(entries = files, op = "replace"))
     GraftStore.gcUnreferenced(path, files.map(_.file).toSet)
   }
 
@@ -5003,19 +4817,16 @@ class GraftStoreDeltaBatchWrite(path: String, schema: StructType,
   // (file -> existing DV sidecar) captured on the driver at write
   // planning: executors merge new positions with the existing vector
   // (DVs are cumulative — one sidecar per file, ever)
+  private val planned = GraftStore.latest(path)
   private val oldDvByFile: Map[String, String] =
-    GraftStore.readLatest(path).map(_._2).getOrElse(Seq.empty)
+    planned.fold(Seq.empty[GraftStore.FileEntry])(_.files(path))
       .collect { case e if e.dv.nonEmpty => e.file -> e.dv }.toMap
   // equality deletes visible when this DML planned: a concurrent
   // eq-delete commit changes which rows EXIST without touching any
   // entry, so the planned row deltas were computed against rows that
   // may no longer be live — stale, fail loudly (checked in commit)
-  private val oldEqDels: Seq[GraftStore.EqDelete] = {
-    val (v, _) = GraftStore.readLatestVersioned(path)
-    if (v <= 0) Seq.empty
-    else GraftStore.readEqDeletesOf(
-      new File(path, s"${GraftStore.ManifestName}.v$v"))
-  }
+  private val oldEqDels: Seq[GraftStore.EqDelete] =
+    planned.fold(Seq.empty[GraftStore.EqDelete])(_.eqDels)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriterFactory =
@@ -5050,14 +4861,9 @@ class GraftStoreDeltaBatchWrite(path: String, schema: StructType,
     // with append-concurrency for free.
     import org.apache.spark.sql.connector.write.RowLevelOperation.Command
     val committed = GraftStore.retryOnConflict {
-      val (base, latest) = GraftStore.readLatestVersioned(path)
-      val (tblSchema, entries) = latest.getOrElse(
-        (schema, Seq.empty[GraftStore.FileEntry]))
-      val curEq =
-        if (base <= 0) Seq.empty
-        else GraftStore.readEqDeletesOf(
-          new File(path, s"${GraftStore.ManifestName}.v$base"))
-      if (curEq != oldEqDels)
+      val base = GraftStore.latest(path).getOrElse(GraftStore.Manifest(schema))
+      val entries = base.files(path)
+      if (base.eqDels != oldEqDels)
         throw new GraftStore.ConflictException(
           "merge-on-read DML lost a conflict: equality deletes changed " +
             "under it since planning — re-run the DML against the " +
@@ -5086,11 +4892,10 @@ class GraftStoreDeltaBatchWrite(path: String, schema: StructType,
           case None => Some(e)
         }
       } ++ inserts
-      (base, tblSchema, newEntries)
-    } { case (base, tblSchema, newEntries) =>
-      GraftStore.writeManifestAtomic(path, base, tblSchema, newEntries,
-        GraftStore.readEpoch(path),
-        op = if (cmd == Command.DELETE) "delete" else "replace")
+      (base, newEntries)
+    } { case (base, newEntries) =>
+      GraftStore.commit(path, base)(_.copy(entries = newEntries,
+        op = if (cmd == Command.DELETE) "delete" else "replace"))
       newEntries
     }
     GraftStore.gcUnreferenced(path,
@@ -5362,8 +5167,10 @@ class GraftStoreStreamingWrite(path: String, schema: StructType,
     }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val last = GraftStore.readEpoch(path)
-    if (last.exists(_ >= epochId)) {
+    // the replay check reads the snapshot the commit would swap against,
+    // never the pointer, which can lag it
+    val base = GraftStore.latest(path).getOrElse(GraftStore.Manifest(schema))
+    if (base.epoch.exists(_ >= epochId)) {
       // replayed epoch after recovery: already committed — drop the
       // redundant files, leave the manifest untouched (idempotence)
       flat(messages).foreach(m => new File(path, m.file).delete())
@@ -5377,21 +5184,15 @@ class GraftStoreStreamingWrite(path: String, schema: StructType,
       if (committed.nonEmpty)
         GraftStore.enforceChecks(org.apache.spark.sql.SparkSession.active,
           path, schema, committed, "epoch")
-      val (base, existing) = GraftStore.readLatestVersioned(path)
-      val previous =
-        if (truncateEachEpoch) Seq.empty
-        else existing.map(_._2).getOrElse(Seq.empty)
-      val files = previous ++ committed
+      val files = (if (truncateEachEpoch) Seq.empty else base.files(path)) ++ committed
       // append epochs keep the TABLE's schema (the query's output schema
       // may carry tighter nullability, e.g. literal columns — writing it
       // back would let readers elide null checks on evolved columns)
-      val tableSchema =
-        if (truncateEachEpoch) schema
-        else existing.map(_._1).getOrElse(schema)
-      GraftStore.writeManifestAtomic(path, base, tableSchema, files,
-        Some(epochId),
-        op = if (truncateEachEpoch) "overwrite" else "append",
-        eqDels = if (truncateEachEpoch) Some(Seq.empty) else None)
+      GraftStore.commit(path, base)(b =>
+        if (truncateEachEpoch)
+          b.copy(schema = schema, entries = files, op = "overwrite",
+            epoch = Some(epochId), eqDels = Seq.empty)
+        else b.copy(entries = files, op = "append", epoch = Some(epochId)))
       GraftStore.gcUnreferenced(path, files.map(_.file).toSet)
     }
   }
@@ -5621,16 +5422,15 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
     // Delta concurrent-append semantics. Truncate replaces wholesale,
     // so its retry is equally safe (last truncate wins, a real order).
     val files = GraftStore.retryOnConflict {
-      val (base, existing) = GraftStore.readLatestVersioned(path)
+      val base = GraftStore.latest(path).getOrElse(GraftStore.Manifest(schema))
+      val existing = base.files(path)
       // IDEMPOTENT WRITE: a (txnAppId, txnVersion) the table has already
       // recorded is a replay — drop this attempt's files and do nothing
       // (checked against the SAME base the CAS claim pins, so a racing
       // first delivery either lands before this read or conflicts the
       // claim and this check re-runs)
       val replayed = txn.exists { case (app, ver) =>
-        base > 0 && GraftStore.readTxnsOf(
-          new File(path, s"${GraftStore.ManifestName}.v$base"))
-          .get(app).exists(_ >= ver)
+        base.txns.get(app).exists(_ >= ver)
       }
       if (replayed) (base, existing, None)
       else (base, existing, Some(
@@ -5645,7 +5445,7 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
           val terms = rollOn.map(_._2)
           require(terms.nonEmpty, "dynamic partition overwrite needs a " +
             s"partitioned table — $path carries no partition spec")
-          val tblSchema = existing.map(_._1).getOrElse(schema)
+          val tblSchema = base.schema
           def cellOf(e: GraftStore.FileEntry): Option[String] = {
             val parts = terms.map(t =>
               GraftStore.derivedCellOf(tblSchema, t, e))
@@ -5657,7 +5457,7 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
               s"dynamic overwrite wrote a file whose partition tuple is " +
                 s"unprovable (${e.file}) — null partition values are not " +
                 "supported"))).toSet
-          existing.map(_._2).getOrElse(Seq.empty).filter { e =>
+          existing.filter { e =>
             cellOf(e) match {
               case Some(cell) => !newCells.contains(cell)
               case None => throw new IllegalArgumentException(
@@ -5674,8 +5474,8 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
           // file the stats cannot decide — same tri-state discipline as
           // the metadata-only DELETE, fused with the append in ONE commit
           val fs = replaceWhere.get.toSeq
-          val tblSchema = existing.map(_._1).getOrElse(schema)
-          existing.map(_._2).getOrElse(Seq.empty).filter { e =>
+          val tblSchema = base.schema
+          existing.filter { e =>
             GraftStore.StatsPruning.evalAll(fs, e, tblSchema) match {
               case GraftStore.StatsPruning.NoRows => true
               case GraftStore.StatsPruning.AllRows => false
@@ -5688,12 +5488,12 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
             }
           }
         }
-        else existing.map(_._2).getOrElse(Seq.empty)))
+        else existing))
     } {
       case (_, existing, None) =>
         committed.foreach(e => new File(path, e.file).delete())
-        existing.map(_._2).getOrElse(Seq.empty)
-      case (base, existing, Some(previous)) =>
+        existing
+      case (base, _, Some(previous)) =>
         val files = previous ++ committed
         // an append keeps the TABLE's schema: the query's output schema may
         // carry tighter nullability (literal columns), and writing it back
@@ -5701,18 +5501,19 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
         // files null-pad. Truncate replaces the table wholesale — the write
         // schema IS the new contract. The epoch marker follows the same
         // logic (append must not clobber a streaming table's marker).
-        GraftStore.writeManifestAtomic(path, base,
-          if (truncateFirst) schema else existing.map(_._1).getOrElse(schema),
-          files,
-          if (truncateFirst) None else GraftStore.readEpoch(path),
+        GraftStore.commit(path, base)(b => b.copy(
+          schema = if (truncateFirst) schema else b.schema,
+          entries = files,
           op = if (!dataChange) "optimize"
                else if (truncateFirst || dynamicOverwrite ||
                  replaceWhere.isDefined) "overwrite"
                else "append",
-          newTxn = txn,
+          epoch = if (truncateFirst) None else b.epoch,
+          // not a replay, so this version is above any recorded for the app
+          txns = b.txns ++ txn,
           // truncate replaces the content wholesale: any equality
           // delete's work is done (nothing it applied to survives)
-          eqDels = if (truncateFirst) Some(Seq.empty) else None)
+          eqDels = if (truncateFirst) Seq.empty else b.eqDels))
         files
     }
     GraftStore.gcUnreferenced(path, files.map(_.file).toSet)
@@ -6008,8 +5809,7 @@ class GraftStoreScanBuilder(path: String, versionAsOf: Option[Long] = None,
           val (sch, es) = GraftStore.selectEntries(path, Some(v), None)
           Some((v, sch, es))
         case None =>
-          val (v, latest) = GraftStore.readLatestVersioned(path)
-          latest.map { case (sch, es) => (v, sch, es) }
+          GraftStore.latest(path).map(m => (m.version, m.schema, m.files(path)))
       } catch { case _: GraftStore.MissingSnapshotException => None }
     observed match {
       case Some((v, sch, entries)) if v > 0 =>
@@ -6962,10 +6762,10 @@ class GraftStoreCdfMicroBatchStream(path: String, dataSchema: StructType,
     // snapshot expired under the stream — failing loudly (same contract
     // as the change feed's "not retained") beats silently skipping the
     // schema guard
-    val endSchema = GraftStore.schemaAt(path, e).getOrElse(
-      throw new IllegalStateException(
+    val endSchema = GraftStore.snapshot(GraftStore.manifestFile(path, Some(e)))
+      .getOrElse(throw new IllegalStateException(
         s"snapshot v$e at $path expired while a stream checkpoint still " +
-          "references it — retain snapshots at least as long as readers"))
+          "references it — retain snapshots at least as long as readers")).schema
     require(dataSchema.fields.map(_.dataType)
         .sameElements(endSchema.fields.map(_.dataType)),
       s"change-feed stream batch v$s..v$e crosses a schema-evolving " +
@@ -7009,14 +6809,18 @@ class GraftStoreMicroBatchStream(path: String, streamSchema: StructType,
   import org.apache.spark.sql.connector.read.streaming.Offset
   private val numFields = streamSchema.size
 
-  private def filesAt(v: Long): Map[String, (Int, String, Seq[Int], Seq[Int])] =
-    if (v <= 0) Map.empty
-    else GraftStore.readManifestFile(
-      new File(path, s"${GraftStore.ManifestName}.v$v"))
+  // the manifest at a committed batch end: one that is missing expired
+  // under the stream, which fails loudly rather than skip its guards
+  private def snapAt(v: Long): GraftStore.Manifest =
+    GraftStore.snapshot(GraftStore.manifestFile(path, Some(v)))
       .getOrElse(throw new IllegalStateException(
         s"snapshot v$v at $path expired while a stream checkpoint still " +
           "references it — retain snapshots at least as long as readers"))
-      ._2.map(e => e.file -> (e.cols, e.dv, e.narrow, e.nested)).toMap
+
+  private def filesAt(v: Long): Map[String, (Int, String, Seq[Int], Seq[Int])] =
+    if (v <= 0) Map.empty
+    else snapAt(v).files(path)
+      .map(e => e.file -> (e.cols, e.dv, e.narrow, e.nested)).toMap
 
   override def initialOffset(): Offset = GraftVersionOffset(startVersion)
   override def deserializeOffset(json: String): Offset =
@@ -7043,20 +6847,14 @@ class GraftStoreMicroBatchStream(path: String, streamSchema: StructType,
     // is refused identically, while a stream started AFTER the widen
     // replays pre-widen history fine (current-manifest entries carry the
     // narrow markers that promote old lanes). Restart to adopt.
-    val endSchema = GraftStore.schemaAt(path, e).getOrElse(
-      throw new IllegalStateException(
-        s"snapshot v$e at $path expired while a stream checkpoint still " +
-          "references it — retain snapshots at least as long as readers"))
+    val endSchema = snapAt(e).schema
     require(streamSchema.fields.map(_.dataType)
         .sameElements(endSchema.fields.map(_.dataType)),
       s"stream batch v$s..v$e crosses a schema-evolving commit " +
         s"(stream schema ${streamSchema.catalogString} vs " +
         s"${endSchema.catalogString}) — restart the stream to adopt the " +
         "evolved schema")
-    def eqAt(v: Long) =
-      if (v <= 0) Seq.empty
-      else GraftStore.readEqDeletesOf(
-        new File(path, s"${GraftStore.ManifestName}.v$v"))
+    def eqAt(v: Long) = if (v <= 0) Seq.empty else snapAt(v).eqDels
     require(removed.isEmpty && eqAt(s) == eqAt(e),
       s"stream batch v$s..v$e crosses a non-append snapshot " +
         s"(${removed.size} base file(s) removed or delete-vectored, or " +

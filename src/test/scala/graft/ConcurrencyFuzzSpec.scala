@@ -83,8 +83,8 @@ class ConcurrencyFuzzSpec extends SparkSuite {
       assert(n >= 80, s"snapshot v$v unreadable or truncated ($n rows)")
     }
     // strictly monotonic commit timestamps survive the race
-    val ts = (1L to head).map(v => GraftStore.readTsOf(
-      new java.io.File(path, s"_manifest.v$v")))
+    val ts = (1L to head).map(v => GraftStore.snapshot(
+      new java.io.File(path, s"_manifest.v$v")).get.ts)
     ts.sliding(2).foreach { case Seq(a, b) =>
       assert(b > a, "commit timestamps must stay strictly monotonic under race")
     }

@@ -92,7 +92,7 @@ class GraftCatalogSpec extends SparkSuite {
     session.sql("INSERT INTO g.ts SELECT 2 AS x") // v3
     val root = session.conf.get("spark.sql.catalog.g.root")
     val snaps = GraftStore.snapshotFiles(s"$root/ts")
-    val Seq(ts2, ts3) = snaps.takeRight(2).map(GraftStore.readTsOf)
+    val Seq(ts2, ts3) = snaps.takeRight(2).map(GraftStore.snapshot(_).get.ts)
     assert(ts2 > 0 && ts3 > ts2, "commits must record increasing !ts headers")
     // an instant between the two commits reads the pre-insert snapshot;
     // session tz is UTC, so format the millis as a UTC timestamp literal

@@ -33,7 +33,7 @@ class GraftCatalogStagingSpec extends SparkSuite {
     assert(s2.table("gstrtas.t").schema.fieldNames.toSeq == Seq("k", "doubled"))
     // the replace is IN the history; the pre-replace snapshot still reads
     val v = GraftStore.readVersion(s"$root/t")
-    assert(GraftStore.readOpOf(new File(s"$root/t", s"_manifest.v$v"))
+    assert(GraftStore.snapshot(new File(s"$root/t", s"_manifest.v$v")).get.op
       == "replace")
     val old = s2.sql(s"SELECT * FROM gstrtas.t VERSION AS OF $preV")
     assert(old.schema.fieldNames.toSeq == Seq("id", "g"))

@@ -36,8 +36,8 @@ class GraftProcedureSpec extends SparkSuite {
     assert(res.length == 1 && res(0).getLong(0) == GraftStore.readVersion(path))
     val entries = GraftStore.readManifest(path).get._2
     assert(entries.forall(_.dv.isEmpty))
-    assert(GraftStore.readEqDeletesOf(
-      new File(path, s"_manifest.v${GraftStore.readVersion(path)}")).isEmpty)
+    assert(GraftStore.snapshot(
+      new File(path, s"_manifest.v${GraftStore.readVersion(path)}")).get.eqDels.isEmpty)
     val keep = (0L until 300L).filter(k => k % 7 != 3 && k != 5 && k != 6)
     assert(s2.sql("SELECT count(*), sum(v) FROM gproc.p").collect()(0)
       .getLong(0) == keep.size)

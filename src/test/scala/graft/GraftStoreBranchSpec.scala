@@ -43,7 +43,7 @@ class GraftStoreBranchSpec extends SparkSuite {
     assert(readT(t).agg(org.apache.spark.sql.functions.sum($"v"))
       .collect()(0).getLong(0) == (0L until 150L).map(_ * 10).sum)
     // publish is in the history as its own op
-    assert(GraftStore.readOpOf(new File(t, s"_manifest.v$v"))
+    assert(GraftStore.snapshot(new File(t, s"_manifest.v$v")).get.op
       .startsWith("fastForward("))
   }
 

@@ -55,7 +55,7 @@ class GraftStoreEqDeleteSpec extends SparkSuite {
     val entries = GraftStore.readManifest(t).get._2
     assert(entries.forall(_.dv.isEmpty), "no position vectors involved")
     // sidecar committed under data/, manifest carries the header
-    val eqs = GraftStore.readEqDeletesOf(new File(t, s"_manifest.v$v"))
+    val eqs = GraftStore.snapshot(new File(t, s"_manifest.v$v")).get.eqDels
     assert(eqs.nonEmpty && eqs.forall(d =>
       d.seq == v && d.cols == Seq("k") && new File(t, d.file).isFile))
     val got = readT(t).selectExpr("k", "v").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -184,7 +184,7 @@ class GraftStoreEqDeleteSpec extends SparkSuite {
     val live = readT(t).agg(count(lit(1)).as("n"), min("k").as("mn")).collect()(0)
     assert(live.getLong(0) == 297 && live.getLong(1) == 0L)
     val v = GraftStore.purgeDeletes(spark, t)
-    assert(GraftStore.readEqDeletesOf(new File(t, s"_manifest.v$v")).isEmpty,
+    assert(GraftStore.snapshot(new File(t, s"_manifest.v$v")).get.eqDels.isEmpty,
       "purge drops the eq-delete headers")
     assert(readT(t).count() == 297)
     // post-purge entries carry exact rows again (metadata answers safe)
@@ -299,7 +299,7 @@ class GraftStoreEqDeleteSpec extends SparkSuite {
       (6L, java.sql.Date.valueOf("2024-01-01"))   // k=6 really has 01-07
     ).toDF("k", "d")
     val v = GraftStore.deleteByKey(spark, t, keys)
-    val eqs = GraftStore.readEqDeletesOf(new File(t, s"_manifest.v$v"))
+    val eqs = GraftStore.snapshot(new File(t, s"_manifest.v$v")).get.eqDels
     assert(eqs.nonEmpty && eqs.forall(_.cols == Seq("k", "d")))
     assert(readT(t).filter($"k" === 5L).count() == 0, "matching pair dies")
     assert(readT(t).filter($"k" === 6L).count() == 1, "half-match survives")
@@ -352,8 +352,8 @@ class GraftStoreEqDeleteSpec extends SparkSuite {
       org.apache.spark.sql.functions.sum($"v")).collect()(0).getLong(0)
       == (0 until 5).map(_ * 10 + 7).sum)
     GraftStore.purgeDeletes(spark, t)
-    assert(GraftStore.readEqDeletesOf(
-      new File(t, "_manifest")).isEmpty)
+    assert(GraftStore.snapshot(
+      new File(t, "_manifest")).get.eqDels.isEmpty)
     assert(readT(t).count() == 95)
   }
 }

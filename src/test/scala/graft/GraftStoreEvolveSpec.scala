@@ -364,8 +364,8 @@ class GraftStoreEvolveSpec extends SparkSuite {
     // "fastForward(dev)" — an op-string widen check never sees it
     GraftStore.widenColumn(GraftStore.branchPath(t, "dev"), "k")
     GraftStore.fastForward(t, "dev") // main v2
-    assert(GraftStore.readOpOf(new File(t,
-      s"${GraftStore.ManifestName}.v2")).startsWith("fastForward"))
+    assert(GraftStore.snapshot(new File(t,
+      s"${GraftStore.ManifestName}.v2")).get.op.startsWith("fastForward"))
     spark.range(10, 14).selectExpr("id + 3000000000 AS k")
       .write.format("graft.sources.GraftStore").option("path", t)
       .mode("append").save() // main v3

@@ -54,8 +54,8 @@ class GraftStoreMorSpec extends SparkSuite {
     assert(dataFiles(path) == before, "second MOR DELETE touched data files")
     val keep2 = keep.filterNot(_ % 5 == 0)
     assert(s2.sql("SELECT count(*) FROM gmor.t").collect()(0).getLong(0) == keep2.size)
-    assert(GraftStore.readOpOf(new File(path,
-      s"_manifest.v${GraftStore.readVersion(path)}")) == "delete")
+    assert(GraftStore.snapshot(new File(path,
+      s"_manifest.v${GraftStore.readVersion(path)}")).get.op == "delete")
   }
 
   test("MOR UPDATE: delete+insert — old files untouched, one insert file, rows exact") {
@@ -186,8 +186,8 @@ class GraftStoreMorSpec extends SparkSuite {
     val mtimes = Option(new java.io.File(path, "data").listFiles()).get
       .map(f => f.getName -> f.lastModified()).toMap
     s2.sql("DELETE FROM gmp.t WHERE g = 2")
-    assert(GraftStore.readOpOf(new java.io.File(path,
-      s"_manifest.v${GraftStore.readVersion(path)}")) == "delete")
+    assert(GraftStore.snapshot(new java.io.File(path,
+      s"_manifest.v${GraftStore.readVersion(path)}")).get.op == "delete")
     val after = Option(new java.io.File(path, "data").listFiles()).get
       .map(f => f.getName -> f.lastModified()).toMap
     assert(after.forall { case (f, m) => mtimes.get(f).contains(m) },

@@ -643,6 +643,8 @@ class GraftStoreSpec extends SparkSuite {
   }
 
   test("streaming sink: epoch commits append atomically; a replayed epoch is a no-op") {
+    // the sink checks constraints in the active session
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val path = tempTable()
@@ -659,7 +661,7 @@ class GraftStoreSpec extends SparkSuite {
       truncateEachEpoch = false)
     sw.commit(0, Array(writeEpochFile(1, 0, 0 until 10)))
     assert(readBack(path).count() == 10)
-    assert(GraftStore.readEpoch(path).contains(0L))
+    assert(GraftStore.latest(path).flatMap(_.epoch).contains(0L))
     // recovery replay of epoch 0: same data re-written by a new attempt —
     // the commit must not double-append, and must GC its redundant file
     val replay = writeEpochFile(2, 0, 0 until 10)
@@ -669,11 +671,65 @@ class GraftStoreSpec extends SparkSuite {
     // epoch 1 appends and advances the marker
     sw.commit(1, Array(writeEpochFile(3, 1, 10 until 25)))
     assert(readBack(path).count() == 25)
-    assert(GraftStore.readEpoch(path).contains(1L))
+    assert(GraftStore.latest(path).flatMap(_.epoch).contains(1L))
     // stats flow through the streaming path too (same writer) — the live
     // tail's files are skippable exactly like the backfill's
     val entries = GraftStore.readManifest(path).get._2
     assert(entries.forall(_.stats.contains("id")), "streaming files missing stats")
+  }
+
+  // one streamed epoch's file, written and committed as a sink task would
+  private def epochFile(path: String, task: Long, epoch: Long,
+      ids: Range): graft.sources.GraftStoreCommitMessage = {
+    val w = new graft.sources.GraftStoreDataWriter(path, epochSchema, 0, task,
+      None, None, s"data/part-0-$task-e$epoch.bin")
+    ids.foreach(i => w.write(org.apache.spark.sql.catalyst.InternalRow(i.toLong)))
+    w.commit().asInstanceOf[graft.sources.GraftStoreCommitMessage]
+  }
+
+  private val epochSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("id",
+      org.apache.spark.sql.types.LongType, nullable = false)))
+
+  test("streaming sink: a metadata-only DELETE keeps the epoch marker, so a replay stays a no-op") {
+    // the sink checks constraints in the active session
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    val path = tempTable()
+    val sw = new graft.sources.GraftStoreStreamingWrite(path, epochSchema,
+      truncateEachEpoch = false)
+    sw.commit(0, Array(epochFile(path, 1, 0, 0 until 10)))
+    sw.commit(1, Array(epochFile(path, 2, 1, 10 until 25)))
+    // every file is decided by its stats, so this DELETE swaps manifests
+    new graft.sources.GraftStoreTable(path, epochSchema, None, None, None, None)
+      .deleteWhere(Array[org.apache.spark.sql.sources.Filter](
+        org.apache.spark.sql.sources.GreaterThanOrEqual("id", 10L)))
+    assert(readBack(path).count() == 10)
+    assert(GraftStore.snapshot(new File(path, "_manifest")).get.op == "delete")
+    assert(GraftStore.latest(path).flatMap(_.epoch).contains(1L),
+      "the DELETE dropped the sink's epoch marker")
+    sw.commit(1, Array(epochFile(path, 3, 1, 10 until 25)))
+    assert(readBack(path).count() == 10, "a replayed epoch re-appended its rows")
+  }
+
+  test("streaming sink: commits take the epoch from the snapshot they swap against, not a lagging pointer") {
+    // the sink checks constraints in the active session
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    import spark.implicits._
+    val path = tempTable()
+    val sw = new graft.sources.GraftStoreStreamingWrite(path, epochSchema,
+      truncateEachEpoch = false)
+    sw.commit(0, Array(epochFile(path, 1, 0, 0 until 10)))
+    sw.commit(1, Array(epochFile(path, 2, 1, 10 until 25)))
+    // the pointer lags the newest snapshot (the race repointIfBehind mends)
+    java.nio.file.Files.copy(new File(path, "_manifest.v1").toPath,
+      new File(path, "_manifest").toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    writeDf(spark.range(100, 105, 1, 1).toDF("id"), path, mode = "append")
+    assert(readBack(path).count() == 30)
+    assert(GraftStore.latest(path).flatMap(_.epoch).contains(1L),
+      "the append recorded the lagging pointer's epoch")
+    sw.commit(1, Array(epochFile(path, 3, 1, 10 until 25)))
+    assert(readBack(path).count() == 30, "a replayed epoch re-appended its rows")
   }
 
   test("streaming sink end-to-end: bounded replay lands exactly once across epochs") {
@@ -690,8 +746,8 @@ class GraftStoreSpec extends SparkSuite {
     q.processAllAvailable()
     q.stop()
     // ≥4 epochs really committed (admission control engaged), content exact
-    assert(GraftStore.readEpoch(out).exists(_ >= 3L),
-      s"expected multi-epoch progress, got epoch ${GraftStore.readEpoch(out)}")
+    assert(GraftStore.latest(out).flatMap(_.epoch).exists(_ >= 3L),
+      s"expected multi-epoch progress, got epoch ${GraftStore.latest(out).flatMap(_.epoch)}")
     val ids = readBack(out).select($"id").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq == (0L until 10000L), "streamed table content not exactly-once")
   }
@@ -713,11 +769,11 @@ class GraftStoreSpec extends SparkSuite {
     // before the 20k range drains)
     val q1 = start()
     val deadline = System.currentTimeMillis() + 120000
-    while (!GraftStore.readEpoch(out).exists(_ >= 2L) &&
+    while (!GraftStore.latest(out).flatMap(_.epoch).exists(_ >= 2L) &&
         System.currentTimeMillis() < deadline)
       Thread.sleep(10)
     q1.stop()
-    val epochAtStop = GraftStore.readEpoch(out)
+    val epochAtStop = GraftStore.latest(out).flatMap(_.epoch)
     assert(epochAtStop.exists(_ >= 2L), "first incarnation made no progress")
     val rowsAtStop = readBack(out).count()
     assert(rowsAtStop < 20000L, "stream drained before the stop — not mid-feed")
@@ -728,7 +784,7 @@ class GraftStoreSpec extends SparkSuite {
     val q2 = start()
     q2.processAllAvailable()
     q2.stop()
-    assert(GraftStore.readEpoch(out).get > epochAtStop.get,
+    assert(GraftStore.latest(out).flatMap(_.epoch).get > epochAtStop.get,
       "second incarnation did not advance the epoch marker")
     val ids = readBack(out).select($"id").collect().map(_.getLong(0)).sorted
     assert(ids.toSeq == (0L until 20000L),
@@ -760,7 +816,7 @@ class GraftStoreSpec extends SparkSuite {
       "cross-incarnation replayed file not GC'd")
     swB.commit(1, Array(epochFile(3, 1, 10 until 20)))
     assert(readBack(p2).count() == 20)
-    assert(GraftStore.readEpoch(p2).contains(1L))
+    assert(GraftStore.latest(p2).flatMap(_.epoch).contains(1L))
   }
 
   test("streaming sink to a PARTITIONED table: per-cell file grain, replay idempotent, pruning on the tail") {
@@ -781,8 +837,8 @@ class GraftStoreSpec extends SparkSuite {
       .outputMode("append").start()
     q.processAllAvailable()
     q.stop()
-    assert(GraftStore.readEpoch(out).exists(_ >= 3L),
-      s"expected multi-epoch progress, got epoch ${GraftStore.readEpoch(out)}")
+    assert(GraftStore.latest(out).flatMap(_.epoch).exists(_ >= 3L),
+      s"expected multi-epoch progress, got epoch ${GraftStore.latest(out).flatMap(_.epoch)}")
     // exactly-once content
     val got = readBack(out).select($"id").collect().map(_.getLong(0)).sorted
     assert(got.toSeq == (0L until 10000L), "partitioned stream not exactly-once")
@@ -800,7 +856,7 @@ class GraftStoreSpec extends SparkSuite {
     assert(pruned.count() == 2000)
     // a replayed epoch is a no-op on a partitioned table too: re-commit
     // the last epoch's message shape through the API
-    val epoch = GraftStore.readEpoch(out).get
+    val epoch = GraftStore.latest(out).flatMap(_.epoch).get
     val before = readBack(out).count()
     val sw = new graft.sources.GraftStoreStreamingWrite(out,
       readBack(out).schema, truncateEachEpoch = false,
@@ -1124,10 +1180,11 @@ class GraftStoreSpec extends SparkSuite {
     writeDf(spark.range(0, 100, 1, 2).toDF("id"), path) // v1
     // protocol level: two writers that both computed v2 — the hard-link
     // claim admits exactly one; the loser throws with nothing clobbered
-    val (schema, entries) = GraftStore.readManifest(path).get
-    GraftStore.writeManifestAtomicAt(path, 2L, schema, entries, op = "append")
+    val entries = GraftStore.readManifest(path).get._2
+    val base = GraftStore.latest(path).get
+    GraftStore.commit(path, base)(_.copy(entries = entries, op = "append"))
     val e = intercept[GraftStore.ConflictException] {
-      GraftStore.writeManifestAtomicAt(path, 2L, schema, Seq.empty, op = "overwrite")
+      GraftStore.commit(path, base)(_.copy(entries = Seq.empty, op = "overwrite"))
     }
     assert(e.getMessage.contains("claimed by another writer"))
     assert(GraftStore.readManifest(path).get._2.map(_.file).toSet ==
@@ -1611,8 +1668,8 @@ class GraftStoreSpec extends SparkSuite {
     assert(readBack(main).filter($"src" === "day").count() == 100)
     // zero-copy: the staged file on main is a hard link to the branch's
     val staged = GraftStore.readManifest(main).get._2
-      .filterNot(e => GraftStore.readManifestFile(
-        new File(branch, "_manifest.v1")).get._2.map(_.file).contains(e.file))
+      .filterNot(e => GraftStore.snapshot(
+        new File(branch, "_manifest.v1")).get.files(branch).map(_.file).contains(e.file))
     assert(staged.nonEmpty)
     staged.foreach { e =>
       val a = java.nio.file.Files.getAttribute(
@@ -1645,13 +1702,13 @@ class GraftStoreSpec extends SparkSuite {
     // two metadata-only commits landing inside one filesystem timestamp
     // tick with byte-equal lengths, which an (mtime, size) cache key
     // cannot tell apart
-    GraftStore.writeManifestAtomicAt(path, 1, schema,
-      Seq(GraftStore.FileEntry("data/f1.bin", 1, Map.empty)))
+    GraftStore.commit(path, GraftStore.Manifest(schema))(_.copy(
+      entries = Seq(GraftStore.FileEntry("data/f1.bin", 1, Map.empty))))
     assert(GraftStore.readManifest(path).get._2.map(_.file) == Seq("data/f1.bin"))
     val ptr = java.nio.file.Paths.get(path, "_manifest")
     val t1 = java.nio.file.Files.getLastModifiedTime(ptr)
-    GraftStore.writeManifestAtomicAt(path, 2, schema,
-      Seq(GraftStore.FileEntry("data/f2.bin", 1, Map.empty)))
+    GraftStore.commit(path, GraftStore.latest(path).get)(_.copy(
+      entries = Seq(GraftStore.FileEntry("data/f2.bin", 1, Map.empty))))
     // force the collision: pin the pointer's mtime back to v1's (the
     // !ts= headers are both 13-digit millis, so sizes already match
     // whenever the version digit width does)
@@ -1663,8 +1720,8 @@ class GraftStoreSpec extends SparkSuite {
     // (path, version) key would serve the dead incarnation's v1 parse
     new File(path, "_manifest").delete()
     GraftStore.snapshotFiles(path).foreach(_.delete())
-    GraftStore.writeManifestAtomicAt(path, 1, schema,
-      Seq(GraftStore.FileEntry("data/f3.bin", 1, Map.empty)))
+    GraftStore.commit(path, GraftStore.Manifest(schema))(_.copy(
+      entries = Seq(GraftStore.FileEntry("data/f3.bin", 1, Map.empty))))
     assert(GraftStore.readManifest(path).get._2.map(_.file) == Seq("data/f3.bin"),
       "recreated table served the dead incarnation's manifest")
   }
@@ -1965,7 +2022,7 @@ class GraftStoreSpec extends SparkSuite {
       writeDf(Seq((i.toLong + 2, "b")).toDF("k", "v"), path, mode = "append")
     }
     val ts = (1 to 7).map(v =>
-      GraftStore.readTsOf(new File(path, s"_manifest.v$v")))
+      GraftStore.snapshot(new File(path, s"_manifest.v$v")).get.ts)
     assert(ts.forall(_ > 0), s"missing !ts header: $ts")
     ts.sliding(2).foreach { case Seq(a, b) =>
       assert(b > a, s"non-monotonic commit timestamps: $ts")

@@ -53,8 +53,10 @@ class ManifestShardSpec extends SparkSuite {
     s2
   }
 
-  private def structured(path: String) =
-    GraftStore.readManifestStructured(new File(path, "_manifest")).get
+  private def structured(path: String) = {
+    val m = GraftStore.snapshot(new File(path, "_manifest")).get
+    (m.schema, m.entries, m.eqDels, m.children)
+  }
 
   private def childFiles(path: String): Seq[String] =
     Option(new File(path).listFiles()).getOrElse(Array.empty)
@@ -258,11 +260,10 @@ class ManifestShardSpec extends SparkSuite {
   test("CAS conflict: the loser's pre-claim children orphan harmlessly and sweep after the grace") {
     val (s2, path) = partitionedTable(freshRoot())
     org.apache.spark.sql.SparkSession.setActiveSession(s2)
-    val (v, latest) = GraftStore.readLatestVersioned(path)
-    val (schema, entries) = latest.get
+    val base = GraftStore.latest(path).get
+    val entries = base.files(path)
     // winner claims v+1 first
-    GraftStore.writeManifestAtomicAt(path, v + 1, schema, entries,
-      op = "append")
+    GraftStore.commit(path, base)(_.copy(entries = entries, op = "append"))
     val winnerChildren = childFiles(path).toSet
     // loser: same base, plus a novel cell — its children (including one
     // NEW name for the novel cell) land BEFORE the claim, which loses;
@@ -270,8 +271,7 @@ class ManifestShardSpec extends SparkSuite {
     val loser = entries :+ GraftStore.FileEntry("data/ghost.bin", 1L,
       Map("k" -> GraftStore.ColStats("7", "7", 0)))
     intercept[GraftStore.ConflictException] {
-      GraftStore.writeManifestAtomicAt(path, v + 1, schema, loser,
-        op = "append")
+      GraftStore.commit(path, base)(_.copy(entries = loser, op = "append"))
     }
     val orphans = childFiles(path).toSet -- winnerChildren
     assert(orphans.size == 1,
@@ -347,9 +347,9 @@ class ManifestShardSpec extends SparkSuite {
       java.nio.file.Paths.get(path, "_partition"),
       java.nio.file.Paths.get(p2, "_partition"))
     org.apache.spark.sql.SparkSession.setActiveSession(s2)
-    GraftStore.writeManifestAtomicAt(p2, 1L, schema, entries, op = "create")
-    val fullRefs = GraftStore.readManifestStructured(
-      new File(p2, "_manifest")).get._4.map(r => (r.file, r.cell))
+    GraftStore.commit(p2, GraftStore.Manifest(schema))(
+      _.copy(entries = entries, op = "create"))
+    val fullRefs = structured(p2)._4.map(r => (r.file, r.cell))
     assert(fastRefs == fullRefs,
       s"fast-path refs diverge from the full regroup:\n$fastRefs\nvs\n$fullRefs")
     // and a restore (a NON-extension commit → full-regroup fallback) of

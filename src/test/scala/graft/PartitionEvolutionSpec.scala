@@ -171,7 +171,7 @@ class PartitionEvolutionSpec extends SparkSuite {
       .option("changesFrom", v1.toString).option("changesTo", v2.toString)
       .load()
     assert(feed.count() == 0, "a pure spec swap must emit no row changes")
-    assert(GraftStore.readOpOf(new File(path, s"_manifest.v$v2")) == "evolve-partition")
+    assert(GraftStore.snapshot(new File(path, s"_manifest.v$v2")).get.op == "evolve-partition")
   }
 
   test("evolve validates transforms like create, and a conflict leaves the spec untouched") {

@@ -206,12 +206,13 @@ class PruningFuzzSpec extends SparkSuite {
 
     // pre-sketch files: strip every other entry's sketch, as a manifest
     // written before integral sketches reads; then append sketched files
-    val (v0, Some((sch0, es0))) = GraftStore.readLatestVersioned(stPath)
-    GraftStore.writeManifestAtomicAt(stPath, v0 + 1, sch0, es0.zipWithIndex.map {
-      case (e, i) if i % 2 == 0 =>
-        e.copy(stats = e.stats.map { case (c, cs) => c -> cs.copy(bloom = "") })
-      case (e, _) => e
-    }, op = "append")
+    val base0 = GraftStore.latest(stPath).get
+    GraftStore.commit(stPath, base0)(_.copy(entries =
+      base0.files(stPath).zipWithIndex.map {
+        case (e, i) if i % 2 == 0 =>
+          e.copy(stats = e.stats.map { case (c, cs) => c -> cs.copy(bloom = "") })
+        case (e, _) => e
+      }, op = "append"))
     rows(3000L, 3600L).write.format("graft.sources.GraftStore")
       .option("path", stPath).mode("append").save()
     truth = rows(0L, 3600L).toDF()
