@@ -653,7 +653,6 @@ object LlmOpsExt {
       val root = Util.managedTempDir("graft_ivfpq_codes_")
       val cd = Util.managedTempDir("graft_ivfpq_cent_")
       val cbs = pqCodebooks(s, dir, m, sub, k)
-      val cbl = typedlit(cbs)
       // encode once: per-value file rolling single-values `label` per
       // file — the layout the probed-cell scan prunes on
       val s2 = Util.child(s, Map("gipq" -> root))
@@ -779,7 +778,6 @@ object LlmOpsExt {
         .repartition(1)
         .write.format("graft.sources.GraftStore").option("path", cd)
         .mode("overwrite").save()
-      val cbl = typedlit(cbs)
       val s2 = Util.child(s, Map("gipqi" -> root))
       emb(s2, dir).filter($"vec_id" % IncrGrowthMod =!= 0)
         .select($"vec_id", $"label", pqEncodeExpr($"emb", cbs, m, sub).as("codes"))

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import Util._
 
 /** Multimodal binary-column pipeline (driver mandate: treat image/audio as

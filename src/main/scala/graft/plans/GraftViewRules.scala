@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.plans.logical.{CreateView, DropView, Logica
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.{Identifier, ViewChange, ViewInfo}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.GraftCatalog
 

@@ -549,35 +549,11 @@ class GraftCatalog extends TableCatalog with FunctionCatalog
           // the scratch's entries hard-link in, its schema becomes the
           // table's, live deletes clear (replaced content owes nothing
           // to old key sets), old snapshots stay time-travelable
-          val (schema2, entries0) = GraftStore.readManifest(scratch.getPath)
-            .getOrElse((stagedSchema, Seq.empty[GraftStore.FileEntry]))
-          // Spark task ids restart per JVM, so a scratch file's
-          // part-<pid>-<tid>.bin name can collide with a file an EARLIER
-          // session committed into this table. Prefix every linked name
-          // with a per-publish UUID (rewriting the manifest entries to
-          // match) so the link can never hit an existing name; clean up
-          // already-created links if a later one still fails, so a loud
-          // failure leaves no orphans.
-          val pubId = java.util.UUID.randomUUID().toString.take(8)
-          val entries = entries0.map { e =>
-            val base = new File(e.file).getName
-            val dir = Option(new File(e.file).getParent).map(_ + "/").getOrElse("")
-            e.copy(file = s"$dir$pubId-$base")
-          }
-          val created = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-          try {
-            entries0.zip(entries).foreach { case (src, dst) =>
-              val to = new File(target, dst.file).toPath
-              if (to.getParent != null)
-                java.nio.file.Files.createDirectories(to.getParent)
-              java.nio.file.Files.createLink(to,
-                new File(scratch, src.file).toPath)
-              created += to
-            }
-          } catch { case t: Throwable =>
-            created.foreach(p => java.nio.file.Files.deleteIfExists(p))
-            throw t
-          }
+          val schema2 = GraftStore.readManifest(scratch.getPath)
+            .fold(stagedSchema)(_._1)
+          // stamped names: a scratch file's task-derived name can collide
+          // with a file an earlier session committed into this table
+          val entries = GraftStore.linkStamped(target.getPath, scratch, "rtas")
           GraftStore.commit(target.getPath, GraftStore.latest(target.getPath)
             .getOrElse(GraftStore.Manifest(schema2)))(_.copy(schema = schema2,
             entries = entries, op = "replace", epoch = None, eqDels = Seq.empty))

@@ -22,15 +22,24 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Commit protocol (the part that matters at 100 TB, where the "file
   * system" is an object store with no atomic rename-into-directory):
-  *   - every task ATTEMPT writes an attempt-unique data file
-  *     `data/part-<stamp>-<partition>-<task>.bin` (the task id is unique
-  *     per attempt within a Spark context, the per-write stamp across
-  *     contexts, whose task ids restart at 0) and reports it in its
-  *     commit MESSAGE; nothing a task writes is visible to readers by
-  *     virtue of existing on disk;
-  *   - the driver's `commit(messages)` writes a NEW manifest listing
-  *     exactly the committed files (append = old list + new, truncate =
-  *     new only) to a temp name, then ATOMIC_MOVEs it onto `_manifest`
+  *   - every task ATTEMPT writes attempt-unique data files through the
+  *     one task writer ([[GraftStorePartitionedWriter]], made by the one
+  *     [[GraftStoreWriterFactory]]): `data/<kind>-<stamp>-<partition>-
+  *     <task>[-e<epoch>][-p<n>].bin`, where kind is `part` (append,
+  *     overwrite, streaming epoch), `rw` (copy-on-write rewrite) or `mor`
+  *     (merge-on-read insert), `-e` marks a streaming epoch and `-p` a
+  *     partitioned table's rolled file. The task id is unique per
+  *     attempt within a Spark context, the per-write stamp across
+  *     contexts, whose task ids restart at 0. The writer opens its first
+  *     file at its first row, so a task that gets no rows writes none.
+  *     Each task reports its files in its commit MESSAGE; nothing a task
+  *     writes is visible to readers by virtue of existing on disk;
+  *   - the driver's `commit(messages)` runs one prologue
+  *     ([[GraftStore.committedEntries]]: the messages' files as entries,
+  *     CHECK constraints proven from their stats), then writes a NEW
+  *     manifest listing exactly the committed files (append = old list +
+  *     new, truncate = new only) to a temp name, then ATOMIC_MOVEs it
+  *     onto `_manifest`
   *     — the single atomic step; a reader sees the old table or the new
   *     table, never a mix. Data files never move or rename.
   *   - files from failed/duplicate/speculative attempts are simply never
@@ -53,11 +62,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * than trusted to the caller (GraftStoreSpec proves per-file key
   * disjointness).
   *
-  * Test hook: `failFirstAttemptOf=<partitionId>` makes the FIRST attempt
-  * of that partition throw after writing half its rows — the
-  * kill-one-task exactly-once proof (GraftStoreSpec): the retried
-  * attempt's file is committed, the dead attempt's half-file is GC'd,
-  * and the read-back equals the input exactly.
+  * Test hooks (batch writes): `failFirstAttemptOf=<partitionId>` makes
+  * the FIRST attempt of that partition throw at the second row of its
+  * file — the kill-one-task exactly-once proof (GraftStoreSpec): the
+  * retried attempt's file is committed, the dead attempt's half-file is
+  * GC'd, and the read-back equals the input exactly.
+  * `failAllAttemptsOf=<partitionId>` fails every attempt, so the job
+  * aborts (the abort-path proof). The factory hands both to every file
+  * the task writer opens.
   */
 object GraftStore {
   private[graft] val ManifestName = "_manifest"
@@ -580,6 +592,36 @@ object GraftStore {
       read(abs).foreach(p => bs.set(p.toInt))
       bs
     }
+
+    /** Writes `file`'s new vector to `rel`: the union of its current
+      * sidecar `oldRel` ("" for none) and the `added` positions (DVs
+      * are cumulative — one sidecar per file, ever). Paths are relative
+      * to the table root `path`. */
+    def merge(path: String, file: String, oldRel: String, added: Iterable[Long],
+        rel: String): GraftStoreDvSummary = {
+      val oldPos =
+        if (oldRel.isEmpty) Array.empty[Long]
+        else read(new File(path, oldRel).getPath)
+      val merged = (oldPos ++ added).distinct.sorted
+      write(new File(path, rel).getPath, merged)
+      GraftStoreDvSummary(file, rel, (merged.length - oldPos.length).toLong)
+    }
+
+    /** The entries once the merged vectors `byFile` commit: each named
+      * entry gets its new `dv`, its live row count and stats through
+      * [[statsAfterDelete]]; an entry with no live row left is dropped. */
+    def applyTo(entries: Seq[FileEntry], byFile: Map[String, GraftStoreDvSummary])
+      : Seq[FileEntry] =
+      entries.flatMap { e =>
+        byFile.get(e.file) match {
+          case Some(d) =>
+            val live = e.rows - d.newlyDeleted
+            if (live <= 0) None
+            else Some(e.copy(rows = live, dv = d.dvRel,
+              stats = statsAfterDelete(e.stats)))
+          case None => Some(e)
+        }
+      }
   }
 
   /** Equality-delete sidecar: a set of key TUPLES, written atomically.
@@ -1395,6 +1437,9 @@ object GraftStore {
       uid = java.util.UUID.randomUUID().toString,
       ts = math.max(System.currentTimeMillis(), base.ts + 1L),
       entries = inline, children = children, demoted = Set.empty))
+    // a table's first write may have written no data file (every task
+    // got no rows), so nothing has made its directory yet
+    Files.createDirectories(Paths.get(path))
     val tmp = Paths.get(path, s"$ManifestTmpPrefix${java.util.UUID.randomUUID()}")
     Files.write(tmp, text.getBytes(StandardCharsets.UTF_8))
     try Files.createLink(Paths.get(path, s"$ManifestName.v$v"), tmp)
@@ -1874,23 +1919,17 @@ object GraftStore {
       .select(col("_file"), col("_pos"))
     // executor-side sidecar writes: cluster matches by file, one sidecar
     // write per affected file, one metadata-sized summary row back
-    val summary: Array[(String, String, Long)] = matches
+    val summary: Array[GraftStoreDvSummary] = matches
       .repartition(col("_file"))
       .sortWithinPartitions(col("_file"), col("_pos"))
       .rdd.mapPartitions { it =>
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
+        val out = scala.collection.mutable.ArrayBuffer.empty[GraftStoreDvSummary]
         var curFile: String = null
-        var buf = scala.collection.mutable.ArrayBuffer.empty[Long]
+        val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
         def flush(): Unit = if (curFile != null) {
-          val oldRel = oldDvByFile.getOrElse(curFile, "")
-          val oldPos =
-            if (oldRel.isEmpty) Array.empty[Long]
-            else Dv.read(new File(absRoot, oldRel).getPath)
-          val rel = s"$curFile.dv.$stamp"
-          Dv.write(new File(absRoot, rel).getPath,
-            (oldPos ++ buf).distinct.sorted)
-          out += ((curFile, rel, buf.length.toLong))
-          buf = scala.collection.mutable.ArrayBuffer.empty[Long]
+          out += Dv.merge(absRoot, curFile, oldDvByFile.getOrElse(curFile, ""),
+            buf, s"$curFile.dv.$stamp")
+          buf.clear()
         }
         it.foreach { row =>
           val f = row.getString(0)
@@ -1901,17 +1940,7 @@ object GraftStore {
         out.iterator
       }.collect()
     if (summary.isEmpty) return base
-    val byFile = summary.map(s => s._1 -> s).toMap
-    val newEntries = entries.flatMap { e =>
-      byFile.get(e.file) match {
-        case Some((_, rel, newly)) =>
-          val live = e.rows - newly
-          if (live <= 0) None // every row deleted: drop the entry
-          else Some(e.copy(rows = live, dv = rel,
-            stats = statsAfterDelete(e.stats)))
-        case None => Some(e)
-      }
-    }
+    val newEntries = Dv.applyTo(entries, summary.map(d => d.file -> d).toMap)
     commit(path, snap)(_.copy(entries = newEntries, op = "delete"))
   }
 
@@ -2104,7 +2133,7 @@ object GraftStore {
     * names fresh. Created links are removed (and the scratch table
     * deleted) if a later link fails, so an aborted rewrite leaves no
     * orphans waiting for GC. */
-  private def linkStamped(path: String, scratch: File, tag: String): Seq[FileEntry] = {
+  private[sources] def linkStamped(path: String, scratch: File, tag: String): Seq[FileEntry] = {
     val fresh = readManifest(scratch.getAbsolutePath).map(_._2).getOrElse(Seq.empty)
     val stamp = java.lang.Long.toHexString(System.nanoTime())
     val linked = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
@@ -2369,15 +2398,31 @@ object GraftStore {
   private[sources] def manifestFile(path: String, v: Option[Long]): File =
     v.fold(new File(path, ManifestName))(x => new File(path, s"$ManifestName.v$x"))
 
-  /** Flatten task commit messages: plain writers send one
-    * [[GraftStoreCommitMessage]], partition-rolling writers send a
-    * [[GraftStoreMultiMessage]] of them. */
+  /** Flatten task commit messages to the data files they name: the
+    * task writer sends a [[GraftStoreMultiMessage]], a merge-on-read
+    * task a [[GraftStoreDeltaMessage]] carrying its inserts, a bare
+    * [[GraftStoreDataWriter]] one [[GraftStoreCommitMessage]]. */
   private[sources] def flatMessages(ms: Array[WriterCommitMessage]): Seq[GraftStoreCommitMessage] =
     ms.toSeq.flatMap {
       case s: GraftStoreCommitMessage => Seq(s)
       case GraftStoreMultiMessage(ps) => ps
+      case GraftStoreDeltaMessage(_, ps) => ps
       case _ => Seq.empty // abort sees null slots for never-committed partitions
     }
+
+  /** The commit prologue every sink runs: the messages' data files as
+    * entries, with the table's CHECK constraints proven from their
+    * stats before any manifest claim (`what` names the files in the
+    * refusal). */
+  private[sources] def committedEntries(path: String, schema: StructType,
+      messages: Array[WriterCommitMessage], what: String): Seq[FileEntry] = {
+    val entries = flatMessages(messages).map(m =>
+      FileEntry(m.file, m.rows, m.stats, m.cols))
+    if (entries.nonEmpty)
+      enforceChecks(org.apache.spark.sql.SparkSession.active, path, schema,
+        entries, what)
+    entries
+  }
 
   private[sources] val PartitionFileName = "_partition"
   private[sources] val PropsFileName = "_props"
@@ -2548,6 +2593,17 @@ object GraftStore {
     * aggregates / cluster-like advertisement key on. */
   private[graft] def partitionColsOf(spec: Option[String]): Seq[String] =
     partitionTermsOf(spec).collect { case PartIdentity(c) => c }
+
+  /** The CLUSTER keys every rolling write demands (shared by the append,
+    * replace-data and MOR-insert writes): identity terms on their
+    * column, bucket terms on the DERIVED bucket expression. Monotone
+    * transforms leave distribution to the caller. */
+  private[sources] def clusterExprs(terms: Seq[PartTerm])
+    : Seq[org.apache.spark.sql.connector.expressions.Expression] =
+    terms.collect {
+      case PartIdentity(c) => Expressions.column(c)
+      case PartBucket(n, c) => Expressions.bucket(n, c)
+    }
 
   /** The per-term SORT key list every rolling write demands (shared by
     * the append, replace-data and MOR-insert writes): identity terms
@@ -3672,6 +3728,46 @@ object GraftStore {
     }
   }
 
+  /** The change feed's scan partitions for v`fromV`..v`toV`, one per
+    * [[cdfFileDiffs]] unit (the batch feed and its stream). */
+  private[sources] def cdfPartitions(path: String, dataSchema: StructType,
+      fromV: Long, toV: Long): Array[InputPartition] = {
+    def abs(rel: String) = if (rel.isEmpty) "" else new File(path, rel).getAbsolutePath
+    cdfFileDiffs(path, fromV, toV).map { u =>
+      GraftStoreCdfPartition(abs(u.file), u.cols, u.changeType, u.version,
+        abs(u.applyDv), abs(u.baseDv), u.dvDelta,
+        eqRefs(path, dataSchema, u.maskEq), eqRefs(path, dataSchema, u.onlyEq),
+        u.narrow, u.nested): InputPartition
+    }.toArray
+  }
+
+  /** The guard both table streams run on a batch v`s`..v`e`. The
+    * snapshot at a committed batch end must be retained: one that is
+    * missing expired under the stream, which fails loudly rather than
+    * skip the schema guard. And its column types must still be the
+    * stream's: the stream's schema is FIXED at start, and schema
+    * evolution since then flips lanes/arity under it (an int scan over
+    * a new long-lane file reads the low half). The comparison is
+    * structural, not by op string, so a widen that arrives inside a
+    * fastForward publish is refused identically, while a stream started
+    * AFTER the widen replays pre-widen history fine (current-manifest
+    * entries carry the narrow markers that promote old lanes). Restart
+    * the stream to adopt the evolved schema. `what` names the stream in
+    * the refusal. */
+  private[sources] def streamBatchGuard(path: String, streamSchema: StructType,
+      s: Long, e: Long, what: String): Unit = {
+    val endSchema = snapshot(manifestFile(path, Some(e)))
+      .getOrElse(throw new IllegalStateException(
+        s"snapshot v$e at $path expired while a stream checkpoint still " +
+          "references it — retain snapshots at least as long as readers")).schema
+    require(streamSchema.fields.map(_.dataType)
+        .sameElements(endSchema.fields.map(_.dataType)),
+      s"$what batch v$s..v$e crosses a schema-evolving commit " +
+        s"(stream schema ${streamSchema.catalogString} vs " +
+        s"${endSchema.catalogString}) — restart the stream to adopt the " +
+        "evolved schema")
+  }
+
   /** Resolve equality deletes to reader-side refs (sidecar absolute
     * path + key ordinals and type tags in `schema`); a key column the
     * schema no longer carries fails loudly — silently skipping a delete
@@ -4623,14 +4719,11 @@ class GraftStoreReplaceDataWrite(path: String, schema: StructType,
   // leave distribution to the caller; ordering per term in spec order
   // by the key that makes each derived value contiguous.
   override def description(): String = s"graft_store replace-data -> $path"
-  private def clusterExprs: Seq[org.apache.spark.sql.connector.expressions.Expression] =
-    partitionTerms.collect {
-      case GraftStore.PartIdentity(c) => Expressions.column(c)
-      case GraftStore.PartBucket(n, c) => Expressions.bucket(n, c)
-    }
-  override def requiredDistribution(): Distribution =
-    if (clusterExprs.isEmpty) Distributions.unspecified()
-    else Distributions.clustered(clusterExprs.toArray)
+  override def requiredDistribution(): Distribution = {
+    val cluster = GraftStore.clusterExprs(partitionTerms)
+    if (cluster.isEmpty) Distributions.unspecified()
+    else Distributions.clustered(cluster.toArray)
+  }
   override def requiredOrdering(): Array[SortOrder] =
     GraftStore.termOrdering(partitionTerms)
   override def toBatch: BatchWrite =
@@ -4658,22 +4751,14 @@ class GraftStoreReplaceBatchWrite(path: String, schema: StructType,
     GraftStore.latest(path).fold(Seq.empty[GraftStore.EqDelete])(_.eqDels)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftStoreReplaceWriterFactory(path, schema, stamp, rollOn)
+    new GraftStoreWriterFactory(path, schema, s"data/rw-$stamp", rollOn)
 
   override def useCommitCoordinator(): Boolean = true
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val (committed, empty) = GraftStore.flatMessages(messages).map(m =>
-      GraftStore.FileEntry(m.file, m.rows, m.stats, m.cols))
-      .partition(_.rows > 0)
-    // a partition whose surviving-row set is empty wrote an empty file:
-    // drop it rather than committing zero-row entries
-    empty.foreach(e => new File(path, e.file).delete())
     // CHECK constraints guard copy-on-write DML rewrites too: an UPDATE
     // that would write a violating survivor file aborts whole
-    if (committed.nonEmpty)
-      GraftStore.enforceChecks(org.apache.spark.sql.SparkSession.active,
-        path, schema, committed, "rewritten")
+    val committed = GraftStore.committedEntries(path, schema, messages, "rewritten")
     val base = GraftStore.latest(path).getOrElse(GraftStore.Manifest(schema))
     if (base.eqDels != plannedEqDels)
       throw new GraftStore.ConflictException(
@@ -4692,17 +4777,6 @@ class GraftStoreReplaceBatchWrite(path: String, schema: StructType,
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     GraftStore.flatMessages(messages).foreach(m =>
       new File(path, m.file).delete())
-}
-
-class GraftStoreReplaceWriterFactory(path: String, schema: StructType,
-    stamp: String, rollOn: Seq[(Int, GraftStore.PartTerm)] = Seq.empty)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    if (rollOn.nonEmpty)
-      new GraftStorePartitionedWriter(path, schema,
-        partitionId, taskId, rollOn, s"data/rw-$stamp-$partitionId-$taskId")
-    else new GraftStoreDataWriter(path, schema, partitionId, taskId,
-      None, None, s"data/rw-$stamp-$partitionId-$taskId.bin")
 }
 
 // ------------------------------------- merge-on-read (delta) DML
@@ -4780,10 +4854,7 @@ class GraftStoreDeltaWrite(path: String, schema: StructType,
   override def description(): String = s"graft_store merge-on-read $cmd -> $path"
   override def requiredDistribution(): Distribution =
     Distributions.clustered((Expressions.column("_file")
-      +: partitionTerms.collect {
-        case GraftStore.PartIdentity(c) => Expressions.column(c)
-        case GraftStore.PartBucket(n, c) => Expressions.bucket(n, c)
-      }).toArray)
+      +: GraftStore.clusterExprs(partitionTerms)).toArray)
   override def requiredOrdering(): Array[SortOrder] = {
     val fileKey = Expressions.sort(Expressions.column("_file"),
       org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)
@@ -4830,8 +4901,8 @@ class GraftStoreDeltaBatchWrite(path: String, schema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.DeltaWriterFactory =
-    new GraftStoreDeltaWriterFactory(path, schema, stamp, oldDvByFile,
-      fileIdx, posIdx, rollOn)
+    new GraftStoreDeltaWriterFactory(path, stamp, oldDvByFile, fileIdx, posIdx,
+      new GraftStoreWriterFactory(path, schema, s"data/mor-$stamp", rollOn))
 
   override def useCommitCoordinator(): Boolean = true
 
@@ -4840,15 +4911,9 @@ class GraftStoreDeltaBatchWrite(path: String, schema: StructType,
     // clustering guarantees one task per file, so no two messages carry
     // the same file; belt-and-braces keep the last
     val dvByFile = msgs.flatMap(_.dvs).map(d => d.file -> d).toMap
-    val (inserts, empty) = msgs.flatMap(_.inserts)
-      .map(m => GraftStore.FileEntry(m.file, m.rows, m.stats, m.cols))
-      .partition(_.rows > 0)
-    empty.foreach(e => new File(path, e.file).delete())
     // CHECK constraints guard merge-on-read INSERT files (the delete
     // half only hides rows — nothing new to prove)
-    if (inserts.nonEmpty)
-      GraftStore.enforceChecks(org.apache.spark.sql.SparkSession.active,
-        path, schema, inserts, "MOR-inserted")
+    val inserts = GraftStore.committedEntries(path, schema, messages, "MOR-inserted")
     if (dvByFile.isEmpty && inserts.isEmpty) return // no-op DML: no commit
     // OPTIMISTIC RETRY with per-file validity (the Delta conflict-
     // resolution shape): our row deltas stay valid as long as every file
@@ -4880,18 +4945,7 @@ class GraftStoreDeltaBatchWrite(path: String, schema: StructType,
             s"deletes from changed under it (${stale.take(3).mkString(", ")}" +
             s"${if (stale.size > 3) ", …" else ""}) — re-run the DML " +
             "against the current table")
-      val newEntries = entries.flatMap { e =>
-        dvByFile.get(e.file) match {
-          case Some(d) =>
-            val live = e.rows - d.newlyDeleted
-            if (live <= 0) None // every live row deleted: drop the entry
-            else Some(e.copy(rows = live, dv = d.dvRel,
-              // zero null counts stay exact, non-zero ones drop to -1
-              // (same contract as deleteWhereDV)
-              stats = GraftStore.statsAfterDelete(e.stats)))
-          case None => Some(e)
-        }
-      } ++ inserts
+      val newEntries = GraftStore.Dv.applyTo(entries, dvByFile) ++ inserts
       (base, newEntries)
     } { case (base, newEntries) =>
       GraftStore.commit(path, base)(_.copy(entries = newEntries,
@@ -4915,15 +4969,14 @@ case class GraftStoreDvSummary(file: String, dvRel: String, newlyDeleted: Long)
 case class GraftStoreDeltaMessage(dvs: Seq[GraftStoreDvSummary],
     inserts: Seq[GraftStoreCommitMessage]) extends WriterCommitMessage
 
-class GraftStoreDeltaWriterFactory(path: String, schema: StructType,
-    stamp: String, oldDvByFile: Map[String, String],
-    fileIdx: Int, posIdx: Int,
-    rollOn: Seq[(Int, GraftStore.PartTerm)] = Seq.empty)
+class GraftStoreDeltaWriterFactory(path: String, stamp: String,
+    oldDvByFile: Map[String, String], fileIdx: Int, posIdx: Int,
+    inserts: GraftStoreWriterFactory)
   extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] =
-    new GraftStoreDeltaWriter(path, schema, partitionId, taskId, stamp,
-      oldDvByFile, fileIdx, posIdx, rollOn)
+    new GraftStoreDeltaWriter(path, taskId, stamp, oldDvByFile, fileIdx, posIdx,
+      inserts.createWriter(partitionId, taskId))
 }
 
 /** Per-task delta writer: delete rows arrive clustered by `_file` and
@@ -4931,28 +4984,22 @@ class GraftStoreDeltaWriterFactory(path: String, schema: StructType,
   * written once — union of the existing sidecar's positions and the new
   * ones, atomically (tmp + move), under an attempt-unique name (a retry
   * never clobbers a winner's sidecar; abort deletes only its own).
-  * Insert rows stream into one ordinary stats-collecting data file. */
-class GraftStoreDeltaWriter(path: String, schema: StructType,
-    partitionId: Int, taskId: Long, stamp: String,
+  * Insert rows go to the store's task writer: on a partitioned table
+  * they arrive clustered + sorted on the partition terms (the delta
+  * write demanded it), so MOR-inserted files stay single-valued per
+  * term; a task with no inserts writes no data file. */
+class GraftStoreDeltaWriter(path: String, taskId: Long, stamp: String,
     oldDvByFile: Map[String, String], fileIdx: Int, posIdx: Int,
-    rollOn: Seq[(Int, GraftStore.PartTerm)] = Seq.empty)
+    inserts: GraftStorePartitionedWriter)
   extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
 
   private val dvs = scala.collection.mutable.ArrayBuffer.empty[GraftStoreDvSummary]
   private var curFile: String = null
   private val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-  private var insertWriter: DataWriter[InternalRow] = null
 
   private def flushDv(): Unit = if (curFile != null && buf.nonEmpty) {
-    val oldRel = oldDvByFile.getOrElse(curFile, "")
-    val oldPos =
-      if (oldRel.isEmpty) Array.empty[Long]
-      else GraftStore.Dv.read(new File(path, oldRel).getPath)
-    val merged = (oldPos ++ buf).distinct.sorted
-    val rel = s"$curFile.dv.$stamp-$taskId"
-    GraftStore.Dv.write(new File(path, rel).getPath, merged)
-    dvs += GraftStoreDvSummary(curFile, rel,
-      (merged.length - oldPos.length).toLong)
+    dvs += GraftStore.Dv.merge(path, curFile, oldDvByFile.getOrElse(curFile, ""),
+      buf, s"$curFile.dv.$stamp-$taskId")
     buf.clear()
   }
 
@@ -4966,34 +5013,16 @@ class GraftStoreDeltaWriter(path: String, schema: StructType,
     throw new IllegalStateException(
       "updates are represented as delete+insert (representUpdateAsDeleteAndInsert)")
 
-  override def insert(row: InternalRow): Unit = {
-    if (insertWriter == null)
-      insertWriter =
-        if (rollOn.nonEmpty)
-          // partitioned table: inserts arrive clustered + sorted on the
-          // partition terms (the delta write demanded it), so the rolling
-          // writer keeps MOR-inserted files single-valued per term
-          new GraftStorePartitionedWriter(path, schema, partitionId, taskId,
-            rollOn, s"data/mor-$stamp-$partitionId-$taskId")
-        else new GraftStoreDataWriter(path, schema, partitionId,
-          taskId, None, None, s"data/mor-$stamp-$partitionId-$taskId.bin")
-    insertWriter.write(row)
-  }
+  override def insert(row: InternalRow): Unit = inserts.write(row)
 
   override def commit(): WriterCommitMessage = {
     flushDv()
-    val ins =
-      if (insertWriter == null) Seq.empty
-      else insertWriter.commit() match {
-        case m: GraftStoreCommitMessage => Seq(m)
-        case GraftStoreMultiMessage(ps) => ps
-      }
-    GraftStoreDeltaMessage(dvs.toSeq, ins)
+    GraftStoreDeltaMessage(dvs.toSeq, inserts.commit().parts)
   }
 
   override def abort(): Unit = {
     dvs.foreach(d => new File(path, d.dvRel).delete())
-    if (insertWriter != null) insertWriter.abort()
+    inserts.abort()
   }
 
   override def close(): Unit = ()
@@ -5062,8 +5091,6 @@ class GraftStoreWrite(path: String, schema: StructType, truncateFirst: Boolean,
   private def partitionTerms: Seq[GraftStore.PartTerm] =
     GraftStore.partitionTermsOf(partitionBy)
   private def sourceCols: Seq[String] = partitionTerms.map(_.source).distinct
-  private def orderCols: Seq[String] =
-    (sourceCols ++ sortBy.toSeq).distinct
   // Distribution: identity terms hash-cluster on their column (same
   // value → same task → one file per value); bucket terms cluster on
   // the DERIVED bucket expression — the catalog's V2 `bucket` function
@@ -5076,17 +5103,14 @@ class GraftStoreWrite(path: String, schema: StructType, truncateFirst: Boolean,
   // ~1 file per day); only the per-task ORDERING is demanded, which is
   // all the single-valued-file invariant needs — distribution affects
   // file COUNT, never correctness.
-  private def clusterExprs: Seq[org.apache.spark.sql.connector.expressions.Expression] =
-    partitionTerms.collect {
-      case GraftStore.PartIdentity(c) => Expressions.column(c)
-      case GraftStore.PartBucket(n, c) => Expressions.bucket(n, c)
-    }
-  override def requiredDistribution(): Distribution =
-    if (clusterExprs.nonEmpty) Distributions.clustered(clusterExprs.toArray)
+  override def requiredDistribution(): Distribution = {
+    val cluster = GraftStore.clusterExprs(partitionTerms)
+    if (cluster.nonEmpty) Distributions.clustered(cluster.toArray)
     else if (sourceCols.nonEmpty) Distributions.unspecified()
     else clusterBy
       .map(c => Distributions.clustered(Array(Expressions.column(c))))
       .getOrElse(Distributions.unspecified())
+  }
   // Ordering: per term IN SPEC ORDER, each by the key that makes its
   // derived value contiguous — the column itself (identity), the source
   // column (monotone transforms in FINAL position: source order makes
@@ -5147,24 +5171,13 @@ class GraftStoreStreamingWrite(path: String, schema: StructType,
   // at 0, and must not truncate the files that epoch already committed
   private val stamp = java.util.UUID.randomUUID().toString.take(8)
 
+  // epoch-stamped names (the factory appends `-e<epoch>`): replayed or
+  // aborted epochs delete exactly their own files
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftStoreStreamingWriterFactory(path, schema, stamp, rollOn)
+    new GraftStoreWriterFactory(path, schema, s"data/part-$stamp", rollOn)
 
   override def useCommitCoordinator(): Boolean = true
-
-  // a partitioned-task commit carries one message per partition value
-  // the task wrote — flatten to the per-file grain every path below
-  // (entry building, replay cleanup, abort) operates on
-  private def flat(messages: Array[WriterCommitMessage]): Seq[GraftStoreCommitMessage] =
-    messages.toSeq.flatMap {
-      case m: GraftStoreCommitMessage => Seq(m)
-      case GraftStoreMultiMessage(parts) => parts
-      // abort can see null slots for tasks that never committed — a
-      // MatchError here would mask the original failure and skip
-      // deleting the OTHER tasks' orphan files
-      case _ => Seq.empty
-    }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     // the replay check reads the snapshot the commit would swap against,
@@ -5173,17 +5186,12 @@ class GraftStoreStreamingWrite(path: String, schema: StructType,
     if (base.epoch.exists(_ >= epochId)) {
       // replayed epoch after recovery: already committed — drop the
       // redundant files, leave the manifest untouched (idempotence)
-      flat(messages).foreach(m => new File(path, m.file).delete())
+      GraftStore.flatMessages(messages).foreach(m => new File(path, m.file).delete())
     } else {
-      val committed = flat(messages).map { m =>
-        GraftStore.FileEntry(m.file, m.rows, m.stats, m.cols)
-      }
       // CHECK constraints guard streamed epochs exactly like batch
       // commits: a violating micro-batch aborts before any claim (the
       // stream fails loudly; the table never sees the epoch)
-      if (committed.nonEmpty)
-        GraftStore.enforceChecks(org.apache.spark.sql.SparkSession.active,
-          path, schema, committed, "epoch")
+      val committed = GraftStore.committedEntries(path, schema, messages, "epoch")
       val files = (if (truncateEachEpoch) Seq.empty else base.files(path)) ++ committed
       // append epochs keep the TABLE's schema (the query's output schema
       // may carry tighter nullability, e.g. literal columns — writing it
@@ -5198,48 +5206,44 @@ class GraftStoreStreamingWrite(path: String, schema: StructType,
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    flat(messages).foreach(m => new File(path, m.file).delete())
-}
-
-class GraftStoreStreamingWriterFactory(path: String, schema: StructType,
-    stamp: String, rollOn: Seq[(Int, GraftStore.PartTerm)] = Seq.empty)
-  extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    if (rollOn.nonEmpty)
-      // per-partition-value rolling, epoch-stamped names: replayed or
-      // aborted epochs delete exactly their own files
-      new GraftStorePartitionedWriter(path, schema, partitionId, taskId,
-        rollOn, s"data/part-$stamp-$partitionId-$taskId-e$epochId")
-    else
-      new GraftStoreDataWriter(path, schema, partitionId, taskId, None, None,
-        s"data/part-$stamp-$partitionId-$taskId-e$epochId.bin")
+    GraftStore.flatMessages(messages).foreach(m => new File(path, m.file).delete())
 }
 
 case class GraftStoreCommitMessage(file: String, rows: Long,
     stats: Map[String, GraftStore.ColStats], cols: Int)
   extends WriterCommitMessage
 
-/** A partition-rolling task's commit: one entry per partition value the
-  * task received. */
+/** A task writer's commit: one entry per file the task wrote (one per
+  * partition value on a partitioned table, none for a task that got no
+  * rows). */
 case class GraftStoreMultiMessage(parts: Seq[GraftStoreCommitMessage])
   extends WriterCommitMessage
 
-/** PARTITIONED-table task writer: rows arrive clustered AND sorted on
-  * the table's partition column (the sink demands that layout), so a
-  * value change means the previous value's rows are COMPLETE for this
-  * task — finish that file and roll to the next. One data file per
-  * partition value per task, each manifest entry single-valued
-  * (min = max) on the partition column BY CONSTRUCTION: partition
-  * pruning is ordinary stats skipping, and `DELETE WHERE part = v` is
-  * always metadata-only — the Hive/Iceberg partition economics without
-  * a separate partition layout, the manifest stays the only metadata.
+/** The store's one task writer: every sink (append, overwrite,
+  * copy-on-write rewrite, merge-on-read insert, streaming epoch) gets
+  * it from [[GraftStoreWriterFactory]]. It opens its first file at its
+  * first row, so a task that gets no rows writes no file and the commit
+  * never sees an empty entry.
+  *
+  * On a PARTITIONED table (`rollOn` nonEmpty) rows arrive clustered AND
+  * sorted on the table's partition terms (the sink demands that
+  * layout), so a value change means the previous value's rows are
+  * COMPLETE for this task — finish that file and roll to the next. One
+  * data file per partition value per task, each manifest entry
+  * single-valued (min = max) on the partition column BY CONSTRUCTION:
+  * partition pruning is ordinary stats skipping, and `DELETE WHERE
+  * part = v` is always metadata-only — the Hive/Iceberg partition
+  * economics without a separate partition layout, the manifest stays
+  * the only metadata. With no terms the task writes one file,
+  * `<prefix>.bin`; rolled files are `<prefix>-p<n>.bin`.
+  *
   * Delegates each file to the ordinary [[GraftStoreDataWriter]] (same
-  * framing, same stats collection); commit carries every finished
-  * file's entry, abort deletes them all. */
+  * framing, same stats collection, same test hooks); commit carries
+  * every finished file's entry, abort deletes them all. */
 class GraftStorePartitionedWriter(path: String, schema: StructType,
     partitionId: Int, taskId: Long, rollOn: Seq[(Int, GraftStore.PartTerm)],
-    prefix: String)
+    prefix: String, failFirstAttemptOf: Option[Int] = None,
+    failAllAttemptsOf: Option[Int] = None)
   extends DataWriter[InternalRow] {
   private val idxArr = rollOn.map(_._1).toArray
   private val terms = rollOn.map(_._2).toArray
@@ -5353,7 +5357,8 @@ class GraftStorePartitionedWriter(path: String, schema: StructType,
     if (changed) {
       if (current != null) closeCurrent() // lastVal still = closing file's tuple
       current = new GraftStoreDataWriter(path, schema, partitionId, taskId,
-        None, None, s"$prefix-p$seq.bin")
+        failFirstAttemptOf, failAllAttemptsOf,
+        if (terms.isEmpty) s"$prefix.bin" else s"$prefix-p$seq.bin")
       seq += 1
       // retain a fresh array; string keys cloned OUT of the row's reused
       // buffer only here (once per file, not once per row)
@@ -5366,7 +5371,7 @@ class GraftStorePartitionedWriter(path: String, schema: StructType,
     current.write(row)
   }
 
-  override def commit(): WriterCommitMessage = {
+  override def commit(): GraftStoreMultiMessage = {
     if (current != null) closeCurrent()
     GraftStoreMultiMessage(done.toSeq)
   }
@@ -5400,22 +5405,18 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
   private val stamp = java.util.UUID.randomUUID().toString.take(8)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftStoreWriterFactory(path, schema, stamp, failFirstAttemptOf,
-      failAllAttemptsOf, rollOn)
+    new GraftStoreWriterFactory(path, schema, s"data/part-$stamp", rollOn,
+      failFirstAttemptOf, failAllAttemptsOf)
 
   // at most one attempt per partition may deliver a commit message —
   // the coordinator half of the exactly-once argument
   override def useCommitCoordinator(): Boolean = true
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val committed = GraftStore.flatMessages(messages).map(m =>
-      GraftStore.FileEntry(m.file, m.rows, m.stats, m.cols))
     // CHECK constraints: proven from the NEW files' own stats before
     // any manifest claim — a violating (or unprovable) file aborts the
     // whole commit and the table never sees it
-    if (committed.nonEmpty)
-      GraftStore.enforceChecks(org.apache.spark.sql.SparkSession.active,
-        path, schema, committed, "committed")
+    val committed = GraftStore.committedEntries(path, schema, messages, "committed")
     // OPTIMISTIC RETRY: an append's merge is base-independent (its own
     // files + whatever is committed now), so a conflict loser re-reads
     // the LATEST snapshot (never a lagging pointer) and retries — the
@@ -5524,18 +5525,24 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
       new File(path, m.file).delete())
 }
 
-class GraftStoreWriterFactory(path: String, schema: StructType,
-    stamp: String, failFirstAttemptOf: Option[Int], failAllAttemptsOf: Option[Int],
-    rollOn: Seq[(Int, GraftStore.PartTerm)] = Seq.empty)
-  extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    if (rollOn.nonEmpty)
-      new GraftStorePartitionedWriter(path, schema, partitionId, taskId, rollOn,
-        s"data/part-$stamp-$partitionId-$taskId")
-    else
-      new GraftStoreDataWriter(path, schema, partitionId, taskId,
-        failFirstAttemptOf, failAllAttemptsOf,
-        s"data/part-$stamp-$partitionId-$taskId.bin")
+/** The one writer factory of every sink, batch and streaming: task
+  * files are named `<prefix>-<partition>-<task>` (a streaming epoch
+  * appends `-e<epoch>`), where `prefix` carries the sink's kind and
+  * per-write stamp (`data/part-`, `data/rw-`, `data/mor-`). The two
+  * test hooks reach every file the task writer opens. */
+class GraftStoreWriterFactory(path: String, schema: StructType, prefix: String,
+    rollOn: Seq[(Int, GraftStore.PartTerm)],
+    failFirstAttemptOf: Option[Int] = None, failAllAttemptsOf: Option[Int] = None)
+  extends DataWriterFactory
+  with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
+  private def writer(partitionId: Int, taskId: Long, suffix: String) =
+    new GraftStorePartitionedWriter(path, schema, partitionId, taskId, rollOn,
+      s"$prefix-$partitionId-$taskId$suffix", failFirstAttemptOf, failAllAttemptsOf)
+  override def createWriter(partitionId: Int, taskId: Long): GraftStorePartitionedWriter =
+    writer(partitionId, taskId, "")
+  override def createWriter(partitionId: Int, taskId: Long,
+      epochId: Long): GraftStorePartitionedWriter =
+    writer(partitionId, taskId, s"-e$epochId")
 }
 
 /** Length-framed UnsafeRow stream to `rel` (table-relative). Callers
@@ -6707,16 +6714,7 @@ class GraftStoreCdfScan(path: String, fromV: Long, toV: Long,
   override def description(): String =
     s"graft_store_changes($path, v$fromV..v$toV)"
   override def planInputPartitions(): Array[InputPartition] =
-    GraftStore.cdfFileDiffs(path, fromV, toV).map { u =>
-      GraftStoreCdfPartition(new File(path, u.file).getAbsolutePath, u.cols,
-        u.changeType, u.version,
-        if (u.applyDv.isEmpty) "" else new File(path, u.applyDv).getAbsolutePath,
-        if (u.baseDv.isEmpty) "" else new File(path, u.baseDv).getAbsolutePath,
-        u.dvDelta,
-        GraftStore.eqRefs(path, dataSchema, u.maskEq),
-        GraftStore.eqRefs(path, dataSchema, u.onlyEq),
-        u.narrow, u.nested): InputPartition
-    }.toArray
+    GraftStore.cdfPartitions(path, dataSchema, fromV, toV)
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftStoreReaderFactory(dataSchema.size)
 
@@ -6753,35 +6751,11 @@ class GraftStoreCdfMicroBatchStream(path: String, dataSchema: StructType,
     // the BATCH change feed emits across a widen (old images upgraded to
     // the range-end schema), but this stream's dataSchema is FIXED at
     // stream start — a batch whose end schema no longer matches it could
-    // not be represented. Refuse structurally (schema comparison, not
-    // op-strings, so a widen inside a fastForward publish is caught
-    // too); restart the stream to adopt the widened schema. A stream
-    // started after the widen tails across it fine: cdfFileDiffs
-    // upgrades pre-widen units to the range-end schema == dataSchema.
-    // a missing manifest at a COMMITTED batch-end version means the
-    // snapshot expired under the stream — failing loudly (same contract
-    // as the change feed's "not retained") beats silently skipping the
-    // schema guard
-    val endSchema = GraftStore.snapshot(GraftStore.manifestFile(path, Some(e)))
-      .getOrElse(throw new IllegalStateException(
-        s"snapshot v$e at $path expired while a stream checkpoint still " +
-          "references it — retain snapshots at least as long as readers")).schema
-    require(dataSchema.fields.map(_.dataType)
-        .sameElements(endSchema.fields.map(_.dataType)),
-      s"change-feed stream batch v$s..v$e crosses a schema-evolving " +
-        s"commit (stream schema ${dataSchema.catalogString} vs " +
-        s"${endSchema.catalogString}) — restart the stream to adopt the " +
-        "evolved schema")
-    GraftStore.cdfFileDiffs(path, s, e).map { u =>
-      GraftStoreCdfPartition(new File(path, u.file).getAbsolutePath, u.cols,
-        u.changeType, u.version,
-        if (u.applyDv.isEmpty) "" else new File(path, u.applyDv).getAbsolutePath,
-        if (u.baseDv.isEmpty) "" else new File(path, u.baseDv).getAbsolutePath,
-        u.dvDelta,
-        GraftStore.eqRefs(path, dataSchema, u.maskEq),
-        GraftStore.eqRefs(path, dataSchema, u.onlyEq),
-        u.narrow, u.nested): InputPartition
-    }.toArray
+    // not be represented. A stream started after the widen tails across
+    // it fine: cdfFileDiffs upgrades pre-widen units to the range-end
+    // schema == dataSchema.
+    GraftStore.streamBatchGuard(path, dataSchema, s, e, "change-feed stream")
+    GraftStore.cdfPartitions(path, dataSchema, s, e)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -6809,19 +6783,6 @@ class GraftStoreMicroBatchStream(path: String, streamSchema: StructType,
   import org.apache.spark.sql.connector.read.streaming.Offset
   private val numFields = streamSchema.size
 
-  // the manifest at a committed batch end: one that is missing expired
-  // under the stream, which fails loudly rather than skip its guards
-  private def snapAt(v: Long): GraftStore.Manifest =
-    GraftStore.snapshot(GraftStore.manifestFile(path, Some(v)))
-      .getOrElse(throw new IllegalStateException(
-        s"snapshot v$v at $path expired while a stream checkpoint still " +
-          "references it — retain snapshots at least as long as readers"))
-
-  private def filesAt(v: Long): Map[String, (Int, String, Seq[Int], Seq[Int])] =
-    if (v <= 0) Map.empty
-    else snapAt(v).files(path)
-      .map(e => e.file -> (e.cols, e.dv, e.narrow, e.nested)).toMap
-
   override def initialOffset(): Offset = GraftVersionOffset(startVersion)
   override def deserializeOffset(json: String): Offset =
     GraftVersionOffset(json.toLong)
@@ -6832,40 +6793,21 @@ class GraftStoreMicroBatchStream(path: String, streamSchema: StructType,
     val s = start.asInstanceOf[GraftVersionOffset].version
     val e = end.asInstanceOf[GraftVersionOffset].version
     if (e <= s) return Array.empty
-    val base = filesAt(s)
-    val now = filesAt(e)
-    // a base file removed OR delete-vectored inside the range makes the
-    // append-only file diff a lie — refuse, same contract as the batch
-    // incremental read
-    val removed = (base.keySet -- now.keySet) ++
-      base.keySet.filter(f => now.get(f).exists(_._2 != base(f)._2))
-    // schema evolution since the stream started flips lanes/arity under
-    // the stream's FIXED start-time schema (an int scan over a new
-    // long-lane file reads the low half) — refuse STRUCTURALLY when the
-    // batch-end schema's types no longer match the STREAM's schema, so a
-    // widen that arrives inside a fastForward publish (op != "widen(…)")
-    // is refused identically, while a stream started AFTER the widen
-    // replays pre-widen history fine (current-manifest entries carry the
-    // narrow markers that promote old lanes). Restart to adopt.
-    val endSchema = snapAt(e).schema
-    require(streamSchema.fields.map(_.dataType)
-        .sameElements(endSchema.fields.map(_.dataType)),
-      s"stream batch v$s..v$e crosses a schema-evolving commit " +
-        s"(stream schema ${streamSchema.catalogString} vs " +
-        s"${endSchema.catalogString}) — restart the stream to adopt the " +
-        "evolved schema")
-    def eqAt(v: Long) = if (v <= 0) Seq.empty else snapAt(v).eqDels
-    require(removed.isEmpty && eqAt(s) == eqAt(e),
-      s"stream batch v$s..v$e crosses a non-append snapshot " +
-        s"(${removed.size} base file(s) removed or delete-vectored, or " +
-        "equality deletes changed) — tail a change feed " +
-        "(changesFrom/changesTo batch reads) across deletes or rewrites")
-    (now -- base.keySet).toSeq.sortBy(_._1).map {
-      case (f, (cols, dv, narrow, nested)) =>
-        GraftStoreFilePartition(new File(path, f).getAbsolutePath, cols, f,
-          if (dv.isEmpty) "" else new File(path, dv).getAbsolutePath,
-          narrow = narrow, nested = nested)
-          : InputPartition
+    GraftStore.streamBatchGuard(path, streamSchema, s, e, "stream")
+    // the batch incremental read's diff and its refusal: a base file
+    // removed or delete-vectored inside the range, or an equality delete
+    // landing in it, makes the append-only file diff a lie. From v0 the
+    // base is empty, so any equality delete at `e` is one such change.
+    val (_, added, eqDels) =
+      GraftStore.selectWithEq(path, Some(e), Some(s).filter(_ > 0))
+    require(s > 0 || eqDels.isEmpty,
+      s"stream batch v$s..v$e crosses a non-append snapshot (equality " +
+        "deletes changed) — tail a change feed (changesFrom/changesTo " +
+        "batch reads) across deletes or rewrites")
+    added.sortBy(_.file).map { f =>
+      GraftStoreFilePartition(new File(path, f.file).getAbsolutePath, f.cols,
+        f.file, if (f.dv.isEmpty) "" else new File(path, f.dv).getAbsolutePath,
+        narrow = f.narrow, nested = f.nested): InputPartition
     }.toArray
   }
 

@@ -1,7 +1,7 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{DataFrame, Dataset, ExpressionUtils, SparkSession}
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
 
 /** Bridge into the one private[sql] constructor a custom-LogicalPlan
   * operator needs: wrapping a plan back into a DataFrame. Lives in the

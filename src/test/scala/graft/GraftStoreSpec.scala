@@ -1141,6 +1141,21 @@ class GraftStoreSpec extends SparkSuite {
       (100L until 200L), "fromVersion tail must skip the base snapshot")
   }
 
+  test("streaming source: a batch range an equality delete touches is refused, from v0 too") {
+    val path = tempTable()
+    writeDf(spark.range(0, 100, 1, 2).toDF("id"), path) // v1
+    GraftStore.deleteByKey(spark, path, spark.range(0, 10).toDF("id")) // v2
+    val stream = new graft.sources.GraftStoreMicroBatchStream(path,
+      readBack(path).schema, 0L)
+    def plan(s: Long, e: Long) = stream.planInputPartitions(
+      graft.sources.GraftVersionOffset(s), graft.sources.GraftVersionOffset(e))
+    assert(plan(0, 1).length == 2)
+    Seq((0L, 2L), (1L, 2L)).foreach { case (s, e) =>
+      val ex = intercept[IllegalArgumentException](plan(s, e))
+      assert(ex.getMessage.contains("non-append"), ex.getMessage)
+    }
+  }
+
   test("sink-demanded clustering: each key lives in exactly one data file") {
     import spark.implicits._
     val path = tempTable()
@@ -2060,5 +2075,84 @@ class GraftStoreSpec extends SparkSuite {
       "repair commit must claim v4 and re-point")
     assert(readBack(path).orderBy($"id").collect().map(_.getLong(0)).toSeq ==
       (0L until 400L), "the torn v3's rows must survive the repair")
+  }
+
+  // ------------------------------------------------------ one write path
+
+  test("an unpartitioned append whose tasks get no rows commits only non-empty files") {
+    val path = tempTable()
+    // 3 rows over 8 tasks: 5 tasks get none
+    spark.range(0, 3).repartition(8).write.format("graft.sources.GraftStore")
+      .option("path", path).mode("append").save()
+    val entries = GraftStore.latest(path).get.files(path)
+    assert(entries.size == 3 && entries.forall(_.rows == 1),
+      s"expected 3 one-row entries, got ${entries.map(_.rows)}")
+    assert(dataFiles(path).toSet == entries.map(_.file.stripPrefix("data/")).toSet,
+      s"files under data/ that no entry lists: ${dataFiles(path)}")
+    assert(new graft.sources.GraftStoreScan(path).planInputPartitions().length == 3)
+    assert(readBack(path).collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L))
+  }
+
+  test("a CHECK-constrained catalog table accepts an append whose tasks get no rows") {
+    val s2 = spark.newSession()
+    val root = graft.ops.Util.managedTempDir("graft_check_empty_")
+    s2.conf.set("spark.sql.catalog.gce", "graft.sources.GraftCatalog")
+    s2.conf.set("spark.sql.catalog.gce.root", root)
+    s2.sql("CREATE TABLE gce.t (x BIGINT) TBLPROPERTIES('check.pos' = 'x > 0')")
+    // an empty file's stats prove NoRows, which the check refused
+    s2.range(1, 4).toDF("x").repartition(8).writeTo("gce.t").append()
+    assert(s2.sql("SELECT x FROM gce.t").collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(1L, 2L, 3L))
+    assert(GraftStore.latest(s"$root/t").get.files(s"$root/t").forall(_.rows > 0))
+  }
+
+  test("streaming sink: an epoch with an empty task commits no zero-row entry") {
+    // the sink checks constraints in the active session
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    val path = tempTable()
+    val sw = new graft.sources.GraftStoreStreamingWrite(path, epochSchema,
+      truncateEachEpoch = false)
+    val factory = sw.createStreamingWriterFactory(null)
+    val full = factory.createWriter(0, 1L, 0L)
+    (0 until 5).foreach(i => full.write(org.apache.spark.sql.catalyst.InternalRow(i.toLong)))
+    val empty = factory.createWriter(1, 2L, 0L)
+    sw.commit(0, Array(full.commit(), empty.commit()))
+    val entries = GraftStore.latest(path).get.files(path)
+    assert(entries.map(_.rows) == Seq(5L), s"entries: ${entries.map(e => e.file -> e.rows)}")
+    assert(dataFiles(path) == entries.map(_.file.stripPrefix("data/")))
+    assert(readBack(path).count() == 5)
+  }
+
+  test("one write path: src/main makes data files only through the task writer and its one factory") {
+    def sources(d: File): Seq[File] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.sortBy(_.getName)
+        .flatMap(f => if (f.isDirectory) sources(f)
+          else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty)
+    val all = sources(new File("src/main/scala"))
+    assert(all.length > 40, s"main sources not found: ${all.length}")
+    // (constructor, the one class whose body may call it)
+    val allowed = Seq(
+      "new GraftStoreDataWriter(" -> "class GraftStorePartitionedWriter(",
+      "new GraftStorePartitionedWriter(" -> "class GraftStoreWriterFactory(")
+    var found = Set.empty[String]
+    val offending = all.flatMap { f =>
+      // comments out, line breaks kept so the line numbers stay true
+      val code = "(?s)/\\*.*?\\*/".r.replaceAllIn(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"),
+        m => m.matched.filter(_ == '\n')).replaceAll("//[^\n]*", "")
+      allowed.flatMap { case (ctor, owner) =>
+        // a top-level class body runs from its header to the first
+        // closing brace in column 0
+        val from = code.indexOf(s"\n$owner")
+        val to = if (from < 0) -1 else code.indexOf("\n}", from)
+        Iterator.iterate(code.indexOf(ctor))(i => code.indexOf(ctor, i + 1))
+          .takeWhile(_ >= 0).toSeq.flatMap { i =>
+            if (i > from && i < to) { found += ctor; None }
+            else Some(s"$ctor at ${f.getName}:${code.take(i).count(_ == '\n') + 1}")
+          }
+      }
+    }
+    assert(found == allowed.map(_._1).toSet, s"owners not found: $found")
+    assert(offending.isEmpty, s"a second write path: ${offending.mkString(", ")}")
   }
 }
