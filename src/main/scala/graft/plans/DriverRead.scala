@@ -2,6 +2,7 @@ package graft.plans
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, NamedExpression, Predicate, SortOrder, UnsafeProjection}
@@ -11,7 +12,7 @@ import org.apache.spark.sql.execution.{ExecSubqueryExpression, FilterExec, Input
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 
-import graft.sources.{GraftStoreMetaAggPartition, GraftStoreScan}
+import graft.sources.GraftStoreScan
 
 /** Wraps the root of a plan shaped `[ProjectExec] [FilterExec]
   * BatchScanExec(GraftStoreScan)` in a [[DriverReadExec]] when the scan
@@ -26,8 +27,9 @@ import graft.sources.{GraftStoreMetaAggPartition, GraftStoreScan}
   * negative threshold turns the rule off. It declines runtime filters,
   * columnar scans, non-deterministic expressions and subqueries. Only
   * the root is wrapped, and only `executeCollect` changes: everything
-  * else (`count()`, `toLocalIterator`, caching, writes, a non-root use)
-  * runs the child as before. */
+  * else (`toLocalIterator`, caching, writes, a non-root use) runs the
+  * child as before. `count()` and other global aggregates over such a
+  * scan are [[DriverAggregate]]'s. */
 object DriverRead extends Rule[SparkPlan] {
   override def apply(plan: SparkPlan): SparkPlan = plan match {
     case _: DriverReadExec => plan
@@ -36,13 +38,20 @@ object DriverRead extends Rule[SparkPlan] {
   }
 
   /** The optional projection and filter over a store scan that `plan`
-    * is, through the codegen wrappers `CollapseCodegenStages` adds. */
-  private[plans] def shape(plan: SparkPlan)
-      : Option[(Option[Seq[NamedExpression]], Option[Expression], BatchScanExec)] =
-    strip(plan) match {
+    * is, through the codegen wrappers `CollapseCodegenStages` adds, when
+    * the driver can read it as a task would: no runtime filters, a row
+    * scan, deterministic expressions and no subqueries. */
+  private[plans] def shape(plan: SparkPlan): Option[Shape] =
+    (strip(plan) match {
       case ProjectExec(ps, c) => filtered(c).map { case (f, s) => (Some(ps), f, s) }
       case c => filtered(c).map { case (f, s) => (None, f, s) }
+    }).filter { case (project, filter, scan) =>
+      scan.runtimeFilters.isEmpty && !scan.supportsColumnar &&
+        (project.getOrElse(Nil) ++ filter).forall(e =>
+          e.deterministic && !e.exists(_.isInstanceOf[ExecSubqueryExpression]))
     }
+
+  private[plans] type Shape = (Option[Seq[NamedExpression]], Option[Expression], BatchScanExec)
 
   private def filtered(plan: SparkPlan): Option[(Option[Expression], BatchScanExec)] =
     strip(plan) match {
@@ -61,25 +70,49 @@ object DriverRead extends Rule[SparkPlan] {
     case _ => plan
   }
 
-  private def qualifies(plan: SparkPlan): Boolean = shape(plan).exists {
-    case (project, filter, scan) =>
-      val threshold = conf.autoBroadcastJoinThreshold
-      threshold >= 0 && scan.runtimeFilters.isEmpty && !scan.supportsColumnar &&
-        (project.getOrElse(Nil) ++ filter).forall(e =>
-          e.deterministic && !e.exists(_.isInstanceOf[ExecSubqueryExpression])) &&
-        (scan.inputPartitions match {
-          case Seq() | Seq(_: GraftStoreMetaAggPartition) => true
-          case Seq(_) => scan.scan.asInstanceOf[GraftStoreScan].estimatedBytes <= threshold
-          case _ => false
-        })
+  /** Whether `scan` is small enough to read on the driver: at most one
+    * split of at most `spark.sql.autoBroadcastJoinThreshold` estimated
+    * bytes (a negative threshold turns the driver reads off). */
+  private[plans] def fits(scan: GraftStoreScan): Boolean = {
+    val threshold = conf.autoBroadcastJoinThreshold
+    threshold >= 0 && scan.singleSplitWithin(threshold)
   }
+
+  private def qualifies(plan: SparkPlan): Boolean =
+    shape(plan).exists { case (_, _, scan) => fits(scan.scan.asInstanceOf[GraftStoreScan]) }
+
+  /** Reads the partitions a [[shape]]'s scan planned on the driver with
+    * its own reader factory, applies the filter and projection the child
+    * would (`Predicate.create` and `UnsafeProjection.create` over the same
+    * expressions) and hands each surviving row to `emit`. The row is
+    * reused: copy it to keep it. */
+  private[plans] def read(shape: Shape)(emit: InternalRow => Unit): Unit = {
+    val (project, filter, scan) = shape
+    val in = scan.output
+    val keep = filter.map { c => val p = Predicate.create(c, in); p.initialize(0); p }
+    val proj = UnsafeProjection.create(project.getOrElse(in), in)
+    proj.initialize(0)
+    val factory = scan.readerFactory
+    scan.inputPartitions.foreach { p =>
+      val reader = factory.createReader(p)
+      try {
+        while (reader.next()) {
+          val r = reader.get()
+          if (keep.forall(_.eval(r))) emit(proj(r))
+        }
+      } finally reader.close()
+    }
+  }
+
+  /** Posts metrics updated on the driver to the running execution. */
+  private[plans] def postMetrics(sc: SparkContext, metrics: Map[String, SQLMetric]): Unit =
+    SQLMetrics.postDriverMetricUpdates(sc,
+      sc.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
 }
 
 /** The root of a single-split store read (see [[DriverRead]]).
-  * `executeCollect` reads the scan's planned partition with its own
-  * reader factory on the driver, then applies the filter and projection
-  * the child would, with `Predicate.create` and `UnsafeProjection.create`
-  * over the same expressions. `doExecute` runs the child unchanged. */
+  * `executeCollect` reads the scan's planned partition on the driver
+  * ([[DriverRead.read]]); `doExecute` runs the child unchanged. */
 case class DriverReadExec(child: SparkPlan) extends UnaryExecNode {
   override def nodeName: String = "DriverRead"
   override def output: Seq[Attribute] = child.output
@@ -92,25 +125,11 @@ case class DriverReadExec(child: SparkPlan) extends UnaryExecNode {
   override protected def doExecute(): RDD[InternalRow] = child.execute()
 
   override def executeCollect(): Array[InternalRow] = DriverRead.shape(child) match {
-    case Some((project, filter, scan)) =>
-      val in = scan.output
-      val keep = filter.map { c => val p = Predicate.create(c, in); p.initialize(0); p }
-      val proj = UnsafeProjection.create(project.getOrElse(in), in)
-      proj.initialize(0)
-      val factory = scan.readerFactory
+    case Some(shape) =>
       val rows = ArrayBuffer.empty[InternalRow]
-      scan.inputPartitions.foreach { p =>
-        val reader = factory.createReader(p)
-        try {
-          while (reader.next()) {
-            val r = reader.get()
-            if (keep.forall(_.eval(r))) rows += proj(r).copy()
-          }
-        } finally reader.close()
-      }
+      DriverRead.read(shape)(r => rows += r.copy())
       longMetric("numOutputRows") += rows.size
-      SQLMetrics.postDriverMetricUpdates(sparkContext,
-        sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), metrics.values.toSeq)
+      DriverRead.postMetrics(sparkContext, metrics)
       rows.toArray
     case None => child.executeCollect()
   }

@@ -742,7 +742,10 @@ object GraftStore {
     * inline entry lines; [[files]] adds the children's. A commit maps
     * its base record to the next one with `copy` ([[commit]]), so the
     * epoch, the txn watermarks and the equality deletes carry forward
-    * unless the commit sets them. */
+    * unless the commit sets them. The epoch and the txn watermarks are
+    * writer watermarks, not table content: they survive TRUNCATE,
+    * overwrites, `restore`, `publish` and `fastForward` too, so a sink
+    * replaying an epoch after a reset stays a no-op. */
   private[graft] case class Manifest(schema: StructType, version: Long = 0L,
       uid: String = "", ts: Long = 0L, op: String = "",
       epoch: Option[Long] = None, txns: Map[String, Long] = Map.empty,
@@ -1763,7 +1766,7 @@ object GraftStore {
     val squashedDels = eqDels.map(d =>
       if (d.seq > forkV) d.copy(seq = v0) else d)
     val v = commit(path, main)(_.copy(schema = tip.schema,
-      entries = squashedEntries, op = s"fastForward($name)", epoch = None,
+      entries = squashedEntries, op = s"fastForward($name)",
       eqDels = squashedDels))
     Files.write(Paths.get(bp, ForkFileName),
       v.toString.getBytes(StandardCharsets.UTF_8))
@@ -1797,7 +1800,7 @@ object GraftStore {
     // to before a delete revives the rows; to after keeps them hidden)
     commit(path, latest(path).getOrElse(throw missingSnapshot(path, None)))(
       _.copy(schema = old.schema, entries = old.files(path),
-        op = s"restore(v$version)", epoch = None, eqDels = old.eqDels))
+        op = s"restore(v$version)", eqDels = old.eqDels))
   }
 
   /** METADATA-ONLY MANIFEST REWRITE (`CALL cat.system.rewrite_manifests`,
@@ -2292,7 +2295,7 @@ object GraftStore {
       }
     }
     commit(mainPath, main)(_.copy(schema = tip.schema, entries = entries,
-      op = "publish", epoch = None, eqDels = brEqDels))
+      op = "publish", eqDels = brEqDels))
   }
 
   private[sources] def deleteRecursively(f: File): Unit = {
@@ -4607,7 +4610,7 @@ class GraftStoreTable(path: String, tableSchema: StructType,
   override def truncateTable(): Boolean = {
     GraftStore.latest(path).foreach { base =>
       GraftStore.commit(path, base)(_.copy(entries = Seq.empty, op = "delete",
-        epoch = None, eqDels = Seq.empty))
+        eqDels = Seq.empty))
       GraftStore.gcUnreferenced(path, Set.empty)
     }
     true
@@ -5500,8 +5503,8 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
         // carry tighter nullability (literal columns), and writing it back
         // would let readers elide null checks on evolved columns whose old
         // files null-pad. Truncate replaces the table wholesale — the write
-        // schema IS the new contract. The epoch marker follows the same
-        // logic (append must not clobber a streaming table's marker).
+        // schema IS the new contract. The streaming epoch marker, like the
+        // txn watermarks, carries forward through both.
         GraftStore.commit(path, base)(b => b.copy(
           schema = if (truncateFirst) schema else b.schema,
           entries = files,
@@ -5509,7 +5512,6 @@ class GraftStoreBatchWrite(path: String, schema: StructType,
                else if (truncateFirst || dynamicOverwrite ||
                  replaceWhere.isDefined) "overwrite"
                else "append",
-          epoch = if (truncateFirst) None else b.epoch,
           // not a replay, so this version is above any recorded for the app
           txns = b.txns ++ txn,
           // truncate replaces the content wholesale: any equality
@@ -6182,6 +6184,7 @@ class GraftStoreScan(path: String,
     if (keeps.nonEmpty) runtimeFiles = Some(keeps.reduce(_ intersect _))
     val dataFs = filters.filter(f => f.references.forall(clusterLike.contains))
     if (dataFs.nonEmpty) runtimeDataFilters = dataFs.toSeq
+    selectedMemo = null
   }
 
   // an explicit `_file` equality/IN predicate in the query itself (not
@@ -6242,7 +6245,18 @@ class GraftStoreScan(path: String,
       })
     }
 
-  private def selected = {
+  // [[selected]] for the current runtime filters: statistics, the plan
+  // description, the reported partitioning and ordering, split planning
+  // and the driver-read bound all ask for it; `filter` resets it
+  @volatile private var selectedMemo: Seq[GraftStore.FileEntry] = null
+
+  private def selected: Seq[GraftStore.FileEntry] = {
+    val memo = selectedMemo
+    if (memo != null) memo
+    else { val s = select(); selectedMemo = s; s }
+  }
+
+  private def select(): Seq[GraftStore.FileEntry] = {
     val kept = entries.filter(e =>
       runtimeFiles.forall(_.contains(e.file)) &&
         pushedFileSet.forall(_.contains(e.file)) &&
@@ -6290,6 +6304,16 @@ class GraftStoreScan(path: String,
     val sel = selected
     if (sel.exists(_.rows < 0)) Long.MaxValue else sel.map(_.rows).sum * rowWidth
   }
+
+  /** Whether this scan plans at most one split of at most `maxBytes`
+    * [[estimatedBytes]]; a metadata-only aggregate's one answer
+    * partition always qualifies. */
+  private[graft] def singleSplitWithin(maxBytes: Long): Boolean =
+    metaAgg.isDefined || (splitsOf(selected).size match {
+      case 0 => true
+      case 1 => estimatedBytes <= maxBytes
+      case _ => false
+    })
 
   /** MANIFEST-DERIVED PLANNING STATISTICS — the ANALYZE-free CBO feed.
     * Called by Spark after pushdown, so row counts and column stats

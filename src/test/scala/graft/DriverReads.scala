@@ -4,10 +4,11 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
-import graft.plans.DriverReadExec
+import graft.plans.{DriverAggregateExec, DriverReadExec}
 
 /** Helpers for specs that compare a `collect()` served on the driver
-  * (graft.plans.DriverRead) with the job path it replaces. */
+  * (graft.plans.DriverRead, graft.plans.DriverAggregate) with the job
+  * path it replaces. */
 object DriverReads extends AdaptiveSparkPlanHelper {
   private val FenceKey = "graft.spec.jobFence"
 
@@ -43,10 +44,13 @@ object DriverReads extends AdaptiveSparkPlanHelper {
     df.queryExecution.toRdd.map(_.copy()).collect().toSeq.map(r => toRow(r).asInstanceOf[Row])
   }
 
-  /** Whether `df`'s executed plan holds a DriverRead node (at its root,
-    * where the rule puts one). */
+  /** Whether `df`'s executed plan holds a DriverRead or DriverAggregate
+    * node (at its root, where a `collect()` reads on the driver). */
   def onDriver(df: DataFrame): Boolean =
-    find(df.queryExecution.executedPlan)(_.isInstanceOf[DriverReadExec]).isDefined
+    find(df.queryExecution.executedPlan) {
+      case _: DriverReadExec | _: DriverAggregateExec => true
+      case _ => false
+    }.isDefined
 
   /** Rows as sorted strings, for order-free comparison. */
   def canon(rows: Seq[Row]): Seq[String] = rows.map(_.toString).sorted

@@ -711,6 +711,46 @@ class GraftStoreSpec extends SparkSuite {
     assert(readBack(path).count() == 10, "a replayed epoch re-appended its rows")
   }
 
+  test("streaming sink: TRUNCATE, overwrite, restore, publish and fastForward keep the epoch marker") {
+    // the sink checks constraints in the active session
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    import spark.implicits._
+    // each reset runs on a table that committed sink epochs 0 (10 rows)
+    // and 1 (15 rows); a replay of epoch 1 afterwards must commit nothing
+    val resets = Seq[(String, String => Unit)](
+      "TRUNCATE" -> (path => new graft.sources.GraftStoreTable(path, epochSchema,
+        None, None, None, None).truncateTable()),
+      "overwrite" -> (path => writeDf(spark.range(100, 103, 1, 1).toDF("id"), path)),
+      "restore" -> (path => GraftStore.restore(path, 1L)),
+      "publish" -> { path =>
+        val branch = s"${path}_branch"
+        GraftStore.cloneTable(path, branch)
+        writeDf(spark.range(100, 103, 1, 1).toDF("id"), branch)
+        GraftStore.publish(path, branch)
+      },
+      "fastForward" -> { path =>
+        GraftStore.branchCreate(path, "b")
+        writeDf(spark.range(100, 103, 1, 1).toDF("id"), path, Map("branch" -> "b"))
+        GraftStore.fastForward(path, "b")
+      })
+    resets.foreach { case (name, reset) =>
+      val path = tempTable()
+      val sw = new graft.sources.GraftStoreStreamingWrite(path, epochSchema,
+        truncateEachEpoch = false)
+      sw.commit(0, Array(epochFile(path, 1, 0, 0 until 10)))
+      sw.commit(1, Array(epochFile(path, 2, 1, 10 until 25)))
+      reset(path)
+      val after = readBack(path).as[Long].collect().sorted.toSeq
+      val v = GraftStore.readVersion(path)
+      assert(GraftStore.latest(path).flatMap(_.epoch).contains(1L),
+        s"$name dropped the sink's epoch marker")
+      sw.commit(1, Array(epochFile(path, 3, 1, 10 until 25)))
+      assert(GraftStore.readVersion(path) == v, s"a replayed epoch committed after $name")
+      assert(readBack(path).as[Long].collect().sorted.toSeq == after,
+        s"a replayed epoch re-appended its rows after $name")
+    }
+  }
+
   test("streaming sink: commits take the epoch from the snapshot they swap against, not a lagging pointer") {
     // the sink checks constraints in the active session
     org.apache.spark.sql.SparkSession.setActiveSession(spark)
